@@ -5,7 +5,7 @@ object Bench {
   @volatile private var canarySink: Long = 0L
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus()
     // machine-contention fingerprint: a degraded run (other tenants on the
     // box) shows a high load average, distinguishing it from a regression
     def loadavg(): String =
@@ -40,8 +40,7 @@ object Bench {
     // that loadavg_start records
     val loadStartMax = loadMax()
     val spark = GraftSession.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
+      .master(s"local[$cpus]"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen/IO warmup so the first timed query isn't charged for it:

@@ -10,10 +10,24 @@ import org.apache.spark.sql.SparkSession
   * UTC for oracle parity.
   */
 object GraftSession {
-  val DefaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** `name` from `env` as a positive int, `default` when unset; any other
+    * value fails with a message that names the variable.
+    */
+  private def positiveInt(env: Map[String, String], name: String,
+      default: => Int): Int = env.get(name).fold(default) { v =>
+    v.trim.toIntOption.filter(_ > 0).getOrElse(throw
+      new IllegalArgumentException(s"$name must be a positive integer, got '$v'"))
+  }
 
-  def configure(b: SparkSession.Builder): SparkSession.Builder = b
-    .config("spark.sql.shuffle.partitions", DefaultCpus)
+  /** The session's core budget: SPARK_GRAFT_CPUS, else the JVM's processors. */
+  def cpus(env: Map[String, String] = sys.env): Int =
+    positiveInt(env, "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors)
+
+  def configure(b: SparkSession.Builder,
+      env: Map[String, String] = sys.env): SparkSession.Builder = {
+    val n = cpus(env)
+    val limitInitial = positiveInt(env, "SPARK_GRAFT_LIMIT_INITIAL", n)
+    b.config("spark.sql.shuffle.partitions", n.toString)
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
     .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -40,7 +54,7 @@ object GraftSession {
     .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
       sys.env.getOrElse("SPARK_GRAFT_OHA_FALLBACK", (4 << 20).toString))
     // partition discovery goes DISTRIBUTED past 32 paths by default — for
-    // the streaming stores (hundreds of small batch_id=N/bucket=M dirs)
+    // the streaming stores (one batch_id=N dir per uncompacted batch)
     // that turns every per-batch probe read into an extra listing JOB
     // whose task overhead grows with uncompacted-tree count. Driver-side
     // listing of a few thousand dirs is microseconds on HDFS-like
@@ -70,13 +84,13 @@ object GraftSession {
     // first wave to the session's parallelism instead: wave-1 cost is
     // bounded at one task per core, and a gate-sized result arrives in
     // one wave. Tracks core count, not a local constant.
-    .config("spark.sql.limit.initialNumPartitions",
-      sys.env.getOrElse("SPARK_GRAFT_LIMIT_INITIAL", DefaultCpus))
+    .config("spark.sql.limit.initialNumPartitions", limitInitial.toString)
     .config("spark.ui.enabled", "false")
+  }
 
   def local(appName: String = "graft"): SparkSession = {
     val s = configure(
-      SparkSession.builder().appName(appName).master(s"local[$DefaultCpus]"))
+      SparkSession.builder().appName(appName).master(s"local[${cpus()}]"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

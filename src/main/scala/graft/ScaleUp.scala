@@ -54,10 +54,9 @@ object ScaleUp {
     // Embeddings mirror it (verbatim vs perturbed) for the exact-arm
     // twins.
     val dup = args.lift(3).contains("dup")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = GraftSession.cpus()
     val spark = GraftSession.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
+      .master(s"local[$cpus]"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

@@ -13,9 +13,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * curve is flat (fixed Spark overhead dominated); a slope means the probe
   * is scanning the store.
   *
-  * Also asserts the pruning itself: the store probe's physical plan must
-  * carry the bucket/band predicate as a PartitionFilter (directory-level
-  * pruning), not a post-scan Filter.
+  * Also asserts the pruning itself: the store probe's Parquet scan must
+  * carry the bucket predicate as a pushed filter (skipping files and row
+  * groups by footer statistics), not only a post-scan Filter.
   *
   * Run: `sbt "runMain graft.StreamingStoreBench [sfDir] [nBatches]
   * [compactAt]"` — writes per-batch rows to stderr, a summary JSON line to
@@ -73,18 +73,18 @@ object StreamingStoreBench {
   private def headTail(xs: Array[Double], k: Int): (Double, Double) =
     (xs.take(k).sum / k, xs.takeRight(k).sum / k)
 
-  /** The probe-shaped store read must prune at the directory level: its
-    * scan node carries the partition-column predicate as a PartitionFilter.
+  /** The probe-shaped store read must prune at the source: its Parquet
+    * scan pushes the bucket-column predicate down to the reader.
     */
   private def prunedPlan(spark: SparkSession, storeDir: String,
-      partCol: String): Boolean = {
+      bucketCol: String): Boolean = {
     val probe = spark.read.parquet(storeDir)
       .filter(col("batch_id") < Long.MaxValue)
-      .filter(col(partCol).isin(0L, 1L))
-    val plan = probe.queryExecution.executedPlan.toString
-    plan.contains("PartitionFilters") &&
-      "PartitionFilters: \\[[^\\]]*" .r.findFirstIn(plan)
-        .exists(s => s.contains(partCol))
+      .filter(col(bucketCol).isin(0L, 1L))
+    probe.queryExecution.executedPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.metadata.getOrElse("PushedFilters", "")
+    }.exists(_.contains(s"($bucketCol,"))
   }
 
   def main(args: Array[String]): Unit = {
@@ -135,9 +135,9 @@ object StreamingStoreBench {
         s"$base/mh_store", s"$base/mh_flags",
         numHashes = 64, bandCount = 16, threshold = 0.5)
     }
-    // the r10 store layout splits keys (bucket-partitioned postings) from
-    // docs (dbucket-partitioned shingle payloads); the probe prunes on the
-    // keys tree's hash-bucket column
+    // the store splits keys (postings clustered by bucket) from docs
+    // (shingle payloads clustered by dbucket); both probes push their
+    // bucket predicate
     val mhPruned = prunedPlan(spark, s"$base/mh_store/keys", "bucket") &&
       prunedPlan(spark, s"$base/mh_store/docs", "dbucket")
     docs.unpersist()

@@ -124,7 +124,7 @@ object Graph {
     val cores =
       if (sys.env.contains("SPARK_GRAFT_NO_LOCAL_PAR")) 1 // A/B kill-switch
       else math.min(
-        graft.GraftSession.DefaultCpus.toInt,
+        graft.GraftSession.cpus(),
         Runtime.getRuntime.availableProcessors()).max(1)
     val nChunks = math.min(cores * 4, n).max(1) // 4×: cheap load balance
     if (nChunks <= 1) { f(0, n); return }

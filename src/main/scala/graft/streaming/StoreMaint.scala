@@ -1,13 +1,23 @@
 package graft.streaming
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared maintenance for the append-only streaming stores
+/** Shared layout and maintenance for the append-only streaming stores
   * ([[StreamingDedup]], [[StreamingChunkDedup]],
-  * [[StreamingSemanticDedup]]): compaction of per-batch partition trees
-  * into one `batch_id=-1` tree, and the cheap trigger check the
-  * auto-compaction policy polls from inside `foreachBatch`.
+  * [[StreamingSemanticDedup]]): the one tree writer they all use,
+  * compaction of per-batch trees into one `batch_id=-1` tree, and the
+  * cheap trigger check the auto-compaction policy polls from inside
+  * `foreachBatch`.
+  *
+  * Layout: `batch_id=N` directories hold flat parquet files, written
+  * range-partitioned and sorted by the store's hash-bucket column, which
+  * is a DATA column (no `bucket=` directories). Each file covers a
+  * disjoint bucket range, so a probe's `isin` on that column is a Parquet
+  * pushed filter that skips files and row groups by their footer min/max
+  * statistics. A tree holds at most `spark.sql.shuffle.partitions` files,
+  * not one per bucket. Stores written with `bucket=` directories cannot be
+  * mixed with these trees and must be rebuilt.
   *
   * Compaction preserves replay determinism: every store row carries a
   * `src_batch` DATA column (the batch that first wrote it), merged rows
@@ -17,6 +27,11 @@ import org.apache.spark.sql.functions._
   * of how many compactions ran in between.
   */
 private[streaming] object StoreMaint {
+
+  def exists(spark: SparkSession, dir: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+  }
 
   /** Number of uncompacted per-batch trees (`batch_id=N`, N ≥ 0) under
     * `dir` — ONE directory listing, no file walk, cheap enough to run
@@ -32,26 +47,32 @@ private[streaming] object StoreMaint {
     }
   }
 
+  /** Write `df` as one store tree at `path` (whole-tree overwrite, so a
+    * replayed batch rewrites exactly its prior output), range-partitioned
+    * and sorted by `bucketCol`.
+    */
+  def writeTree(df: DataFrame, bucketCol: String, path: String): Unit =
+    df.repartitionByRange(col(bucketCol)).sortWithinPartitions(bucketCol)
+      .write.mode(SaveMode.Overwrite).parquet(path)
+
   /** Rewrite all of `dir`'s per-batch trees into one `batch_id=-1` tree
-    * partitioned by `partCol`, merging duplicate `keyCols` rows to their
+    * clustered by `bucketCol`, merging duplicate `keyCols` rows to their
     * minimum `src_batch`. Atomic: write to a side dir, swap via rename
     * (atomic on HDFS/local; for S3-like stores use the manifest pattern —
     * ManifestObjectStore — instead of dir renames), then drop the old
     * tree. Resolves through the Hadoop FileSystem the store actually
     * lives on, the same way the batch writers do.
     */
-  def compactTree(spark: SparkSession, dir: String, partCol: String,
+  def compactTree(spark: SparkSession, dir: String, bucketCol: String,
       keyCols: Seq[String]): Unit = {
     val storePath = new org.apache.hadoop.fs.Path(dir)
     val fs = storePath.getFileSystem(spark.sessionState.newHadoopConf())
     val tmp = new org.apache.hadoop.fs.Path(dir + "__compacting")
     val old = new org.apache.hadoop.fs.Path(dir + "__old")
-    spark.read.parquet(dir)
-      .groupBy((keyCols :+ partCol).map(col): _*)
-      .agg(min(col("src_batch")).as("src_batch"))
-      .repartition(col(partCol))
-      .write.partitionBy(partCol).mode(SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(tmp, "batch_id=-1").toString)
+    writeTree(spark.read.parquet(dir)
+      .groupBy((keyCols :+ bucketCol).map(col): _*)
+      .agg(min(col("src_batch")).as("src_batch")),
+      bucketCol, new org.apache.hadoop.fs.Path(tmp, "batch_id=-1").toString)
     if (!fs.rename(storePath, old))
       throw new java.io.IOException(s"compactTree: rename $dir -> $old failed")
     if (!fs.rename(tmp, storePath))

@@ -13,11 +13,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * Scale shape: per batch the work is O(batch) chunking + one equi-join
   * against the store keyed on the 60-bit chunk hash. The store is parquet
-  * partitioned by `hb = pmod(h, Buckets)`; the batch's chunk hashes touch
-  * at most `min(|batch chunks|, Buckets)` of those buckets, and the probe
-  * pushes that touched set as an `isin` PARTITION filter — per-batch probe
-  * cost is bounded by the matching directories, not the store's depth
-  * (same discipline as [[StreamingDedup]] /
+  * clustered by the data column `hb = pmod(h, Buckets)` (the
+  * [[StoreMaint]] layout); the batch's chunk hashes touch at most
+  * `min(|batch chunks|, Buckets)` of those buckets, and the probe pushes
+  * that touched set as an `isin` Parquet filter that skips files and row
+  * groups by their `hb` min/max (same discipline as [[StreamingDedup]] /
   * [[StreamingSemanticDedup]]). The batch side of the probe is broadcast
   * only while it is provably small (`maxBroadcastChunkRows`); an
   * unbounded micro-batch falls back to a shuffle join instead of risking
@@ -51,12 +51,6 @@ object StreamingChunkDedup {
       }
       .start()
 
-  private def exists(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
-
   /** One micro-batch step (factored out for direct testing). */
   def processBatch(batch: DataFrame, batchId: Long, storeDir: String,
       flagDir: String): Unit = {
@@ -73,10 +67,9 @@ object StreamingChunkDedup {
       val nChunks = bucketCounts.map(_.getLong(1)).sum
       if (nChunks == 0) return
       val storeHits =
-        if (exists(spark, storeDir)) {
-          // ≤ Buckets values — safe to collect, and as a literal isin it
-          // prunes the hb-partitioned store at the source (directory-level
-          // PartitionFilter), so the probe reads matching buckets only
+        if (StoreMaint.exists(spark, storeDir)) {
+          // ≤ Buckets values — safe to collect, and as a literal isin a
+          // Parquet pushed filter that skips hb ranges at the source
           val touched = bucketCounts.map(_.getLong(0))
           // only chunks ORIGINATING strictly earlier (src_batch survives
           // compaction): a replayed batch must not see its own (failed)
@@ -104,18 +97,16 @@ object StreamingChunkDedup {
           coalesce(col("n_dup"), lit(0L)).as("n_dup_chunks"))
       report.write.mode(SaveMode.Overwrite)
         .parquet(s"$flagDir/batch_id=$batchId")
-      ch.select(col("h")).distinct()
+      StoreMaint.writeTree(ch.select(col("h")).distinct()
         .select(col("h"), pmod(col("h"), lit(Buckets)).as("hb"))
-        .withColumn("src_batch", lit(batchId))
-        .repartition(col("hb"))
-        .write.partitionBy("hb").mode(SaveMode.Overwrite)
-        .parquet(s"$storeDir/batch_id=$batchId")
+        .withColumn("src_batch", lit(batchId)),
+        "hb", s"$storeDir/batch_id=$batchId")
     } finally ch.unpersist()
   }
 
   /** Compact the chunk store: merge cross-batch duplicate hashes (keeping
     * the earliest `src_batch` — see [[StoreMaint.compactTree]]) and
-    * rewrite the per-batch trees into one `batch_id=-1` tree partitioned
+    * rewrite the per-batch trees into one `batch_id=-1` tree clustered
     * by `hb`, so probes keep pruning at the source as batches accumulate.
     */
   def compactStore(spark: org.apache.spark.sql.SparkSession,

@@ -12,26 +12,29 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * accumulated signature store, verified near-dups are appended to a flag
   * sink, and the new signatures are appended to the store.
   *
-  * Store layout (100 TB shape): TWO subtrees, both hash-bucketed.
+  * Store layout (100 TB shape): TWO subtrees, each clustered by a hash
+  * bucket (the [[StoreMaint]] layout: flat files per `batch_id=` tree,
+  * range-partitioned and sorted by the bucket column, so every file
+  * covers a disjoint bucket range).
   *
-  *  - `storeDir/keys`  — (doc_id, band, bk, src_batch), partitioned by
-  *    `bucket = pmod(xxhash64(band, bk), B)`. A batch's posting keys touch
-  *    at most `min(|batch|·bands, B)` buckets, so the probe pushes the
-  *    batch's touched-bucket set as an `isin` PARTITION filter — a small
-  *    batch reads a bounded fraction of the key store no matter how deep
-  *    the store is (the StreamingSemanticDedup isin-prune discipline).
-  *  - `storeDir/docs`  — (doc_id, sh, src_batch), ONE row per document,
-  *    partitioned by `dbucket = pmod(xxhash64(doc_id), B)`. The hashed
+  *  - `storeDir/keys`  — (doc_id, band, bk, bucket, src_batch), with
+  *    `bucket = pmod(xxhash64(band, bk), B)`. The probe pushes the batch's
+  *    touched-bucket set as an `isin` Parquet filter, which skips files
+  *    and row groups whose bucket min/max misses it.
+  *  - `storeDir/docs`  — (doc_id, sh, dbucket, src_batch), ONE row per
+  *    document, `dbucket = pmod(xxhash64(doc_id), B)`. The hashed
   *    shingle array (the heavy payload — it scales with document length)
   *    is stored once per doc, NOT duplicated across the `bands` key rows,
   *    and is fetched only for documents that actually survive the
   *    candidate join — again through an `isin` on the candidates'
   *    ≤ B distinct dbuckets.
   *
-  * Per-batch work is therefore O(batch) hashing + a candidate join whose
-  * store side reads only matching key buckets + a verify fetch that reads
-  * only matching doc buckets. No store shuffle at any depth: the batch's
-  * KEY PROJECTION (doc_id, band, bk — a few dozen bytes per posting, no
+  * The bucket prune pays only for small batches: with 16 postings per doc
+  * a batch of n docs leaves on average 64·(63/64)^(16n) of the 64 key
+  * buckets untouched (0.4 at n = 20), so the keys probe of any larger
+  * batch reads every bucket; the docs fetch, keyed by the candidates'
+  * dup_ofs only, can still skip ranges. No store shuffle at any depth: the batch's KEY
+  * PROJECTION (doc_id, band, bk — a few dozen bytes per posting, no
   * shingle arrays) is broadcast when the batch is small enough
   * (`maxBroadcastKeyRows`), else Spark falls back to a shuffle join for
   * that oversized batch only — the store is never collected either way.
@@ -49,10 +52,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object StreamingDedup {
 
-  /** Bucket count for both store subtrees. Sized so a small micro-batch
-    * touches a strict subset of buckets (prune wins) while a directory
-    * listing stays trivial; at a real 100 TB deployment this is the knob
-    * that trades listing overhead against prune granularity.
+  /** Bucket count for both store subtrees: the granularity of the
+    * footer-statistics prune. Buckets are values of a data column, not
+    * directories, so the count costs no files or listing.
     */
   val StoreBuckets = 64
 
@@ -110,11 +112,6 @@ object StreamingDedup {
       }
       .start()
 
-  private def exists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
-
   /** One micro-batch step (factored out for direct testing). */
   def processBatch(batch: DataFrame, batchId: Long, storeDir: String,
       flagDir: String, numHashes: Int, bandCount: Int,
@@ -135,11 +132,10 @@ object StreamingDedup {
       if (nKeys == 0) return
       // candidate pairs: new-vs-store (store doc wins as dup_of) + new-vs-new
       val vsStore =
-        if (exists(spark, s"$storeDir/keys")) {
+        if (StoreMaint.exists(spark, s"$storeDir/keys")) {
           // the batch's touched buckets: ≤ min(|batch|·bands, B) values —
           // bounded by StoreBuckets, safe to collect, and as a literal isin
-          // it prunes the bucket-partitioned key store at the SOURCE (a
-          // directory-level PartitionFilter, not a post-scan filter)
+          // a Parquet pushed filter that skips bucket ranges at the source
           val touched = bucketCounts.map(_.getLong(0))
           // only rows ORIGINATING strictly earlier (src_batch survives
           // compaction): a replayed batch must not probe its own (failed)
@@ -164,7 +160,7 @@ object StreamingDedup {
           candsCache = Some(cands)
           // verify fetch: shingles ONLY for store docs that appear as
           // candidates — dbuckets of the candidate dup_ofs are again ≤ B
-          // distinct values, so the doc tree prunes at the source too
+          // distinct values, pushed to the doc tree's scan the same way
           val dbuckets = cands.select(dbucketOf(col("dup_of")).as("db"))
             .distinct().collect().map(_.getLong(0))
           val storeDocs = spark.read.parquet(s"$storeDir/docs")
@@ -200,20 +196,16 @@ object StreamingDedup {
       // dir is always readable)
       flagged.write.mode(SaveMode.Overwrite)
         .parquet(s"$flagDir/batch_id=$batchId")
-      // bucket-partitioned under the batch dir so the layout matches what
-      // compactStore rewrites (batch_id=-1) and bucket probes prune at the
-      // source; repartition(bucket) gives one file per bucket, not per task
-      keys.select(col("doc_id"), col("band"), col("bk"), col("bucket"))
-        .withColumn("src_batch", lit(batchId))
-        .repartition(col("bucket"))
-        .write.partitionBy("bucket").mode(SaveMode.Overwrite)
-        .parquet(s"$storeDir/keys/batch_id=$batchId")
-      hashed.select(col("doc_id"), col("sh"))
+      // docs BEFORE keys: a posting is never visible without its payload,
+      // so a crash between the two writes leaves a store that replays
+      StoreMaint.writeTree(hashed.select(col("doc_id"), col("sh"))
         .withColumn("dbucket", dbucketOf(col("doc_id")))
-        .withColumn("src_batch", lit(batchId))
-        .repartition(col("dbucket"))
-        .write.partitionBy("dbucket").mode(SaveMode.Overwrite)
-        .parquet(s"$storeDir/docs/batch_id=$batchId")
+        .withColumn("src_batch", lit(batchId)),
+        "dbucket", s"$storeDir/docs/batch_id=$batchId")
+      StoreMaint.writeTree(
+        keys.select(col("doc_id"), col("band"), col("bk"), col("bucket"))
+          .withColumn("src_batch", lit(batchId)),
+        "bucket", s"$storeDir/keys/batch_id=$batchId")
     } finally {
       candsCache.foreach(_.unpersist())
       keys.unpersist(); hashed.unpersist(): Unit
@@ -224,7 +216,7 @@ object StreamingDedup {
     * re-ingested across DIFFERENT batches — same-batch replay is already
     * idempotent via the per-batch overwrite) and rewrite the accumulated
     * per-batch small files into one `batch_id=-1` tree per subtree, still
-    * partitioned by its bucket column. Each merged row keeps
+    * clustered by its bucket column. Each merged row keeps
     * `min(src_batch)` — the first batch that made it visible — so the
     * strictly-earlier probe filter keeps excluding later/own rows for a
     * late replay even after compaction.

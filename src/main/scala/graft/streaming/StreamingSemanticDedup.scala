@@ -12,10 +12,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * vectors then join the store in their argmax bucket.
   *
   * Scale shape: per batch the work is O(batch·K) bucket assignment + one
-  * bucket-equi-join against ONLY the probed store partitions — the store
-  * is parquet `partitionBy(bucket)`, and since probed buckets are a subset
-  * of the ≤K centroid ids the probe pushes an `isin` partition filter, so
-  * a 100 TB vector store is never scanned past the matching directories.
+  * bucket-equi-join against ONLY the probed store buckets — the store is
+  * parquet clustered by its `bucket` data column (the [[StoreMaint]]
+  * layout), and since probed buckets are a subset of the ≤K centroid ids
+  * the probe pushes an `isin` Parquet filter, so a 100 TB vector store is
+  * read only in the files and row groups whose bucket range matches.
   * Cosine uses the norm-precomputed `vec_dot/(‖a‖·‖b‖)` decomposition with
   * store-side norms computed ONCE at ingest and persisted with the vector.
   *
@@ -51,11 +52,6 @@ object StreamingSemanticDedup {
       }
       .start()
 
-  private def exists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
-
   /** One micro-batch step (factored out for direct testing). */
   def processBatch(batch: DataFrame, batchId: Long,
       centroids: Seq[(Long, Array[Double])], storeDir: String,
@@ -75,11 +71,11 @@ object StreamingSemanticDedup {
         assigned.select(col("doc_id"), col("emb"), col("_n")),
         "doc_id", "emb", centroids, nprobe)
       // probed buckets ⊆ centroid ids (≤K values): safe to collect, and as
-      // a literal isin it prunes the bucket-partitioned store at the source
+      // a literal isin a Parquet pushed filter that skips bucket ranges
       val probedBuckets = probes.select(col("bucket")).distinct()
         .collect().map(_.getLong(0))
       val store =
-        if (exists(spark, storeDir))
+        if (StoreMaint.exists(spark, storeDir))
           // src_batch (not the batch_id dir) is the visibility key: it
           // survives compaction, so late replays stay deterministic
           Some(spark.read.parquet(storeDir)
@@ -115,17 +111,16 @@ object StreamingSemanticDedup {
           col("_best.cos").as("cos"))
       flagged.write.mode(SaveMode.Overwrite)
         .parquet(s"$flagDir/batch_id=$batchId")
-      assigned.select(col("doc_id"), col("bucket"), col("emb"), col("_n"))
-        .withColumn("src_batch", lit(batchId))
-        .repartition(col("bucket"))
-        .write.partitionBy("bucket").mode(SaveMode.Overwrite)
-        .parquet(s"$storeDir/batch_id=$batchId")
+      StoreMaint.writeTree(
+        assigned.select(col("doc_id"), col("bucket"), col("emb"), col("_n"))
+          .withColumn("src_batch", lit(batchId)),
+        "bucket", s"$storeDir/batch_id=$batchId")
     } finally assigned.unpersist()
   }
 
   /** Compact the vector store: merge cross-batch duplicate rows (keeping
     * the earliest `src_batch` — see [[StoreMaint.compactTree]]) and
-    * rewrite the per-batch trees into one `batch_id=-1` tree partitioned
+    * rewrite the per-batch trees into one `batch_id=-1` tree clustered
     * by `bucket` (atomic dir swap), so probes keep pruning at the source
     * as batches accumulate. Schedule between batches like
     * [[StreamingDedup.compactStore]] (or via `autoCompactBatches`).

@@ -102,16 +102,15 @@ class StreamingChunkDedupSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
       .toMap.apply(doc)
     assert(rep(3L)._2 == rep(3L)._1, s"doc 3 fully dup pre-compaction: ${rep(3L)}")
+    StoreLayout.assertFlatTree(spark, s"$store/batch_id=0")
     StreamingChunkDedup.compactStore(spark, store)
-    // single batch_id=-1 tree, hb partition dirs inside, probe prunes
+    // single batch_id=-1 tree, a flat range-clustered file set, and an hb
+    // probe pushes its predicate to the Parquet scan
     val dirs = Option(new java.io.File(store).listFiles).toSeq.flatten
       .filter(_.isDirectory).map(_.getName)
     assert(dirs == Seq("batch_id=-1"), dirs.toString)
-    val plan = spark.read.parquet(store).filter($"hb".isin(1L, 2L))
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") &&
-      "PartitionFilters: \\[[^\\]]*".r.findFirstIn(plan).exists(_.contains("hb")),
-      plan.take(600))
+    StoreLayout.assertFlatTree(spark, s"$store/batch_id=-1")
+    StoreLayout.assertPushedProbe(spark, store, "hb", Seq(1L, 2L))
     // late replays after compaction: batch 2's probe still sees doc 1's
     // chunks (src_batch=0) but batch 1's replay must NOT see textA chunks
     // re-labeled under batch_id=-1, nor its own prior write

@@ -109,17 +109,40 @@ class StreamingDedupSpec extends AnyFunSuite {
     assert(got == expected.filter(_._1 == 3L), s"got=$got expected=$expected")
     assert(got.contains((3L, 1L)))
 
-    // compacted layout: batch_id=-1/bucket=N partition dirs under the keys
-    // tree, and a bucket probe prunes at the source
-    val dirs = new java.io.File(store2 + "/keys/batch_id=-1").listFiles
-      .filter(_.isDirectory)
-    assert(dirs.exists(_.getName.startsWith("bucket=")))
-    val probePlan = spark.read.parquet(store2 + "/keys")
-      .filter($"bucket".isin(3L, 7L))
-      .queryExecution.executedPlan.toString
-    assert(probePlan.contains("PartitionFilters") &&
-      "PartitionFilters: \\[[^\\]]*".r.findFirstIn(probePlan)
-        .exists(_.contains("bucket")), probePlan)
+    // compacted and per-batch trees are flat, range-clustered file sets,
+    // and a bucket probe pushes its predicate to the Parquet scan
+    for (sub <- Seq("keys", "docs"); tree <- Seq("batch_id=-1", "batch_id=2"))
+      StoreLayout.assertFlatTree(spark, s"$store2/$sub/$tree")
+    for ((sub, b) <- Seq("keys" -> "bucket", "docs" -> "dbucket")) {
+      val held = spark.read.parquet(s"$store2/$sub").select(b).as[Long]
+        .distinct().collect().sorted
+      val probed = Seq(held.head, held.last, StreamingDedup.StoreBuckets.toLong)
+      assert(StoreLayout.assertPushedProbe(spark, s"$store2/$sub", b, probed) > 0)
+    }
+  }
+
+  test("a crash between the two store writes of the first batch replays") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_crash").toString
+    val (store, flags) = (base + "/store", base + "/flags")
+    def batch(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+    StreamingDedup.processBatch(batch((1L, a), (2L, b)), 0L, store, flags, 64, 16, 0.5)
+    // a process killed after the first of the two subtree writes leaves
+    // that subtree and no trace of the second: find the tree committed
+    // last by its _SUCCESS marker and remove it
+    def committed(sub: String) =
+      new java.io.File(s"$store/$sub/batch_id=0/_SUCCESS").lastModified
+    val last = Seq("keys", "docs").maxBy(committed)
+    assert(committed("keys") != committed("docs"))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$store/$last"))
+    // the at-least-once replay of batch 0 must succeed and rebuild the
+    // store, and the next batch must probe it as if nothing had happened
+    StreamingDedup.processBatch(batch((1L, a), (2L, b)), 0L, store, flags, 64, 16, 0.5)
+    StreamingDedup.processBatch(batch((3L, aDup)), 1L, store, flags, 64, 16, 0.5)
+    val got = spark.read.parquet(flags)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(got == Set((3L, 1L)), got.toString)
+    assert(spark.read.parquet(store + "/docs").count() == 3)
   }
 
   test("late replay after compaction still excludes later batches (src_batch)") {

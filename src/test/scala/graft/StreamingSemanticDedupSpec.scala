@@ -57,6 +57,7 @@ class StreamingSemanticDedupSpec extends AnyFunSuite {
       store, s"$base/flags", 0.98, 2)
     StreamingSemanticDedup.processBatch(batch((10L, c)), 1L, cents,
       store, s"$base/flags", 0.98, 2)
+    StoreLayout.assertFlatTree(spark, s"$store/batch_id=0")
     val storeOnce = spark.read.parquet(store).drop("emb").collect().toSet
     val flagsOnce = spark.read.parquet(s"$base/flags").collect().toSet
     // at-least-once replay of batch 0: byte-for-byte identical outcome
@@ -67,12 +68,10 @@ class StreamingSemanticDedupSpec extends AnyFunSuite {
     // compaction preserves content and keeps the bucket layout
     StreamingSemanticDedup.compactStore(spark, store)
     assert(spark.read.parquet(store).select("doc_id").distinct().count() == 3)
-    // a probe restricted to bucket 0 reads only that partition directory
-    val pruned = spark.read.parquet(store)
-      .filter(org.apache.spark.sql.functions.col("bucket") === 0L)
-    val scan = pruned.queryExecution.executedPlan.toString
-    assert(pruned.count() >= 1)
-    assert(scan.contains("PartitionFilters"), scan.take(600))
+    // per-batch and compacted trees are flat, range-clustered file sets,
+    // and a probe restricted to bucket 0 pushes its predicate to the scan
+    StoreLayout.assertFlatTree(spark, s"$store/batch_id=-1")
+    assert(StoreLayout.assertPushedProbe(spark, store, "bucket", Seq(0L)) >= 1)
     // and a dup of doc 1 arriving later is still caught post-compaction
     StreamingSemanticDedup.processBatch(batch((20L, aDup)), 2L, cents,
       store, s"$base/flags", 0.98, 2)
