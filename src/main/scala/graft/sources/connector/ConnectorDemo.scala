@@ -3,7 +3,6 @@ package graft.sources.connector
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 
 /** Cross-language harness: run the `graft-connector` listener on a FIXED
   * port until `nExpected` distinct messages arrive, then dump them as
@@ -19,10 +18,7 @@ object ConnectorDemo {
     val outPath = args(1)
     val nExpected = args(2).toInt
     val cookie = if (args.length > 3) args(3) else ""
-    val spark = graft.GraftSession.configure(SparkSession.builder()
-      .master("local[4]").config("spark.sql.shuffle.partitions", "4"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("connector-demo")
 
     val rows = new java.util.concurrent.ConcurrentHashMap[Long, String]()
     val ckpt = Files.createTempDirectory("connector_demo_ckpt").toString

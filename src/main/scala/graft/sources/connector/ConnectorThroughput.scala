@@ -4,7 +4,6 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.SparkSession
 
 /** Raw ingest ceiling of the live connector path: an UNPACED sender
   * streams `n` messages through the socket protocol into the
@@ -18,10 +17,7 @@ import org.apache.spark.sql.SparkSession
 object ConnectorThroughput {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(500000)
-    val spark = graft.GraftSession.configure(SparkSession.builder()
-      .master("local[8]").config("spark.sql.shuffle.partitions", "8"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("connector-throughput")
     val received = new AtomicLong(0)
     val ckpt = Files.createTempDirectory("connector_tp_ckpt").toString
     val q = spark.readStream.format("graft-connector")

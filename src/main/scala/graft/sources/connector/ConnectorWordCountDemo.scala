@@ -3,7 +3,6 @@ package graft.sources.connector
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Cross-language PIPELINE harness: the Scala engine runs a streaming
@@ -27,10 +26,7 @@ object ConnectorWordCountDemo {
     val Array(port, sinkHost, sinkPort) = args.take(3)
     val nExpected = args(3).toInt
     val cookie = if (args.length > 4) args(4) else ""
-    val spark = graft.GraftSession.configure(SparkSession.builder()
-      .master("local[4]").config("spark.sql.shuffle.partitions", "4"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("connector-wordcount-demo")
 
     @volatile var snapshot = Array.empty[(String, Long)]
     val ckpt = Files.createTempDirectory("connector_wc_ckpt").toString

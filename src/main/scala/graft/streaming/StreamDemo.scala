@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.GraftSession
 
@@ -13,10 +12,7 @@ import graft.GraftSession
 object StreamDemo {
   def main(args: Array[String]): Unit = {
     val runSeconds = args.headOption.map(_.toInt).getOrElse(6)
-    val spark = GraftSession.configure(SparkSession.builder()
-      .master("local[4]").config("spark.sql.shuffle.partitions", "4"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("stream-demo")
     import spark.implicits._
 
     val metrics = MetricsCollector.attach(spark)
