@@ -360,8 +360,8 @@ object Bench {
     // complete per-query map to BENCH_FULL.json in the repo root.
     val retimedJson =
       retimedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // every SPARK_GRAFT_* knob in force lands in the artifact — an A/B
-    // probe (e.g. SPARK_GRAFT_COLLAPSE=force) must be self-describing, not
+    // every SPARK_GRAFT_* knob in force lands in the artifact — a tuned
+    // run (e.g. SPARK_GRAFT_PAIR_STORAGE=ser) must be self-describing, not
     // reconstructed from shell history (the r12 sf4 run7 failure was
     // unadjudicable precisely because the env wasn't recorded)
     // full JSON string escaping — backslash, quote, AND control chars

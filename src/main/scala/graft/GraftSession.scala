@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.storage.StorageLevel
 
 /** Session factory with the engine's standard tuning.
   *
@@ -24,25 +25,63 @@ import org.apache.spark.sql.SparkSession
   * created in the JVM before the session (under a conf without these
   * settings), `FileSystem.get` keeps returning that one; `FileContext` is
   * not cached and always follows the session's conf.
+  *
+  * Every `SPARK_GRAFT_*` engine setting is parsed and checked here, when
+  * the session is built: a bad value fails at once with a message that
+  * names the variable, not at first use under a Spark key. `configure`
+  * reads the per-session settings from its `env` map (the process
+  * environment by default); `SPARK_GRAFT_PAIR_STORAGE` and
+  * `SPARK_GRAFT_VERIFY_BCAST_CAP` are process-wide and always come from
+  * the process environment.
   */
 object GraftSession {
-  /** `name` from `env` as a positive int, `default` when unset; any other
-    * value fails with a message that names the variable.
+  /** `name` from `env` as an integer in [1, max], `default` when unset;
+    * any other value fails with a message that names the variable.
     */
+  private def positiveLong(env: Map[String, String], name: String,
+      default: => Long, max: Long = Long.MaxValue): Long =
+    env.get(name).fold(default) { v =>
+      v.trim.toLongOption.filter(x => x > 0 && x <= max).getOrElse(throw
+        new IllegalArgumentException(s"$name must be a positive integer, got '$v'"))
+    }
+
   private def positiveInt(env: Map[String, String], name: String,
-      default: => Int): Int = env.get(name).fold(default) { v =>
-    v.trim.toIntOption.filter(_ > 0).getOrElse(throw
-      new IllegalArgumentException(s"$name must be a positive integer, got '$v'"))
-  }
+      default: => Int): Int =
+    positiveLong(env, name, default, Int.MaxValue).toInt
 
   /** The session's core budget: SPARK_GRAFT_CPUS, else the JVM's processors. */
   def cpus(env: Map[String, String] = sys.env): Int =
     positiveInt(env, "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors)
 
+  /** SPARK_GRAFT_PAIR_STORAGE: `ser` or `deser` pins the storage level
+    * of the pair family's corpus-sized persists; unset leaves the choice
+    * to [[graft.operators.Dedup.pairStorage]]'s heap-size rule.
+    */
+  def pairStorage(env: Map[String, String] = sys.env): Option[StorageLevel] =
+    env.get("SPARK_GRAFT_PAIR_STORAGE").map(_.trim match {
+      case "ser" => StorageLevel.MEMORY_AND_DISK_SER
+      case "deser" => StorageLevel.MEMORY_AND_DISK
+      case v => throw new IllegalArgumentException(
+        s"SPARK_GRAFT_PAIR_STORAGE must be 'ser' or 'deser', got '$v'")
+    })
+
+  /** SPARK_GRAFT_VERIFY_BCAST_CAP: the byte size up to which a pair
+    * verify side is broadcast (384 MB by default).
+    */
+  def verifyBcastCap(env: Map[String, String] = sys.env): Long =
+    positiveLong(env, "SPARK_GRAFT_VERIFY_BCAST_CAP", 384L << 20)
+
   def configure(b: SparkSession.Builder,
       env: Map[String, String] = sys.env): SparkSession.Builder = {
     val n = cpus(env)
     val limitInitial = positiveInt(env, "SPARK_GRAFT_LIMIT_INITIAL", n)
+    val ohaFallback = positiveInt(env, "SPARK_GRAFT_OHA_FALLBACK", 4 << 20)
+    val listThreshold = positiveInt(env, "SPARK_GRAFT_LIST_THRESHOLD", 4096)
+    val codegenCache = positiveInt(env, "SPARK_GRAFT_CODEGEN_CACHE", 4096)
+    // process-wide: Dedup reads these two once per JVM from the process
+    // environment, not from `env`, so that is where they are checked
+    pairStorage(sys.env)
+    verifyBcastCap(sys.env)
     b.config("spark.sql.shuffle.partitions", n.toString)
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -68,7 +107,7 @@ object GraftSession {
     // (sort-based spills; the hash map holds every in-flight buffer).
     // A/B at sf1 showed no regression for this repo's collect sites.
     .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_OHA_FALLBACK", (4 << 20).toString))
+      ohaFallback.toString)
     // partition discovery goes DISTRIBUTED past 32 paths by default — for
     // the streaming stores (one batch_id=N dir per uncompacted batch)
     // that turns every per-batch probe read into an extra listing JOB
@@ -77,7 +116,7 @@ object GraftSession {
     // metadata; raise the threshold so listing jobs only appear at
     // genuinely massive path counts.
     .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-      sys.env.getOrElse("SPARK_GRAFT_LIST_THRESHOLD", "4096"))
+      listThreshold.toString)
     // Generated-code cache (r16, guide §1.2 step 3 — config only after
     // the algorithms): janino compilation is pure DRIVER-side latency
     // (~10-60 ms per fragment) and the default 100-entry LRU thrashes in
@@ -90,7 +129,7 @@ object GraftSession {
     // about task execution changes, so this is not a local[32]-only
     // tweak. Static conf: must be set before the first session.
     .config("spark.sql.codegen.cache.maxEntries",
-      sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
+      codegenCache.toString)
     // executeTake first-wave size (r16): every size-gate probe in the
     // engine is a `limit(gate+1).collect()` whose expected outcome is
     // either "the whole (small) result" or a fast overshoot — the

@@ -46,8 +46,8 @@ object DataOpsQueries {
     * stage execution overlaps, and overlapped arms never register
     * identically-shaped caches (the containment evals share ONE
     * deliberately shared `all` frame released after both arms).
-    * Re-verified with graft.R15Race3 (the kept reproducer) and a full
-    * in-session Verify; SPARK_GRAFT_NO_ARM_OVERLAP=1 is the kill-switch.
+    * Re-verified with the r15 reproducer and a full in-session Verify
+    * (OPTIMIZATION_r15.md); `ArmOverlapSpec` pins it.
     */
 
   def qDedupExact(s: SparkSession, dir: String): DataFrame = {
@@ -132,7 +132,7 @@ object DataOpsQueries {
     // other arm's persist/unpersist); this form serializes every compile
     // and registry mutation under Dedup.planLock and overlaps only
     // stage execution — see Dedup.containmentEvalArms / Dedup.planLock.
-    // Verified by graft.R15Race3 + full-catalog in-session Verify.
+    // Pinned by ArmOverlapSpec (the r15 race in OPTIMIZATION_r15.md).
     val (exact0, banded0) = Dedup.containmentEvalArms(docs, "doc_id", "sh",
       num = 4, den = 5, preHashed = true, bandedQueryCap = Some(8))
     val exact = exact0.select($"doc_sub", $"doc_sup")
@@ -226,7 +226,7 @@ object DataOpsQueries {
     // arms OVERLAPPED (r16) — see the safety note in
     // [[qContainmentEvalSampled]]; the SimHash chain checkpoints, never
     // persists, so the arms share no cached frame
-    val (sh, exact) = Dedup.overlapArms(
+    val (sh, exact) = Par.both(
       {
         val sigs = Dedup.lockedCheckpoint(Sources.documents(s, dir)
           .select($"doc_id", graft.plans.SimHashBits.simhashBits(
@@ -271,7 +271,7 @@ object DataOpsQueries {
           shiftright(sim, c * 10).bitwiseAND(lit(1023L)).as("cv"))): _*)
     // arms OVERLAPPED (r16) — see the safety note in
     // [[qContainmentEvalSampled]]
-    val (sh, exact) = Dedup.overlapArms(
+    val (sh, exact) = Par.both(
       {
         val sigs = Dedup.lockedCheckpoint(Sources.documents(s, dir)
           .select($"doc_id", graft.plans.SimHashBits.simhashBits(
@@ -435,7 +435,7 @@ object DataOpsQueries {
     // edges never cross buckets (pairs join within bucket), so CC is
     // one grouped union-find pass — the global pointer-jumping loop
     // cost 12.1 s of the 17.0 s sf4-replica wall on 7.5M replica-clique
-    // edges (SemDedupDecomp), and its per-round shuffles grow with the
+    // edges (SURVEY.md §5n-1), and its per-round shuffles grow with the
     // corpus while the bucketed pass stays one edge shuffle
     val dropped = Dedup.dupClustersBucketed(pairs, "bucket")
       .filter($"id" =!= $"label").select($"id".as("vec_id"))
@@ -545,7 +545,7 @@ object DataOpsQueries {
     // Dedup.planLock, execution concurrent; the arms share no cached
     // frame (raw vs sorted shingle projections differ). See the safety
     // note in [[qContainmentEvalSampled]].
-    val (lsh0, exact0) = Dedup.overlapArms(
+    val (lsh0, exact0) = Par.both(
       Dedup.minhashLshPairs(docs, "doc_id", "sh",
         numHashes = 64, bands = 16, threshold = 0.5, preHashed = true),
       Dedup.jaccardPairs(docs, "doc_id", "sh", Seq.empty, 0.5,
@@ -576,7 +576,7 @@ object DataOpsQueries {
     val sampled = docs.filter(idSample($"doc_id"))
     // arms OVERLAPPED (r16) — see the safety note in
     // [[qContainmentEvalSampled]]
-    val (lsh0, exact0) = Dedup.overlapArms(
+    val (lsh0, exact0) = Par.both(
       Dedup.minhashLshPairs(docs, "doc_id", "sh",
         numHashes = 64, bands = 16, threshold = 0.5, preHashed = true),
       Dedup.jaccardPairs(sampled, "doc_id", "sh", Seq.empty, 0.5,
@@ -774,7 +774,7 @@ object DataOpsQueries {
       // arms OVERLAPPED (r16): the signature pass and the exact AllPairs
       // chain are independent — see the safety note in
       // [[qContainmentEvalSampled]]
-      val (signed, exactPairs) = Dedup.overlapArms(
+      val (signed, exactPairs) = Par.both(
         Dedup.lockedCheckpoint(
           Dedup.minhashSigs(hashed, "doc_id", numHashes = 64)),
         Dedup.jaccardPairs(docs, "doc_id", "sh", Seq.empty, 0.5,

@@ -24,7 +24,8 @@ object Dedup {
     * MEMORY_AND_DISK_SER: array-heavy rows compress 2-4× serialized, so
     * on a tight heap (the 24 g driver-memory sensitivity, SURVEY §7f-2)
     * the cache stops evicting/GC-thrashing at the price of per-access
-    * deserialization. MemAudit measures the trade at both heap sizes.
+    * deserialization. `MEMAUDIT_r11_*.json` records the trade at both
+    * heap sizes.
     *
     * AUTO-SELECT (round-11 verdict item 3): when the env var is unset
     * and the JVM max heap is under 32 GiB, default to the serialized
@@ -34,18 +35,15 @@ object Dedup {
     * the deserialized level on any heap.
     */
   private[graft] lazy val pairStorage: org.apache.spark.storage.StorageLevel =
-    sys.env.get("SPARK_GRAFT_PAIR_STORAGE") match {
-      case Some("ser") => org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-      case Some("deser") => org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      case _ =>
-        // 30 GiB, not 32: Runtime.maxMemory reports slightly under the
-        // nominal -Xmx (GC region accounting), and a -Xmx32g run should
-        // classify as the 32 g tier, not flip to ser on the rounding
-        if (Runtime.getRuntime.maxMemory < 30L * 1024 * 1024 * 1024) {
-          System.err.println("[graft] pairStorage: heap < ~32g -> " +
-            "MEMORY_AND_DISK_SER (SPARK_GRAFT_PAIR_STORAGE=deser to override)")
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-        } else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    graft.GraftSession.pairStorage().getOrElse {
+      // 30 GiB, not 32: Runtime.maxMemory reports slightly under the
+      // nominal -Xmx (GC region accounting), and a -Xmx32g run should
+      // classify as the 32 g tier, not flip to ser on the rounding
+      if (Runtime.getRuntime.maxMemory < 30L * 1024 * 1024 * 1024) {
+        System.err.println("[graft] pairStorage: heap < ~32g -> " +
+          "MEMORY_AND_DISK_SER (SPARK_GRAFT_PAIR_STORAGE=deser to override)")
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
+      } else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     }
 
   /** Word n-gram shingles (distinct) of a text column.
@@ -173,23 +171,16 @@ object Dedup {
       // r15: the same aggregate also returns Σ|_sh| — the verify-side
       // byte estimate, so the skip path no longer pays arraySideBytes
       // a separate job for it
-      var sideBytes: Option[Long] = None
-      val skipCollapse = sys.env.get("SPARK_GRAFT_COLLAPSE") match {
-        case Some("force") => false
-        case Some("off") => true
-        case _ =>
-          val probe = lockedHead(all.agg(count(lit(1)).as("n"),
-            countDistinct(struct((bandCols ++ ckNames).map(col) :+
-              xxhash64(col("_sh")): _*)).as("d"),
-            coalesce(sum(size(col("_sh"))), lit(0L)).as("p")))
-          val nDocs = probe.getLong(0)
-          val nSets = probe.getLong(1)
-          sideBytes = Some(nDocs * 24L + probe.getLong(2) * 8L)
-          val skip = nSets * 20L >= nDocs * 19L // dup rate < 5%
-          System.err.println(s"[graft] jaccard dup-rate gate: docs=$nDocs " +
-            s"distinct=$nSets -> ${if (skip) "skip collapse" else "collapse"}")
-          skip
-      }
+      val probe = lockedHead(all.agg(count(lit(1)).as("n"),
+        countDistinct(struct((bandCols ++ ckNames).map(col) :+
+          xxhash64(col("_sh")): _*)).as("d"),
+        coalesce(sum(size(col("_sh"))), lit(0L)).as("p")))
+      val nDocs = probe.getLong(0)
+      val nSets = probe.getLong(1)
+      val sideBytes = Some(nDocs * 24L + probe.getLong(2) * 8L)
+      val skipCollapse = nSets * 20L >= nDocs * 19L // dup rate < 5%
+      System.err.println(s"[graft] jaccard dup-rate gate: docs=$nDocs " +
+        s"distinct=$nSets -> ${if (skipCollapse) "skip collapse" else "collapse"}")
       if (skipCollapse) {
         val base = all
           .select((bandCols :+ idCol).map(col) :+ col("_sh"): _*)
@@ -221,7 +212,7 @@ object Dedup {
       // exist — every later read is off base or mapping (see
       // collapsedContainmentPairs for the measured pressure rationale);
       // r15: the two independent materialization jobs run concurrently
-      inParallel(lockedCount(base), lockedCount(mapping))
+      Par.both(lockedCount(base), lockedCount(mapping))
       lockedUnpersist(all)
       try {
         val repPairs = jaccardPairsOn(base, idCol, bandCols, threshold,
@@ -288,12 +279,6 @@ object Dedup {
     * Callers take their prefix with `filter(_pos <= plen)`; `_pos` also
     * feeds the PPJoin positional filter (see [[prefixCandidates]]).
     */
-  /** [[dfOrderedPosts]] for the stage-decomposition probe
-    * (graft.ContainmentDecomp) — same frame containmentPairs persists.
-    */
-  private[graft] def rankedPostsForProbe(base: DataFrame,
-      idCol: String): DataFrame = dfOrderedPosts(base, idCol, Seq.empty)
-
   private def dfOrderedPosts(base: DataFrame, idCol: String,
       bandCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -308,13 +293,8 @@ object Dedup {
     // producing the identical per-hash count (the aggregate-then-annotate
     // fusion of VERDICT r15 item 3). The global (df, h) order — and with
     // it every `_pos` rank and prefix length — is unchanged.
-    val withDf =
-      if (sys.env.contains("SPARK_GRAFT_DF_JOIN")) { // A/B: r15 join form
-        val dfTab = posts.groupBy(col("_h")).agg(count(lit(1)).as("_df"))
-        posts.join(dfTab, "_h")
-      } else posts
-        .withColumn("_df", count(lit(1)).over(Window.partitionBy(col("_h"))))
-    withDf
+    posts
+      .withColumn("_df", count(lit(1)).over(Window.partitionBy(col("_h"))))
       .withColumn("_pos", row_number().over(
         Window.partitionBy(col(idCol)).orderBy(col("_df"), col("_h"))))
       // df<2 postings can never match across documents (any shared hash
@@ -331,8 +311,9 @@ object Dedup {
   }
 
   /** Candidate pairs for the symmetric-Jaccard posting join — exposed
-    * package-private so the scale probes can A/B the `positional` filter's
-    * candidate mass; [[jaccardPairsOn]] always runs with it on.
+    * package-private so `PrefixFilterPropertySpec` can compare candidate
+    * sets with and without the `positional` filter; [[jaccardPairsOn]]
+    * always runs with it on.
     *
     * PPJoin positional filter (Xiao et al.): a match of hash h at 1-based
     * ranks (i, j) of the two docs' shared global order bounds the overlap
@@ -397,9 +378,7 @@ object Dedup {
     * SORTED, and the one wide exchange is linear in candidates — banding
     * is what must bound candidates at that scale, not the join.
     */
-  private def verifyBcastCap: Long =
-    sys.env.get("SPARK_GRAFT_VERIFY_BCAST_CAP").map(_.toLong)
-      .getOrElse(384L << 20)
+  private lazy val verifyBcastCap: Long = graft.GraftSession.verifyBcastCap()
 
   /** Heap guard on top of the cap: BOTH verify sides broadcast
     * simultaneously and the in-memory HashedRelation runs ~1.5-3x the
@@ -476,50 +455,47 @@ object Dedup {
     // avg shingle document-frequency over the DISTINCT-SET corpus
     // (exact-dup copies must not inflate df — they collapse before any
     // posting work in both arms). Floored to the exact arm below
-    // `floorDocs` distinct sets, so both oracle scales (2 k / 20 k docs)
-    // keep the lossless arm and all committed hashes. The density pass
-    // (explode + HLL) is only paid ABOVE the floor, where the query
-    // itself is tens of seconds. SPARK_GRAFT_CONTAINMENT_ARM=exact|lsh
-    // pins the route for A/B probes and ground-truth runs.
-    val floorDocs = sys.env
-      .getOrElse("SPARK_GRAFT_CONTAINMENT_FLOOR", "100000").toLong
-    val dfGate = sys.env
-      .getOrElse("SPARK_GRAFT_CONTAINMENT_DF_GATE", "64").toDouble
-    var probed: Option[org.apache.spark.sql.Row] = None
-    val useLsh = sys.env.get("SPARK_GRAFT_CONTAINMENT_ARM") match {
-      case Some("exact") => false
-      case Some("lsh") => true
-      case _ =>
-        val probe = containmentProbe(all)
-        probed = Some(probe)
-        val n = probe.getLong(0); val d = probe.getLong(1)
-        val p = probe.getLong(2)
-        if (d < floorDocs) {
-          System.err.println(s"[graft] containment arm gate: docs=$n " +
-            s"distinct=$d < floor $floorDocs -> exact")
-          false
-        } else {
-          // distinct-set postings ≈ p·d/n (exact when n = d; dup copies
-          // carry the same set sizes on average), one HLL pass for the
-          // distinct-shingle count
-          val distinctSh = lockedHead(all
-            .select(explode(col("_sh")).as("_h"))
-            .agg(approx_count_distinct(col("_h")))).getLong(0)
-          val avgDf =
-            if (distinctSh == 0L) 0.0
-            else (p.toDouble * d / math.max(1L, n)) / distinctSh
-          val lsh = avgDf > dfGate
-          System.err.println(f"[graft] containment arm gate: docs=$n " +
-            f"distinct=$d postings=$p shingles=$distinctSh " +
-            f"avgDf=$avgDf%.1f gate=$dfGate%.1f -> " +
-            (if (lsh) "lsh" else "exact"))
-          lsh
-        }
-    }
+    // [[ContainmentFloor]] distinct sets, so both oracle scales (2 k /
+    // 20 k docs) keep the lossless arm and all committed hashes. The
+    // density pass (explode + HLL) is only paid ABOVE the floor, where
+    // the query itself is tens of seconds. Ground-truth runs call
+    // [[containmentPairsExact]] / [[containmentPairsLsh]] directly.
+    val probe = containmentProbe(all)
+    val n = probe.getLong(0); val d = probe.getLong(1)
+    val p = probe.getLong(2)
+    val useLsh =
+      if (d < ContainmentFloor) {
+        System.err.println(s"[graft] containment arm gate: docs=$n " +
+          s"distinct=$d < floor $ContainmentFloor -> exact")
+        false
+      } else {
+        // distinct-set postings ≈ p·d/n (exact when n = d; dup copies
+        // carry the same set sizes on average), one HLL pass for the
+        // distinct-shingle count
+        val distinctSh = lockedHead(all
+          .select(explode(col("_sh")).as("_h"))
+          .agg(approx_count_distinct(col("_h")))).getLong(0)
+        val avgDf =
+          if (distinctSh == 0L) 0.0
+          else (p.toDouble * d / math.max(1L, n)) / distinctSh
+        val lsh = avgDf > ContainmentDfGate
+        System.err.println(f"[graft] containment arm gate: docs=$n " +
+          f"distinct=$d postings=$p shingles=$distinctSh " +
+          f"avgDf=$avgDf%.1f gate=$ContainmentDfGate%.1f -> " +
+          (if (lsh) "lsh" else "exact"))
+        lsh
+      }
     if (useLsh) collapsedContainmentPairs(all, idCol, num, den,
       lshBands = Some((0, 0)))
-    else exactContainmentPairs(all, idCol, num, den, probed)
+    else exactContainmentPairs(all, idCol, num, den, Some(probe))
   }
+
+  /** [[containmentPairs]]' arm gate: below this many distinct sets the
+    * exact arm always runs; above it, the LSH arm runs when the average
+    * shingle document frequency exceeds [[ContainmentDfGate]].
+    */
+  private val ContainmentFloor = 100000L
+  private val ContainmentDfGate = 64.0
 
   /** The lossless exact arm of [[containmentPairs]], bypassing the arm
     * gate — ground truth for the recall evals and probes (which run it
@@ -558,7 +534,7 @@ object Dedup {
 
   /** GLOBAL PLAN LOCK (r16, VERDICT r15 item 1). The r15 arm-overlap race
     * (exact containment verify intermittently emitting ~10× duplicated
-    * rows, reproducer graft.R15Race3) is attributed to catalyst COMPILES
+    * rows at sf0.01, pinned by `ArmOverlapSpec`) is attributed to catalyst COMPILES
     * — specifically the `withCachedData` cached-plan substitution —
     * racing the other arm's cache-registry mutations
     * (persist/unpersist). The fix is structural, not a sleep: every
@@ -615,58 +591,6 @@ object Dedup {
   private[graft] def lockedUnpersist(df: DataFrame): Unit =
     planLock.synchronized { df.unpersist(): Unit }
 
-  /** Run two independent ARM pipelines concurrently (guide §2.6; VERDICT
-    * r15 item 1 — the safe re-introduction of the r15 reverted overlap).
-    * Arms must route every compile / persist / unpersist / checkpoint
-    * through the locked helpers above. `SPARK_GRAFT_NO_ARM_OVERLAP=1`
-    * forces sequential construction (A/B + incident kill-switch).
-    * On failure of `fa` the helper still awaits `fb` before propagating,
-    * so no arm ever outlives the call into the caller's cleanup.
-    */
-  private[graft] def overlapArms[A, B](fa: => A, fb: => B): (A, B) = {
-    if (sys.env.contains("SPARK_GRAFT_NO_ARM_OVERLAP")) { val a = fa; (a, fb) }
-    else {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val f = Future(fb)
-      val a =
-        try fa
-        catch { case t: Throwable =>
-          try Await.ready(f, Duration.Inf) catch { case _: Throwable => () }
-          throw t
-        }
-      (a, Await.result(f, Duration.Inf))
-    }
-  }
-
-  /** Run two independent eager pipeline pieces concurrently (guide
-    * §2.6) — `b` on a pool thread, `a` on the caller's. Used where two
-    * materialization jobs have no mutual dependency, so the second's
-    * job chain is not serialized behind the first's stage tails.
-    */
-  private def inParallel[A, B](fa: => A, fb: => B): (A, B) = {
-    if (sys.env.contains("SPARK_GRAFT_NO_OVERLAP")) { val a = fa; (a, fb) }
-    else {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val f = Future(fb)
-      // r16 (r15 ADVICE): if fa throws, STILL await fb before propagating
-      // — otherwise fb's job outlives the call into the caller's finally
-      // unpersist block, recreating exactly the concurrent
-      // action-vs-registry-mutation window this helper is documented to
-      // avoid. fb's own failure is secondary to fa's.
-      val a =
-        try fa
-        catch { case t: Throwable =>
-          try Await.ready(f, Duration.Inf) catch { case _: Throwable => () }
-          throw t
-        }
-      (a, Await.result(f, Duration.Inf))
-    }
-  }
-
   /** Both arms of a sampled containment recall eval over ONE shared
     * (id, _sh, _n) cache and ONE gate aggregate, constructed
     * CONCURRENTLY (r16, VERDICT r15 item 1 — the safe re-introduction of
@@ -691,7 +615,7 @@ object Dedup {
       // the verify byte estimate; its scan materializes the shared cache
       // BEFORE the arms fork, so neither arm races the other populating it
       val probe = containmentProbe(all)
-      overlapArms(
+      Par.both(
         exactContainmentPairs(all, idCol, num, den, Some(probe),
           ownsAll = false),
         bandedQueryCap match {
@@ -716,8 +640,8 @@ object Dedup {
       num: Int, den: Int,
       probed: Option[org.apache.spark.sql.Row],
       ownsAll: Boolean = true): DataFrame = {
-    // EXACT-DUPLICATE COLLAPSE (round-12: ContainmentDecomp measured the
-    // sf4-replica wall 85% in the verify join over 181M candidates, and
+    // EXACT-DUPLICATE COLLAPSE (round-12: the stage decomposition in
+    // SURVEY.md §5n-2 put the sf4-replica wall 85% in the verify join over 181M candidates, and
     // replica cliques are the candidate mass): containment is a function
     // of the two shingle SETS alone, so identical sets are interchangeable
     // — group them (exact array equality, no hash-collision exposure),
@@ -735,24 +659,14 @@ object Dedup {
     // the set, so nothing array-keyed shuffles in the probe; a collision
     // only under-counts and flips the gate toward collapsing, never
     // toward wrong results) and run the single-corpus pipeline when the
-    // corpus is effectively all-distinct.
-    // SPARK_GRAFT_COLLAPSE=force|off overrides the gate (A/B probes);
-    // default: measure and decide, reusing the arm gate's aggregate when
-    // it already ran (containmentProbe — the scan doubles as the persist
-    // materialization)
-    var probeRow: Option[org.apache.spark.sql.Row] = probed
-    val skipCollapse = sys.env.get("SPARK_GRAFT_COLLAPSE") match {
-      case Some("force") => false
-      case Some("off") => true
-      case _ =>
-        val probe = probed.getOrElse(containmentProbe(all))
-        probeRow = Some(probe)
-        val skip = probe.getLong(1) * 20L >= probe.getLong(0) * 19L // <5% dup
-        System.err.println(s"[graft] containment dup-rate gate: " +
-          s"docs=${probe.getLong(0)} distinct=${probe.getLong(1)} -> " +
-          s"${if (skip) "skip collapse" else "collapse"}")
-        skip
-    }
+    // corpus is effectively all-distinct. The gate reuses the arm gate's
+    // aggregate when it already ran (containmentProbe — the scan doubles
+    // as the persist materialization).
+    val probe = probed.getOrElse(containmentProbe(all))
+    val skipCollapse = probe.getLong(1) * 20L >= probe.getLong(0) * 19L // <5% dup
+    System.err.println(s"[graft] containment dup-rate gate: " +
+      s"docs=${probe.getLong(0)} distinct=${probe.getLong(1)} -> " +
+      s"${if (skipCollapse) "skip collapse" else "collapse"}")
     if (skipCollapse) {
       // single-cache discipline (r15 form): `all` now carries `_n` from
       // construction, so it IS the base frame — one persisted
@@ -774,9 +688,7 @@ object Dedup {
         // SHUFFLE_HASH past the cap (never sort the candidate stream).
         // base == all here, so the gate probe's (n, _, p) already IS the
         // byte estimate — reuse it instead of a second aggregate job
-        val sideBytes = probeRow
-          .map(r => r.getLong(0) * 24L + r.getLong(2) * 8L)
-          .getOrElse(arraySideBytes(base))
+        val sideBytes = probe.getLong(0) * 24L + probe.getLong(2) * 8L
         lockedCheckpoint(candidates.join(verifySide(aSide, sideBytes), "_a")
           .join(verifySide(bSide, sideBytes), "_b")
           .withColumn("_c",
@@ -939,7 +851,7 @@ object Dedup {
     // them concurrently (guide §2.6) — and base's job is ONE aggregate
     // that also returns Σ_n, which is exactly the verify-side byte
     // estimate arraySideBytes used to pay a third job for.
-    val (baseStats, _) = inParallel(
+    val (baseStats, _) = Par.both(
       lockedHead(base.agg(count(lit(1)), coalesce(sum(col("_n")), lit(0L)))),
       lockedCount(mapping))
     val nReps = baseStats.getLong(0)

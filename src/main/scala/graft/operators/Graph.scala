@@ -108,44 +108,13 @@ object Graph {
     }
   }
 
-  /** Split [0, n) into core-count chunks and run `f(start, end)` on the
-    * driver's cores (r16, guide §1.2 step 2 — per-task work AFTER the job
-    * shape is right): the gated local algorithm cores are single-threaded
-    * Java loops by construction, so on a 32-core driver the local path
-    * left 31 cores idle for its whole driverGap (measured 1.8 s of the
-    * 3.2 s q_triangles wall). Each caller's per-chunk work is either a
-    * pure partial sum (triangles), an exclusive per-node write
-    * (labelProp/pageRank-by-incoming-CSR), or a per-chunk scratch — all
-    * order-independent, so results are bit-identical to the sequential
-    * loop (parity specs unchanged). Thread count tracks the session's
-    * core budget (SPARK_GRAFT_CPUS), not a local constant.
-    */
-  private def parallelChunks(n: Int)(f: (Int, Int) => Unit): Unit = {
-    val cores =
-      if (sys.env.contains("SPARK_GRAFT_NO_LOCAL_PAR")) 1 // A/B kill-switch
-      else math.min(
-        graft.GraftSession.cpus(),
-        Runtime.getRuntime.availableProcessors()).max(1)
-    val nChunks = math.min(cores * 4, n).max(1) // 4×: cheap load balance
-    if (nChunks <= 1) { f(0, n); return }
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val step = (n + nChunks - 1) / nChunks
-    val fs = (0 until nChunks).map { c =>
-      val s = c * step; val e = math.min(n, s + step)
-      Future(if (s < e) f(s, e))
-    }
-    fs.foreach(Await.result(_, Duration.Inf))
-  }
-
   /** Remap raw edge endpoints to dense indices into `ids`. Each slot is
     * an independent binary search with an exclusive write — parallel
     * over edge chunks (r16), identical output.
     */
   private def toDense(ids: Array[Long], a: Array[Long]): Array[Int] = {
     val out = new Array[Int](a.length)
-    parallelChunks(a.length) { (s, e) =>
+    Par.chunks(a.length) { (s, e) =>
       var i = s
       while (i < e) {
         out(i) = java.util.Arrays.binarySearch(ids, a(i)); i += 1
@@ -273,7 +242,7 @@ object Graph {
     while (k < m) { deg(si(k)) += 1L; k += 1 }
     // incoming-CSR (by dst) so each node's in-mass sum is an EXCLUSIVE
     // write — the per-edge scatter loop parallelizes over node chunks
-    // ([[parallelChunks]]) with no contention; the sum's terms are the
+    // ([[Par.chunks]]) with no contention; the sum's terms are the
     // same truncating-division values in a different order, and Long
     // addition is commutative, so ranks are bit-identical
     val (inOff, inSrc) = csr(n, di, si)
@@ -283,7 +252,7 @@ object Graph {
     for (_ <- 0 until iters) {
       val next = new Array[Long](n)
       val cur = rank
-      parallelChunks(n) { (s, e) =>
+      Par.chunks(n) { (s, e) =>
         var v = s
         while (v < e) {
           var acc = 0L
@@ -391,9 +360,9 @@ object Graph {
     System.arraycopy(di, 0, bothS, m, m); System.arraycopy(si, 0, bothD, m, m)
     val (off0, tgt0) = csr(n, bothS, bothD)
     // sort each adjacency segment (independent — all driver cores,
-    // [[parallelChunks]]), then dedupe into the compact set-semantics CSR
+    // [[Par.chunks]]), then dedupe into the compact set-semantics CSR
     // (sequential: shared write cursor, O(m) cheap)
-    parallelChunks(n) { (s, e) =>
+    Par.chunks(n) { (s, e) =>
       var u = s
       while (u < e) { java.util.Arrays.sort(tgt0, off0(u), off0(u + 1)); u += 1 }
     }
@@ -421,7 +390,7 @@ object Graph {
       // parallel over node chunks with per-chunk scratch; identical
       // per-node argmax, so the result is bit-identical to the
       // sequential loop
-      parallelChunks(n) { (st, en) =>
+      Par.chunks(n) { (st, en) =>
         val scratch = new Array[Long](maxDeg.max(1))
         var v = st
         while (v < en) {
@@ -633,15 +602,15 @@ object Graph {
     val (off, tgt) = csr(n, java.util.Arrays.copyOf(eu, w),
       java.util.Arrays.copyOf(ev, w))
     // per-node segment sorts and the per-u merge counts are independent —
-    // run them on all driver cores ([[parallelChunks]]); each chunk's
+    // run them on all driver cores ([[Par.chunks]]); each chunk's
     // count is a pure partial Long sum, so the total is bit-identical to
     // the sequential loop for any chunking
-    parallelChunks(n) { (s, e) =>
+    Par.chunks(n) { (s, e) =>
       var u = s
       while (u < e) { java.util.Arrays.sort(tgt, off(u), off(u + 1)); u += 1 }
     }
     val partials = new java.util.concurrent.atomic.LongAdder
-    parallelChunks(n) { (st, en) =>
+    Par.chunks(n) { (st, en) =>
       var tri = 0L
       var u = st
       while (u < en) {

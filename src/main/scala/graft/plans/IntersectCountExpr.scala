@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * length — at the measured sf4-replica containment verify that is 181M
   * candidate rows × (hash-set build + array allocation) on ~600-element
   * sets, and the allocation pressure is the stage (GC-bound, 557 s of a
-  * 655 s stage-isolated wall; ContainmentDecomp r12). The shingle/chunk
+  * 655 s stage-isolated wall; SURVEY.md §5n-2). The shingle/chunk
   * frames are `array_sort`ed distinct hashes by construction, so the
   * intersection SIZE needs no set and no allocation: one branch-light
   * merge walk, fully inside whole-stage codegen.

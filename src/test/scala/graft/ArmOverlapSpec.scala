@@ -3,15 +3,16 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Dedup
+import graft.operators.{Dedup, Par}
 
 /** Pins the r16 arm-overlap machinery (VERDICT r15 item 1): overlapped
   * eval arms — every catalyst compile and cache-registry mutation
   * serialized under [[Dedup.planLock]], stage execution concurrent —
   * must produce EXACTLY the sequential arms' pair sets, repeatedly, and
   * with another containment query having already run in the session
-  * (the trigger condition of the r15 duplicated-row race that
-  * graft.R15Race3 reproduces at sf0.01).
+  * (the trigger condition of the r15 duplicated-row race reproduced at
+  * sf0.01, OPTIMIZATION_r15.md). The last two tests pin [[Par]]: no
+  * concurrent sibling outlives a failure.
   */
 class ArmOverlapSpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.configure(
@@ -69,11 +70,32 @@ class ArmOverlapSpec extends AnyFunSuite {
       "the second (no orphaned concurrent action)") {
     @volatile var bDone = false
     val ex = intercept[RuntimeException] {
-      Dedup.overlapArms(
+      Par.both(
         { Thread.sleep(50); throw new RuntimeException("arm A boom") },
         { Thread.sleep(300); bDone = true; 42 })
     }
     assert(ex.getMessage == "arm A boom")
     assert(bDone, "second arm must be awaited before propagation")
+  }
+
+  test("Par.chunks propagates the first chunk's failure after draining " +
+      "every other chunk (no sibling still writing the caller's arrays)") {
+    val n = 1000
+    val covered = new java.util.concurrent.atomic.AtomicInteger(0)
+    val ex = intercept[RuntimeException] {
+      Par.chunks(n) { (s, e) =>
+        if (s == 0) {
+          Thread.sleep(50); covered.addAndGet(e - s)
+          throw new RuntimeException("chunk 0 boom")
+        }
+        if (e == n) {
+          covered.addAndGet(e - s); throw new RuntimeException("last chunk boom")
+        }
+        Thread.sleep(300); covered.addAndGet(e - s)
+      }
+    }
+    assert(ex.getMessage == "chunk 0 boom", "the first chunk's failure wins")
+    assert(covered.get == n,
+      s"only ${covered.get} of $n rows covered: a chunk was still running")
   }
 }

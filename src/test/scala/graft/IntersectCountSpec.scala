@@ -6,9 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Dedup
 
 /** Pins the round-12 verify-kernel + exact-collapse rework of the pair
-  * verify stage (ContainmentDecomp measured the sf4-replica containment
-  * wall 85% in the verify join — 557 s of 655 s stage-isolated — over
-  * 181M candidates):
+  * verify stage (the r12 stage decomposition in SURVEY.md §5n-2 put the
+  * sf4-replica containment wall 85% in the verify join — 557 s of 655 s
+  * stage-isolated — over 181M candidates):
   *
   *  1. [[graft.plans.SortedIntersectCount]] == size(array_intersect)
   *     on sorted-distinct arrays, across empty/disjoint/subset/random
