@@ -74,7 +74,7 @@ object Bench {
     // JVM/codegen/IO warmup so the first timed query isn't charged for it:
     // exercise the scan+agg path, the broadcast-join machinery, and the
     // HOF/native-expression path once at the smallest SF
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
+    graft.sources.Sources.lineitem(spark, sfDir)
       .groupBy("l_returnflag").count().collect()
     try {
       val w = "/root/testdata/sf0.001"

@@ -87,11 +87,6 @@ object GraftSession {
     .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
     .config("spark.sql.adaptive.skewJoin.enabled", "true")
     .config("spark.sql.session.timeZone", "UTC")
-    // testdata events.ts is parquet TIMESTAMP(NANOS). On Spark ≤4.0 this
-    // flag reads it as raw long nanos; Spark ≥4.1 REMOVED the flag (it is
-    // silently ignored) and infers TIMESTAMP_NTZ instead. Both shapes are
-    // handled by Sources.normalizeTs — kept only for older-Spark compat.
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
     // ObjectHashAggregate (TypedImperativeAggregate: topk/topkd, sketches,
     // collect_list) falls back to SORT-based aggregation after only 128

@@ -61,7 +61,7 @@ object ScaleUp {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
-    def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
+    def read(t: String) = graft.sources.Sources.table(spark, src, t)
     // coalesce each table to a bounded file count: the N-replica union
     // otherwise lands ~N×(source files) per table, and every trivial
     // full-scan query then pays N× task/scan overhead that has nothing to
@@ -71,7 +71,7 @@ object ScaleUp {
     val outFiles = 32
     def write(df: DataFrame, t: String): Unit = {
       df.coalesce(outFiles).write.mode("overwrite").parquet(s"$dst/$t.parquet")
-      println(s"[scaleup] $t: ${spark.read.parquet(s"$dst/$t.parquet").count()} rows")
+      println(s"[scaleup] $t: ${graft.sources.Sources.table(spark, dst, t).count()} rows")
     }
     def stride(df: DataFrame, c: String): Long =
       df.agg(max(col(c).cast("long"))).head.getLong(0) + 1

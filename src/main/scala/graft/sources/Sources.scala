@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Batch table readers over the engine's canonical parquet layout.
   *
@@ -8,14 +9,54 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * /root/reference/lib/wallaroo/application.pony:40) for batch inputs:
   * each named table is one scan whose filters/projections Catalyst pushes
   * into the parquet reader. Streaming sources live in [[graft.streaming]].
+  *
+  * Every canonical table is read with its declared schema ([[schemas]]),
+  * so opening one lists its files but reads no Parquet footer and starts
+  * no Spark job (schema inference runs a one-task job per read). The
+  * declared schemas are the ones Spark infers from the canonical files:
+  * `events.ts`, `o_orderdate` and `l_shipdate` are `TIMESTAMP_NTZ` (the
+  * session time zone is pinned to UTC, so NTZ and instant semantics
+  * coincide for this data) and `embedding` is `ARRAY<FLOAT>`. A column
+  * stored with a type the Parquet reader cannot convert to the declared
+  * one fails at read; a file missing a declared column reads that column
+  * as nulls.
   */
 object Sources {
-  val tableNames: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings")
+  private val declared: Seq[(String, String)] = Seq(
+    "region" -> "r_regionkey INT, r_name STRING",
+    "nation" -> "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer" -> ("c_custkey BIGINT, c_name STRING, c_nationkey INT, " +
+      "c_acctbal DOUBLE, c_mktsegment STRING"),
+    "supplier" -> ("s_suppkey BIGINT, s_name STRING, s_nationkey INT, " +
+      "s_acctbal DOUBLE"),
+    "part" -> ("p_partkey BIGINT, p_name STRING, p_brand STRING, " +
+      "p_type STRING, p_size INT, p_retailprice DOUBLE"),
+    "orders" -> ("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, " +
+      "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"),
+    "lineitem" -> ("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, " +
+      "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, " +
+      "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, " +
+      "l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"),
+    "events" -> ("event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, " +
+      "event_type STRING, value DOUBLE, props STRING"),
+    "documents" -> ("doc_id BIGINT, text STRING, lang STRING, source STRING, " +
+      "n_chars BIGINT"),
+    "embeddings" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT")
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  val tableNames: Seq[String] = declared.map(_._1)
+
+  /** The declared schema of each table in [[tableNames]]. */
+  val schemas: Map[String, StructType] =
+    declared.map { case (t, ddl) => t -> StructType.fromDDL(ddl) }.toMap
+
+  /** Reads canonical table `name` from `dir/name.parquet` with its
+    * declared schema; any other name is refused.
+    */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val schema = schemas.getOrElse(name, throw new IllegalArgumentException(
+      s"unknown table '$name'; the canonical tables are ${tableNames.mkString(", ")}"))
+    spark.read.schema(schema).parquet(s"$dir/$name.parquet")
+  }
 
   def csv(spark: SparkSession, path: String, header: Boolean = true): DataFrame =
     spark.read.option("header", header.toString).option("inferSchema", "true").csv(path)
@@ -30,32 +71,7 @@ object Sources {
   def part(s: SparkSession, d: String): DataFrame = table(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame = table(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
-  /** Normalizes an event-time `ts` column regardless of how the Spark
-    * version at hand surfaced parquet TIMESTAMP(NANOS):
-    *
-    *   - Spark ≤4.0 with `spark.sql.legacy.parquet.nanosAsLong`: the column
-    *     reads as raw long nanos → truncate to µs (exact integer division,
-    *     matching engines that truncate ns to µs) and build a timestamp.
-    *   - Spark ≥4.1 (flag removed): the column infers as TIMESTAMP_NTZ —
-    *     already time-typed, leave it (session TZ is pinned to UTC so NTZ
-    *     and instant semantics coincide for our data).
-    *
-    * Works on batch AND streaming DataFrames; every consumer of `events.ts`
-    * must go through this (or [[events]]) rather than assuming a raw type.
-    */
-  def normalizeTs(raw: DataFrame, col: String = "ts"): DataFrame =
-    raw.schema(col).dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn(col, org.apache.spark.sql.functions
-          .expr(s"timestamp_micros($col div 1000)"))
-      case _ => raw
-    }
-
-  /** Events table with `ts` normalized to a timestamp type; see
-    * [[normalizeTs]] for the per-Spark-version shapes handled.
-    */
-  def events(s: SparkSession, d: String): DataFrame =
-    normalizeTs(table(s, d, "events"))
+  def events(s: SparkSession, d: String): DataFrame = table(s, d, "events")
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 }

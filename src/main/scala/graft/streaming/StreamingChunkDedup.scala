@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** Incremental CHUNK-level dedup over a document stream — the streaming
   * twin of [[graft.operators.Chunking]]: each micro-batch splits its
@@ -51,6 +52,12 @@ object StreamingChunkDedup {
       }
       .start()
 
+  /** File schema of the store trees, as [[processBatch]] writes them; the
+    * probe and [[compactStore]] read with it (see [[StoreMaint]]).
+    */
+  private[graft] val StoreSchema: StructType =
+    StructType.fromDDL("h BIGINT, hb BIGINT, src_batch BIGINT")
+
   /** One micro-batch step (factored out for direct testing). */
   def processBatch(batch: DataFrame, batchId: Long, storeDir: String,
       flagDir: String): Unit = {
@@ -74,7 +81,7 @@ object StreamingChunkDedup {
           // only chunks ORIGINATING strictly earlier (src_batch survives
           // compaction): a replayed batch must not see its own (failed)
           // prior write, nor later batches' chunks
-          val st = spark.read.parquet(storeDir)
+          val st = spark.read.schema(StoreSchema).parquet(storeDir)
             .filter(col("src_batch") < batchId)
             .filter(col("hb").isin(touched: _*))
             .select(col("h")).distinct()
@@ -111,5 +118,5 @@ object StreamingChunkDedup {
     */
   def compactStore(spark: org.apache.spark.sql.SparkSession,
       storeDir: String): Unit =
-    StoreMaint.compactTree(spark, storeDir, "hb", Seq("h"))
+    StoreMaint.compactTree(spark, storeDir, StoreSchema, "hb", Seq("h"))
 }

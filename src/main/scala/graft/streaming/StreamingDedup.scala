@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** Incremental near-dup detection over a DOCUMENT STREAM — the reference's
   * continuous-processing model applied to the LLM-pipeline dedup family:
@@ -112,6 +113,14 @@ object StreamingDedup {
       }
       .start()
 
+  /** File schemas of the two subtrees, as [[processBatch]] writes them;
+    * the probes and [[compactStore]] read with them (see [[StoreMaint]]).
+    */
+  private[graft] val KeysSchema: StructType = StructType.fromDDL(
+    "doc_id BIGINT, band INT, bk ARRAY<BIGINT>, bucket BIGINT, src_batch BIGINT")
+  private[graft] val DocsSchema: StructType = StructType.fromDDL(
+    "doc_id BIGINT, sh ARRAY<BIGINT>, dbucket BIGINT, src_batch BIGINT")
+
   /** One micro-batch step (factored out for direct testing). */
   def processBatch(batch: DataFrame, batchId: Long, storeDir: String,
       flagDir: String, numHashes: Int, bandCount: Int,
@@ -130,9 +139,13 @@ object StreamingDedup {
       val bucketCounts = keys.groupBy(col("bucket")).count().collect()
       val nKeys = bucketCounts.map(_.getLong(1)).sum
       if (nKeys == 0) return
-      // candidate pairs: new-vs-store (store doc wins as dup_of) + new-vs-new
+      // candidate pairs: new-vs-store (store doc wins as dup_of) + new-vs-new.
+      // Both subtrees are checked, so an interrupted compaction swap of
+      // either is finished before the probe; docs are written first, so
+      // keys never exist without them
       val vsStore =
-        if (StoreMaint.exists(spark, s"$storeDir/keys")) {
+        if (StoreMaint.exists(spark, s"$storeDir/docs") &&
+            StoreMaint.exists(spark, s"$storeDir/keys")) {
           // the batch's touched buckets: ≤ min(|batch|·bands, B) values —
           // bounded by StoreBuckets, safe to collect, and as a literal isin
           // a Parquet pushed filter that skips bucket ranges at the source
@@ -141,7 +154,7 @@ object StreamingDedup {
           // compaction): a replayed batch must not probe its own (failed)
           // prior write, and a late replay issued after later batches
           // committed must not see them either
-          val storeKeys = spark.read.parquet(s"$storeDir/keys")
+          val storeKeys = spark.read.schema(KeysSchema).parquet(s"$storeDir/keys")
             .filter(col("src_batch") < batchId)
             .filter(col("bucket").isin(touched: _*))
             .select(col("doc_id").as("dup_of"), col("band"), col("bk"))
@@ -163,7 +176,7 @@ object StreamingDedup {
           // distinct values, pushed to the doc tree's scan the same way
           val dbuckets = cands.select(dbucketOf(col("dup_of")).as("db"))
             .distinct().collect().map(_.getLong(0))
-          val storeDocs = spark.read.parquet(s"$storeDir/docs")
+          val storeDocs = spark.read.schema(DocsSchema).parquet(s"$storeDir/docs")
             .filter(col("src_batch") < batchId)
             .filter(col("dbucket").isin(dbuckets: _*))
             .select(col("doc_id").as("dup_of"), col("sh").as("sh_b"))
@@ -227,9 +240,9 @@ object StreamingDedup {
     * safe).
     */
   def compactStore(spark: SparkSession, storeDir: String): Unit = {
-    StoreMaint.compactTree(spark, s"$storeDir/keys", "bucket",
+    StoreMaint.compactTree(spark, s"$storeDir/keys", KeysSchema, "bucket",
       Seq("doc_id", "band", "bk"))
-    StoreMaint.compactTree(spark, s"$storeDir/docs", "dbucket",
+    StoreMaint.compactTree(spark, s"$storeDir/docs", DocsSchema, "dbucket",
       Seq("doc_id", "sh"))
   }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Incremental SEMANTIC near-dup detection over an EMBEDDING STREAM — the
   * vector-space twin of [[StreamingDedup]] (which gates on shingle
@@ -48,9 +49,17 @@ object StreamingSemanticDedup {
           threshold, nprobe)
         if (autoCompactBatches > 0 && StoreMaint.uncompactedBatches(
             batch.sparkSession, storeDir) >= autoCompactBatches)
-          compactStore(batch.sparkSession, storeDir)
+          compact(batch.sparkSession, storeDir, batch.schema("emb").dataType)
       }
       .start()
+
+  /** File schema of the store trees that [[processBatch]] writes from a
+    * frame whose `emb` column has type `emb`, as Spark reads it back (every
+    * column and array element nullable); the probe and compaction read
+    * with it (see [[StoreMaint]]).
+    */
+  private[graft] def storeSchema(emb: DataType): StructType = StructType.fromDDL(
+    s"doc_id BIGINT, bucket BIGINT, emb ${emb.sql}, _n DOUBLE, src_batch BIGINT")
 
   /** One micro-batch step (factored out for direct testing). */
   def processBatch(batch: DataFrame, batchId: Long,
@@ -78,7 +87,8 @@ object StreamingSemanticDedup {
         if (StoreMaint.exists(spark, storeDir))
           // src_batch (not the batch_id dir) is the visibility key: it
           // survives compaction, so late replays stay deterministic
-          Some(spark.read.parquet(storeDir)
+          Some(spark.read.schema(storeSchema(assigned.schema("emb").dataType))
+            .parquet(storeDir)
             .filter(col("src_batch") < batchId)
             .drop("batch_id", "src_batch")
             .filter(col("bucket").isin(probedBuckets: _*)))
@@ -124,8 +134,16 @@ object StreamingSemanticDedup {
     * by `bucket` (atomic dir swap), so probes keep pruning at the source
     * as batches accumulate. Schedule between batches like
     * [[StreamingDedup.compactStore]] (or via `autoCompactBatches`).
+    *
+    * This entry point has no frame to take the `emb` type from, so it
+    * infers the store's schema, which costs one Spark job that reads a
+    * footer. The `autoCompactBatches` policy takes the type from the batch
+    * and starts no such job.
     */
   def compactStore(spark: SparkSession, storeDir: String): Unit =
-    StoreMaint.compactTree(spark, storeDir, "bucket",
+    compact(spark, storeDir, spark.read.parquet(storeDir).schema("emb").dataType)
+
+  private def compact(spark: SparkSession, storeDir: String, emb: DataType): Unit =
+    StoreMaint.compactTree(spark, storeDir, storeSchema(emb), "bucket",
       Seq("doc_id", "emb", "_n"))
 }

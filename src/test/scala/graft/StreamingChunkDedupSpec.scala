@@ -59,6 +59,22 @@ class StreamingChunkDedupSpec extends AnyFunSuite {
     assert(rep(11L)._2 == rep(11L)._1) // fully duplicated within batch
   }
 
+  test("declared store schema equals the schema of the trees the writer wrote") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("chunkdedup_schema").toString
+    val text = "a paragraph long enough to cut into several content " +
+      "defined chunks for the schema check of the chunk store " * 3
+    StreamingChunkDedup.processBatch(Seq((1L, text)).toDF("doc_id", "text"),
+      0L, s"$dir/store", s"$dir/flags")
+    StreamingChunkDedup.processBatch(Seq((2L, text)).toDF("doc_id", "text"),
+      1L, s"$dir/store", s"$dir/flags")
+    StreamingChunkDedup.compactStore(spark, s"$dir/store")
+    val declared = StreamingChunkDedup.StoreSchema
+    assert(spark.read.parquet(s"$dir/store/batch_id=-1").schema == declared)
+    assert(spark.read.schema(declared).parquet(s"$dir/store").schema ==
+      spark.read.parquet(s"$dir/store").schema)
+  }
+
   test("at-least-once replay of a batch is idempotent") {
     import spark.implicits._
     val dir = Files.createTempDirectory("chunkdedup3").toString

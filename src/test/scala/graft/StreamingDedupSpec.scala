@@ -145,6 +145,50 @@ class StreamingDedupSpec extends AnyFunSuite {
     assert(spark.read.parquet(store + "/docs").count() == 3)
   }
 
+  test("declared store schemas equal the schemas of the trees the writer wrote") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_schema").toString
+    val store = base + "/store"
+    def batch(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+    StreamingDedup.processBatch(batch((1L, a), (2L, b)), 0L, store, base + "/flags", 64, 16, 0.5)
+    StreamingDedup.processBatch(batch((3L, c)), 1L, store, base + "/flags", 64, 16, 0.5)
+    StreamingDedup.compactStore(spark, store)
+    for ((sub, declared) <- Seq("keys" -> StreamingDedup.KeysSchema,
+        "docs" -> StreamingDedup.DocsSchema)) {
+      assert(spark.read.parquet(s"$store/$sub/batch_id=-1").schema == declared, sub)
+      // the whole subtree: declared columns plus the discovered batch_id
+      assert(spark.read.schema(declared).parquet(s"$store/$sub").schema ==
+        spark.read.parquet(s"$store/$sub").schema, sub)
+    }
+  }
+
+  test("a crash between the two renames of a compaction swap loses no document") {
+    import spark.implicits._
+    def batch(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+    for (sub <- Seq("keys", "docs")) {
+      val base = Files.createTempDirectory("graft_swap_crash").toString
+      val (store, flags) = (base + "/store", base + "/flags")
+      StreamingDedup.processBatch(batch((1L, a), (2L, b)), 0L, store, flags, 64, 16, 0.5)
+      StreamingDedup.processBatch(batch((10L, c)), 1L, store, flags, 64, 16, 0.5)
+      // leave `sub` as compactTree leaves it when killed between its two
+      // renames: the per-batch trees under `__old`, the compacted tree
+      // under `__compacting`, and no `sub` itself
+      val tree = new java.io.File(s"$store/$sub")
+      val before = new java.io.File(s"$base/before")
+      org.apache.commons.io.FileUtils.copyDirectory(tree, before)
+      StreamingDedup.compactStore(spark, store)
+      assert(tree.renameTo(new java.io.File(s"$store/${sub}__compacting")))
+      assert(before.renameTo(new java.io.File(s"$store/${sub}__old")))
+      StreamingDedup.processBatch(batch((3L, aDup)), 2L, store, flags, 64, 16, 0.5)
+      val got = spark.read.parquet(s"$flags/batch_id=2")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got == Set((3L, 1L)), s"$sub: $got")
+      assert(new java.io.File(tree, "batch_id=-1").isDirectory, sub)
+      assert(!new java.io.File(s"$store/${sub}__old").exists &&
+        !new java.io.File(s"$store/${sub}__compacting").exists, sub)
+    }
+  }
+
   test("late replay after compaction still excludes later batches (src_batch)") {
     import spark.implicits._
     val base = Files.createTempDirectory("graft_replay_compact").toString

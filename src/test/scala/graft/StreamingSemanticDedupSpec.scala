@@ -48,6 +48,23 @@ class StreamingSemanticDedupSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("declared store schema equals the schema of the trees the writer wrote") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_semdedup_schema").toString
+    val store = s"$base/store"
+    def batch(rows: (Long, Array[Float])*) = rows.toDF("doc_id", "emb")
+    StreamingSemanticDedup.processBatch(batch((1L, a), (2L, b)), 0L, cents,
+      store, s"$base/flags", 0.98, 2)
+    StreamingSemanticDedup.processBatch(batch((3L, c)), 1L, cents,
+      store, s"$base/flags", 0.98, 2)
+    val declared = StreamingSemanticDedup.storeSchema(batch().schema("emb").dataType)
+    assert(spark.read.parquet(s"$store/batch_id=0").schema == declared)
+    StreamingSemanticDedup.compactStore(spark, store)
+    assert(spark.read.parquet(s"$store/batch_id=-1").schema == declared)
+    assert(spark.read.schema(declared).parquet(store).schema ==
+      spark.read.parquet(store).schema)
+  }
+
   test("replay is idempotent; store prunes to probed bucket partitions") {
     import spark.implicits._
     val base = Files.createTempDirectory("graft_semdedup2").toString

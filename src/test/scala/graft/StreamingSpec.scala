@@ -143,9 +143,8 @@ class StreamingSpec extends AnyFunSuite {
       .qTumbling(spark, "/root/testdata/sf0.001")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     // same computation as a file stream (complete mode, single batch)
-    val stream = graft.sources.Sources.normalizeTs(
-      spark.readStream.schema(
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet").schema)
+    val stream = (
+      spark.readStream.schema(graft.sources.Sources.schemas("events"))
         .option("pathGlobFilter", "events.parquet")
         .parquet("/root/testdata/sf0.001"))
     val windowed = graft.operators.Windows.withTumbling(stream, $"ts", 3600)
@@ -169,9 +168,8 @@ class StreamingSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     // streaming: the built-in window() with the same range/slide
-    val stream = graft.sources.Sources.normalizeTs(
-      spark.readStream.schema(
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet").schema)
+    val stream = (
+      spark.readStream.schema(graft.sources.Sources.schemas("events"))
         .option("pathGlobFilter", "events.parquet")
         .parquet("/root/testdata/sf0.001"))
     val windowed = stream
@@ -202,9 +200,8 @@ class StreamingSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("n"), min(epochS($"ts")).as("start_s"))
       .select($"user_id", $"start_s", $"n")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val stream = graft.sources.Sources.normalizeTs(
-      spark.readStream.schema(
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet").schema)
+    val stream = (
+      spark.readStream.schema(graft.sources.Sources.schemas("events"))
         .option("pathGlobFilter", "events.parquet")
         .parquet("/root/testdata/sf0.001"))
       .withColumn("ts2", timestamp_seconds(epochS($"ts")))
