@@ -70,7 +70,6 @@ def main(argv=None):
                  .config("spark.sql.shuffle.partitions", "4")
                  .config("spark.ui.enabled", "false")
                  .config("spark.sql.session.timeZone", "UTC")
-                 .config("spark.sql.legacy.parquet.nanosAsLong", "true")
                  .getOrCreate())
         spark.sparkContext.setLogLevel("WARN")
         try:

@@ -33,9 +33,6 @@ def spark():
              .appName("graft-py-pytest")
              .config("spark.sql.shuffle.partitions", "4")
              .config("spark.ui.enabled", "false")
-             # testdata events.ts is parquet TIMESTAMP(NANOS); read as
-             # long nanos exactly like the Scala GraftSession does
-             .config("spark.sql.legacy.parquet.nanosAsLong", "true")
              .getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
     yield spark

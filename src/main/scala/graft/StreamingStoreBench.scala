@@ -110,7 +110,7 @@ object StreamingStoreBench {
       emb, "doc_id", "emb", k = 32, iters = 3)
     val (semWalls, semList, semFiles) = timeBatches(nBatches, compactAt, every,
       () => graft.streaming.StreamingSemanticDedup.compactStore(
-        spark, s"$base/sem_store"),
+        spark, s"$base/sem_store", cents.size),
       () => listingProbe(spark, Seq(s"$base/sem_store"))) { b =>
       graft.streaming.StreamingSemanticDedup.processBatch(
         emb.filter(pmod(col("doc_id"), lit(nBatches)) === b), b.toLong,

@@ -3,9 +3,11 @@ package graft.plans
 import java.nio.ByteBuffer
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, SpecificInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** One-pass one-permutation-hashing MinHash signature as a native
@@ -113,4 +115,58 @@ object MinHashAgg {
 
   def minhashSig(hashCol: Column): Column =
     org.apache.spark.sql.functions.call_function("minhash_sig", hashCol)
+}
+
+/** The row-local form of [[MinHashAgg]]: the OPH signature of ONE
+  * `array<bigint>` value, for a frame that already holds each document's
+  * hashes in one row, so the signature needs no explode and no group-by
+  * shuffle. It runs the aggregate's own `update` (bucket minimum) over the
+  * array's elements and its `eval` (rotation densification) on the
+  * result, so the two forms give the same signature for the same hashes.
+  * Null for a null or empty array (the aggregate's empty-group null).
+  */
+case class MinHashSigOf(child: Expression, numHashes: Int)
+    extends UnaryExpression with CodegenFallback {
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"minhash_sig_of requires an ARRAY<BIGINT> column, got ${other.catalogString}")
+  }
+
+  // one aggregate and input slot per deserialized expression instance;
+  // expression trees are task-local in execution, so no sharing
+  @transient private lazy val agg =
+    MinHashAgg(BoundReference(0, LongType, nullable = false), numHashes)
+  @transient private lazy val slot = new SpecificInternalRow(Seq(LongType))
+
+  override def nullSafeEval(input: Any): Any = {
+    val hashes = input.asInstanceOf[ArrayData]
+    val buf = agg.createAggregationBuffer()
+    var i = 0
+    while (i < hashes.numElements()) {
+      if (!hashes.isNullAt(i)) {
+        slot.setLong(0, hashes.getLong(i))
+        agg.update(buf, slot)
+      }
+      i += 1
+    }
+    agg.eval(buf)
+  }
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = true
+  override protected def withNewChildInternal(c: Expression): MinHashSigOf =
+    copy(child = c)
+  override def prettyName: String = "minhash_sig_of"
+}
+
+object MinHashSigOf {
+  /** Register `minhash_sig_of(hashes)` with a fixed signature width. */
+  def register(spark: SparkSession, numHashes: Int = 64): Unit =
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "minhash_sig_of", exprs => MinHashSigOf(exprs.head, numHashes), "built-in")
+
+  def minhashSigOf(hashes: Column): Column =
+    org.apache.spark.sql.functions.call_function("minhash_sig_of", hashes)
 }

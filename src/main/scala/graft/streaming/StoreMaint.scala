@@ -1,25 +1,35 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** Shared layout and maintenance for the append-only streaming stores
   * ([[StreamingDedup]], [[StreamingChunkDedup]],
   * [[StreamingSemanticDedup]]): the one tree writer they all use,
-  * compaction of per-batch trees into one `batch_id=-1` tree, and the
-  * cheap trigger check the auto-compaction policy polls from inside
-  * `foreachBatch`.
+  * compaction of per-batch trees into one `batch_id=-1` tree, the
+  * one-job bucket census their probes start from, the cheap trigger check
+  * the auto-compaction policy polls from inside `foreachBatch`, and the
+  * job descriptions that name each phase of a batch.
   *
-  * Layout: `batch_id=N` directories hold flat parquet files, written
-  * range-partitioned and sorted by the store's hash-bucket column, which
-  * is a DATA column (no `bucket=` directories). Each file covers a
-  * disjoint bucket range, so a probe's `isin` on that column is a Parquet
-  * pushed filter that skips files and row groups by their footer min/max
-  * statistics. A tree holds at most `spark.sql.shuffle.partitions` files,
-  * not one per bucket. Stores written with `bucket=` directories cannot be
-  * mixed with these trees and must be rebuilt.
+  * Layout: `batch_id=N` directories hold flat parquet files, each sorted
+  * by the store's hash-bucket column, which is a DATA column (no
+  * `bucket=` directories). Each file covers a disjoint bucket range, so a
+  * probe's `isin` on that column is a Parquet pushed filter that skips
+  * files and row groups by their footer min/max statistics. A tree holds
+  * at most `spark.sql.shuffle.partitions` files, not one per bucket.
+  * Stores written with `bucket=` directories cannot be mixed with these
+  * trees and must be rebuilt.
+  *
+  * The writer is id-partitioned: the bucket domain `[0, nBuckets)` is
+  * known, so bucket `b` goes to partition `b * P / nBuckets`, a monotone
+  * map with no sampling job (`repartitionByRange` sampled the data on
+  * every write, one more Spark job per tree); [[writeTree]] says how P is
+  * chosen. The file format and the layout invariant are unchanged, so
+  * trees written by the range writer stay readable and compactable;
+  * existing stores need no rebuild.
   *
   * Compaction preserves replay determinism: every store row carries a
   * `src_batch` DATA column (the batch that first wrote it), merged rows
@@ -75,16 +85,70 @@ private[streaming] object StoreMaint {
   }
 
   /** Write `df` as one store tree at `path` (whole-tree overwrite, so a
-    * replayed batch rewrites exactly its prior output), range-partitioned
-    * and sorted by `bucketCol`.
+    * replayed batch rewrites exactly its prior output): bucket `b` of the
+    * domain `[0, nBuckets)` goes to partition `b * P / nBuckets`, and each
+    * partition is sorted by `bucketCol`. Two jobs (the shuffle and the
+    * write), no sampling job. A value outside the domain goes to the first
+    * or last partition, so the file ranges stay disjoint whatever the
+    * column holds.
+    *
+    * P is the plan's estimated size over the advisory partition size
+    * (`spark.sql.adaptive.advisoryPartitionSizeInBytes`), at least 1 and
+    * at most `spark.sql.shuffle.partitions`: the file count AQE left the
+    * range writer's output at. A fixed P = `spark.sql.shuffle.partitions`
+    * wrote four files per small tree at 4 partitions, and a `stream_dedup`
+    * batch on a 4-core box took about an eighth longer than with one file
+    * per tree.
     */
-  def writeTree(df: DataFrame, bucketCol: String, path: String): Unit =
-    df.repartitionByRange(col(bucketCol)).sortWithinPartitions(bucketCol)
+  def writeTree(df: DataFrame, bucketCol: String, nBuckets: Int,
+      path: String): Unit = {
+    val conf = df.sparkSession.sessionState.conf
+    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val p = (bytes / conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) + 1)
+      .min(conf.numShufflePartitions).toInt
+    val b = least(greatest(col(bucketCol).cast("long"), lit(0L)),
+      lit(nBuckets - 1L))
+    df.repartitionById(p, floor(b * p / nBuckets).cast("int"))
+      .sortWithinPartitions(bucketCol)
       .write.mode(SaveMode.Overwrite).parquet(path)
+  }
+
+  /** Row count and bucket set of `df`'s `bucketCol` (values in
+    * `[0, nBuckets)`), in ONE narrow job: each partition counts its rows
+    * and sets one bit per bucket it holds, and the driver ORs the
+    * partitions' bitsets. With no exchange in the plan, the job also fills
+    * any cached frame `df` reads from, so the answer comes with the cache.
+    */
+  def bucketCensus(df: DataFrame, bucketCol: String,
+      nBuckets: Int): (Long, Seq[Long]) = {
+    val parts = df.select(col(bucketCol).cast("int")).as(Encoders.scalaInt)
+      .mapPartitions { it =>
+        val bits = new java.util.BitSet(nBuckets)
+        var n = 0L
+        it.foreach { b => bits.set(b); n += 1 }
+        Iterator((n, bits.toByteArray))
+      }(Encoders.tuple(Encoders.scalaLong, Encoders.BINARY)).collect()
+    val held = new java.util.BitSet(nBuckets)
+    parts.foreach(p => held.or(java.util.BitSet.valueOf(p._2)))
+    (parts.map(_._1).sum, held.stream().toArray.toSeq.map(_.toLong))
+  }
+
+  /** Run `body` with the Spark job description `desc` (e.g.
+    * `dedup batch 7: probe`), so every job it starts, the AQE stage jobs
+    * included, is named by its phase; the caller's description is
+    * restored afterwards.
+    */
+  def phase[T](spark: SparkSession, desc: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setJobDescription(caller)
+  }
 
   /** Rewrite all of `dir`'s per-batch trees, read with the store's
     * declared `schema`, into one `batch_id=-1` tree with the same columns
-    * in the same order, clustered by `bucketCol`, merging duplicate
+    * in the same order, clustered by `bucketCol` over the domain
+    * `[0, nBuckets)` (see [[writeTree]]), merging duplicate
     * `keyCols` rows to their minimum `src_batch`. Atomic: write to a side
     * dir, swap via rename (atomic on HDFS/local; for S3-like stores use
     * the manifest pattern — ManifestObjectStore — instead of dir
@@ -93,7 +157,7 @@ private[streaming] object StoreMaint {
     * actually lives on, the same way the batch writers do.
     */
   def compactTree(spark: SparkSession, dir: String, schema: StructType,
-      bucketCol: String, keyCols: Seq[String]): Unit = {
+      bucketCol: String, nBuckets: Int, keyCols: Seq[String]): Unit = {
     val storePath = new Path(dir)
     val fs = storePath.getFileSystem(spark.sessionState.newHadoopConf())
     val (tmp, old) = sideTrees(dir)
@@ -101,7 +165,7 @@ private[streaming] object StoreMaint {
       .groupBy((keyCols :+ bucketCol).map(col): _*)
       .agg(min(col("src_batch")).as("src_batch"))
       .select(schema.fieldNames.map(col): _*),
-      bucketCol, new Path(tmp, "batch_id=-1").toString)
+      bucketCol, nBuckets, new Path(tmp, "batch_id=-1").toString)
     if (!fs.rename(storePath, old))
       throw new java.io.IOException(s"compactTree: rename $dir -> $old failed")
     if (!fs.rename(tmp, storePath))

@@ -62,22 +62,23 @@ object StreamingChunkDedup {
   def processBatch(batch: DataFrame, batchId: Long, storeDir: String,
       flagDir: String): Unit = {
     val spark = batch.sparkSession
+    def phase[T](name: String)(body: => T): T =
+      StoreMaint.phase(spark, s"chunk dedup batch $batchId: $name")(body)
     graft.plans.ChunkHashes.register(spark, k = 8, modulus = 64)
     val ch = batch.select(col("doc_id"), explode(array_distinct(
         graft.plans.ChunkHashes.chunkHashes(col("text")))).as("h"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // one job answers empty?, the broadcast gate, and the touched
-      // buckets (per-batch fixed job count is the streaming floor)
-      val bucketCounts = ch.groupBy(pmod(col("h"), lit(Buckets)).as("hb"))
-        .count().collect()
-      val nChunks = bucketCounts.map(_.getLong(1)).sum
+      // one narrow job answers empty?, the broadcast gate, and the touched
+      // buckets, and fills the cache (per-batch fixed job count is the
+      // streaming floor)
+      val (nChunks, touched) = phase("census")(StoreMaint.bucketCensus(
+        ch.select(pmod(col("h"), lit(Buckets)).as("hb")), "hb", Buckets))
       if (nChunks == 0) return
       val storeHits =
         if (StoreMaint.exists(spark, storeDir)) {
-          // ≤ Buckets values — safe to collect, and as a literal isin a
-          // Parquet pushed filter that skips hb ranges at the source
-          val touched = bucketCounts.map(_.getLong(0))
+          // ≤ Buckets values, as a literal isin a Parquet pushed filter
+          // that skips hb ranges at the source
           // only chunks ORIGINATING strictly earlier (src_batch survives
           // compaction): a replayed batch must not see its own (failed)
           // prior write, nor later batches' chunks
@@ -102,12 +103,12 @@ object StreamingChunkDedup {
           Seq("doc_id"), "left")
         .select(col("doc_id"), col("n_chunks"),
           coalesce(col("n_dup"), lit(0L)).as("n_dup_chunks"))
-      report.write.mode(SaveMode.Overwrite)
-        .parquet(s"$flagDir/batch_id=$batchId")
-      StoreMaint.writeTree(ch.select(col("h")).distinct()
+      phase("report")(report.write.mode(SaveMode.Overwrite)
+        .parquet(s"$flagDir/batch_id=$batchId"))
+      phase("store")(StoreMaint.writeTree(ch.select(col("h")).distinct()
         .select(col("h"), pmod(col("h"), lit(Buckets)).as("hb"))
         .withColumn("src_batch", lit(batchId)),
-        "hb", s"$storeDir/batch_id=$batchId")
+        "hb", Buckets, s"$storeDir/batch_id=$batchId"))
     } finally ch.unpersist()
   }
 
@@ -118,5 +119,6 @@ object StreamingChunkDedup {
     */
   def compactStore(spark: org.apache.spark.sql.SparkSession,
       storeDir: String): Unit =
-    StoreMaint.compactTree(spark, storeDir, StoreSchema, "hb", Seq("h"))
+    StoreMaint.phase(spark, "chunk dedup compaction")(
+      StoreMaint.compactTree(spark, storeDir, StoreSchema, "hb", Buckets, Seq("h")))
 }

@@ -7,28 +7,37 @@ import org.apache.spark.sql.types.StructType
 
 /** Incremental near-dup detection over a DOCUMENT STREAM — the reference's
   * continuous-processing model applied to the LLM-pipeline dedup family:
-  * each micro-batch hashes its documents once (native
-  * [[graft.plans.ShingleHashes]] + [[graft.plans.MinHashAgg]] OPH
-  * signatures), LSH band keys of the new docs are joined against the
-  * accumulated signature store, verified near-dups are appended to a flag
-  * sink, and the new signatures are appended to the store.
+  * each micro-batch hashes its documents once into ONE cached batch frame
+  * (doc_id, sh, sig) — native [[graft.plans.ShingleHashes]] and the
+  * row-local OPH signature [[graft.plans.MinHashSigOf]], so the frame's
+  * plan has no shuffle — LSH band keys of the new docs (a narrow explode
+  * of that frame) are joined against the accumulated signature store,
+  * verified near-dups are appended to a flag sink, and the new signatures
+  * are appended to the store. [[processBatch]] lists the jobs of a batch.
   *
   * Store layout (100 TB shape): TWO subtrees, each clustered by a hash
   * bucket (the [[StoreMaint]] layout: flat files per `batch_id=` tree,
-  * range-partitioned and sorted by the bucket column, so every file
-  * covers a disjoint bucket range).
+  * id-partitioned over the bucket domain `[0, StoreBuckets)` and sorted by
+  * the bucket column, so every file covers a disjoint bucket range). The
+  * file format is the one the earlier range-partitioned writer produced,
+  * so stores it wrote stay readable and compactable.
   *
   *  - `storeDir/keys`  — (doc_id, band, bk, bucket, src_batch), with
   *    `bucket = pmod(xxhash64(band, bk), B)`. The probe pushes the batch's
   *    touched-bucket set as an `isin` Parquet filter, which skips files
   *    and row groups whose bucket min/max misses it.
   *  - `storeDir/docs`  — (doc_id, sh, dbucket, src_batch), ONE row per
-  *    document, `dbucket = pmod(xxhash64(doc_id), B)`. The hashed
+  *    input row, `dbucket = pmod(xxhash64(doc_id), B)`. The hashed
   *    shingle array (the heavy payload — it scales with document length)
   *    is stored once per doc, NOT duplicated across the `bands` key rows,
   *    and is fetched only for documents that actually survive the
   *    candidate join — again through an `isin` on the candidates'
   *    ≤ B distinct dbuckets.
+  *
+  * A doc_id repeated within one batch keeps one docs row and one set of
+  * postings per copy, each copy signed on its own; the probes and the
+  * best-match aggregate collapse identical copies, and [[compactStore]]
+  * merges them.
   *
   * The bucket prune pays only for small batches: with 16 postings per doc
   * a batch of n docs leaves on average 64·(63/64)^(16n) of the 64 key
@@ -73,23 +82,33 @@ object StreamingDedup {
   private def dbucketOf(docId: org.apache.spark.sql.Column) =
     pmod(xxhash64(docId), lit(StoreBuckets))
 
-  /** Band keys for a (doc_id, text) batch — band layout comes from
-    * [[graft.operators.Dedup.minhashBandKeys]], the same code the batch
-    * LSH family uses, so store contents stay band-compatible. Returns
-    * (keys: doc_id/band/bk/bucket, hashed: doc_id/sh).
+  /** The batch frame (doc_id, sh, sig) of a (doc_id, text) batch: the
+    * hashed shingles ([[graft.plans.ShingleHashes]]) and their OPH
+    * signature, computed row by row ([[graft.plans.MinHashSigOf]], the
+    * row-local form of the batch family's [[graft.plans.MinHashAgg]]), so
+    * the plan has no exchange. A row with no shingles has a null `sig`.
     */
-  private[streaming] def signatures(batch: DataFrame, numHashes: Int,
-      bands: Int): (DataFrame, DataFrame) = {
+  private[streaming] def batchFrame(batch: DataFrame, numHashes: Int): DataFrame = {
     val spark = batch.sparkSession
     graft.plans.ShingleHashes.register(spark, n = 3)
-    val hashed = batch.select(col("doc_id"),
-      graft.plans.ShingleHashes.shingleHashes(col("text")).as("sh"))
-    val keys = graft.operators.Dedup
-      .minhashBandKeys(hashed.withColumnRenamed("sh", "_sh"),
+    graft.plans.MinHashSigOf.register(spark, numHashes)
+    batch.select(col("doc_id"),
+        graft.plans.ShingleHashes.shingleHashes(col("text")).as("sh"))
+      .withColumn("sig", graft.plans.MinHashSigOf.minhashSigOf(col("sh")))
+  }
+
+  /** Band keys (doc_id, band, bk, bucket) of a [[batchFrame]]: a narrow
+    * explode of its signatures through
+    * [[graft.operators.Dedup.bandKeysFromSig]], the band layout the batch
+    * LSH family uses, so store contents stay band-compatible.
+    */
+  private[streaming] def bandKeys(frame: DataFrame, numHashes: Int,
+      bands: Int): DataFrame =
+    graft.operators.Dedup.bandKeysFromSig(
+        frame.filter(col("sig").isNotNull)
+          .select(col("doc_id"), col("sig").as("_sig")),
         "doc_id", numHashes, bands)
       .withColumn("bucket", bucketOf(col("band"), col("bk")))
-    (keys, hashed)
-  }
 
   /** Start the incremental dedup: reads a streaming (doc_id, text) frame,
     * writes near-dup flags (doc_id, dup_of, jaccard) to `flagDir` and
@@ -121,23 +140,44 @@ object StreamingDedup {
   private[graft] val DocsSchema: StructType = StructType.fromDDL(
     "doc_id BIGINT, sh ARRAY<BIGINT>, dbucket BIGINT, src_batch BIGINT")
 
-  /** One micro-batch step (factored out for direct testing). */
+  /** One micro-batch step (factored out for direct testing).
+    *
+    * Job budget. Each phase runs under the job description
+    * `dedup batch N: <phase>`. The counts are for small batches at 4
+    * shuffle partitions; `StreamingDedupSpec` pins the totals:
+    *  - `census` 1: the one narrow action, which also fills the frame's
+    *    cache;
+    *  - `probe` 3: the broadcast of the batch keys, the candidates' cache
+    *    and their dbucket census;
+    *  - `flags` 6: three broadcasts, the best-match shuffle and the write;
+    *  - `docs` 2 and `keys` 2 (see [[StoreMaint.writeTree]]).
+    * That is 14 jobs for a batch that probes a store. A batch on an empty
+    * store skips `probe` and one broadcast of `flags`: 9 jobs. For a larger
+    * batch AQE may pick a shuffle join where these counts assume a
+    * broadcast.
+    */
   def processBatch(batch: DataFrame, batchId: Long, storeDir: String,
       flagDir: String, numHashes: Int, bandCount: Int,
       threshold: Double): Unit = {
     val spark = batch.sparkSession
-    val (keysDf, hashedDf) = signatures(batch, numHashes, bandCount)
-    val hashed = hashedDf.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val keys = keysDf.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    def phase[T](name: String)(body: => T): T =
+      StoreMaint.phase(spark, s"dedup batch $batchId: $name")(body)
+    // ONE cached frame per batch; the keys are a narrow explode of it
+    val frame = batchFrame(batch, numHashes)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val keys = bandKeys(frame, numHashes, bandCount)
+    val hashed = frame.select(col("doc_id"), col("sh"))
+    // the frame's shingles of the document in column `id`, as column `as`
+    def withPayload(df: DataFrame, id: String, as: String) =
+      df.join(hashed.select(col("doc_id").as(id), col("sh").as(as)), id)
     var candsCache: Option[DataFrame] = None
     try {
-      // ONE job answers all three pre-probe questions (empty?, broadcast
-      // gate, touched buckets): per-batch fixed job count is the
-      // streaming floor, so every collect here must earn its keep
-      val bucketCounts = keys.groupBy(col("bucket")).count().collect()
-      val nKeys = bucketCounts.map(_.getLong(1)).sum
+      // ONE narrow job answers all three pre-probe questions (empty?,
+      // broadcast gate, touched buckets) and fills the frame's cache:
+      // per-batch fixed job count is the streaming floor, so every
+      // collect here must earn its keep
+      val (nKeys, touched) =
+        phase("census")(StoreMaint.bucketCensus(keys, "bucket", StoreBuckets))
       if (nKeys == 0) return
       // candidate pairs: new-vs-store (store doc wins as dup_of) + new-vs-new.
       // Both subtrees are checked, so an interrupted compaction swap of
@@ -145,15 +185,13 @@ object StreamingDedup {
       // keys never exist without them
       val vsStore =
         if (StoreMaint.exists(spark, s"$storeDir/docs") &&
-            StoreMaint.exists(spark, s"$storeDir/keys")) {
-          // the batch's touched buckets: ≤ min(|batch|·bands, B) values —
-          // bounded by StoreBuckets, safe to collect, and as a literal isin
-          // a Parquet pushed filter that skips bucket ranges at the source
-          val touched = bucketCounts.map(_.getLong(0))
-          // only rows ORIGINATING strictly earlier (src_batch survives
-          // compaction): a replayed batch must not probe its own (failed)
-          // prior write, and a late replay issued after later batches
-          // committed must not see them either
+            StoreMaint.exists(spark, s"$storeDir/keys")) phase("probe") {
+          // the batch's touched buckets (≤ StoreBuckets values) as a
+          // literal isin: a Parquet pushed filter that skips bucket ranges
+          // at the source. Only rows ORIGINATING strictly earlier
+          // (src_batch survives compaction): a replayed batch must not
+          // probe its own (failed) prior write, and a late replay issued
+          // after later batches committed must not see them either
           val storeKeys = spark.read.schema(KeysSchema).parquet(s"$storeDir/keys")
             .filter(col("src_batch") < batchId)
             .filter(col("bucket").isin(touched: _*))
@@ -166,33 +204,42 @@ object StreamingDedup {
           val probe =
             if (nKeys <= maxBroadcastKeyRows) broadcast(batchKeys)
             else batchKeys
+          // no distinct: a pair that meets in several bands repeats, and
+          // the flags' best-match aggregate collapses the repeats
           val cands = probe.join(storeKeys, Seq("band", "bk"))
             .filter(col("doc_id") =!= col("dup_of"))
-            .select(col("doc_id"), col("dup_of")).distinct()
+            .select(col("doc_id"), col("dup_of"))
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           candsCache = Some(cands)
           // verify fetch: shingles ONLY for store docs that appear as
-          // candidates — dbuckets of the candidate dup_ofs are again ≤ B
-          // distinct values, pushed to the doc tree's scan the same way
-          val dbuckets = cands.select(dbucketOf(col("dup_of")).as("db"))
-            .distinct().collect().map(_.getLong(0))
-          val storeDocs = spark.read.schema(DocsSchema).parquet(s"$storeDir/docs")
-            .filter(col("src_batch") < batchId)
-            .filter(col("dbucket").isin(dbuckets: _*))
-            .select(col("doc_id").as("dup_of"), col("sh").as("sh_b"))
-          Some(cands.join(storeDocs, "dup_of").join(hashed, "doc_id"))
+          // candidates — their dbuckets are again ≤ B values, pushed to
+          // the doc tree's scan the same way; the census fills the
+          // candidates' cache in the same job
+          val (nCands, dbuckets) = StoreMaint.bucketCensus(
+            cands.select(dbucketOf(col("dup_of")).as("db")), "db", StoreBuckets)
+          if (nCands == 0) None
+          else {
+            val storeDocs = spark.read.schema(DocsSchema).parquet(s"$storeDir/docs")
+              .filter(col("src_batch") < batchId)
+              .filter(col("dbucket").isin(dbuckets: _*))
+              .select(col("doc_id").as("dup_of"), col("sh").as("sh_b"))
+            Some(withPayload(cands.join(storeDocs, "dup_of"), "doc_id", "sh"))
+          }
         } else None
-      // within-batch: later id is the duplicate. Key self-join first,
-      // shingles joined back per side only for surviving pairs.
+      // within-batch: later id is the duplicate. A key self-join whose
+      // streamed side is exploded from the frame with each document's
+      // shingles riding along, so only the dup_of side is joined back.
+      // No distinct, as for the store candidates
       val newKeys = keys.select(col("doc_id").as("dup_of"), col("band"),
         col("bk"))
-      val vsNew = keys.select(col("doc_id"), col("band"), col("bk"))
+      val vsNew = withPayload(graft.operators.Dedup.bandKeysFromSig(
+          frame.filter(col("sig").isNotNull)
+            .select(struct(col("doc_id"), col("sh")).as("_doc"),
+              col("sig").as("_sig")), "_doc", numHashes, bandCount)
         .join(newKeys, Seq("band", "bk"))
-        .filter(col("doc_id") > col("dup_of"))
-        .select(col("doc_id"), col("dup_of")).distinct()
-        .join(hashed, "doc_id")
-        .join(hashed.select(col("doc_id").as("dup_of"), col("sh").as("sh_b")),
-          "dup_of")
+        .filter(col("_doc.doc_id") > col("dup_of"))
+        .select(col("_doc.doc_id").as("doc_id"), col("_doc.sh").as("sh"),
+          col("dup_of")), "dup_of", "sh_b")
       val jac = size(array_intersect(col("sh"), col("sh_b"))).cast("double") /
         size(array_union(col("sh"), col("sh_b")))
       // best match per doc: max jaccard, ties to the smaller dup_of — kept
@@ -207,21 +254,20 @@ object StreamingDedup {
       // whole-subdir overwrite per batch id: replay rewrites, never appends
       // (and an empty flag batch still lands a schema'd file, so the flag
       // dir is always readable)
-      flagged.write.mode(SaveMode.Overwrite)
-        .parquet(s"$flagDir/batch_id=$batchId")
+      phase("flags")(flagged.write.mode(SaveMode.Overwrite)
+        .parquet(s"$flagDir/batch_id=$batchId"))
       // docs BEFORE keys: a posting is never visible without its payload,
       // so a crash between the two writes leaves a store that replays
-      StoreMaint.writeTree(hashed.select(col("doc_id"), col("sh"))
+      phase("docs")(StoreMaint.writeTree(hashed
         .withColumn("dbucket", dbucketOf(col("doc_id")))
         .withColumn("src_batch", lit(batchId)),
-        "dbucket", s"$storeDir/docs/batch_id=$batchId")
-      StoreMaint.writeTree(
-        keys.select(col("doc_id"), col("band"), col("bk"), col("bucket"))
-          .withColumn("src_batch", lit(batchId)),
-        "bucket", s"$storeDir/keys/batch_id=$batchId")
+        "dbucket", StoreBuckets, s"$storeDir/docs/batch_id=$batchId"))
+      phase("keys")(StoreMaint.writeTree(
+        keys.withColumn("src_batch", lit(batchId)),
+        "bucket", StoreBuckets, s"$storeDir/keys/batch_id=$batchId"))
     } finally {
       candsCache.foreach(_.unpersist())
-      keys.unpersist(); hashed.unpersist(): Unit
+      frame.unpersist(): Unit
     }
   }
 
@@ -240,9 +286,11 @@ object StreamingDedup {
     * safe).
     */
   def compactStore(spark: SparkSession, storeDir: String): Unit = {
-    StoreMaint.compactTree(spark, s"$storeDir/keys", KeysSchema, "bucket",
-      Seq("doc_id", "band", "bk"))
-    StoreMaint.compactTree(spark, s"$storeDir/docs", DocsSchema, "dbucket",
-      Seq("doc_id", "sh"))
+    StoreMaint.phase(spark, "dedup compaction: keys")(
+      StoreMaint.compactTree(spark, s"$storeDir/keys", KeysSchema, "bucket",
+        StoreBuckets, Seq("doc_id", "band", "bk")))
+    StoreMaint.phase(spark, "dedup compaction: docs")(
+      StoreMaint.compactTree(spark, s"$storeDir/docs", DocsSchema, "dbucket",
+        StoreBuckets, Seq("doc_id", "sh")))
   }
 }

@@ -49,7 +49,8 @@ object StreamingSemanticDedup {
           threshold, nprobe)
         if (autoCompactBatches > 0 && StoreMaint.uncompactedBatches(
             batch.sparkSession, storeDir) >= autoCompactBatches)
-          compact(batch.sparkSession, storeDir, batch.schema("emb").dataType)
+          compact(batch.sparkSession, storeDir, batch.schema("emb").dataType,
+            centroids.size)
       }
       .start()
 
@@ -66,7 +67,9 @@ object StreamingSemanticDedup {
       centroids: Seq[(Long, Array[Double])], storeDir: String,
       flagDir: String, threshold: Double, nprobe: Int): Unit = {
     val spark = batch.sparkSession
-    if (batch.isEmpty) return
+    def phase[T](name: String)(body: => T): T =
+      StoreMaint.phase(spark, s"semantic dedup batch $batchId: $name")(body)
+    if (phase("empty")(batch.isEmpty)) return
     graft.plans.VecCosine.register(spark)
     graft.plans.VecDot.register(spark)
     val assigned = batch
@@ -81,8 +84,8 @@ object StreamingSemanticDedup {
         "doc_id", "emb", centroids, nprobe)
       // probed buckets ⊆ centroid ids (≤K values): safe to collect, and as
       // a literal isin a Parquet pushed filter that skips bucket ranges
-      val probedBuckets = probes.select(col("bucket")).distinct()
-        .collect().map(_.getLong(0))
+      val probedBuckets = phase("census")(probes.select(col("bucket"))
+        .distinct().collect().map(_.getLong(0)))
       val store =
         if (StoreMaint.exists(spark, storeDir))
           // src_batch (not the batch_id dir) is the visibility key: it
@@ -119,12 +122,12 @@ object StreamingSemanticDedup {
         .agg(max(struct(col("cos"), (-col("dup_of")).as("nd"))).as("_best"))
         .select(col("doc_id"), (-col("_best.nd")).as("dup_of"),
           col("_best.cos").as("cos"))
-      flagged.write.mode(SaveMode.Overwrite)
-        .parquet(s"$flagDir/batch_id=$batchId")
-      StoreMaint.writeTree(
+      phase("flags")(flagged.write.mode(SaveMode.Overwrite)
+        .parquet(s"$flagDir/batch_id=$batchId"))
+      phase("store")(StoreMaint.writeTree(
         assigned.select(col("doc_id"), col("bucket"), col("emb"), col("_n"))
           .withColumn("src_batch", lit(batchId)),
-        "bucket", s"$storeDir/batch_id=$batchId")
+        "bucket", centroids.size, s"$storeDir/batch_id=$batchId"))
     } finally assigned.unpersist()
   }
 
@@ -134,16 +137,23 @@ object StreamingSemanticDedup {
     * by `bucket` (atomic dir swap), so probes keep pruning at the source
     * as batches accumulate. Schedule between batches like
     * [[StreamingDedup.compactStore]] (or via `autoCompactBatches`).
+    * `k` is the number of centroids the store was built with, the bucket
+    * domain `[0, k)` the compacted files are spread over (see
+    * [[StoreMaint.writeTree]]); a different value changes only how the
+    * rows spread over the files, never which rows a probe reads.
     *
     * This entry point has no frame to take the `emb` type from, so it
     * infers the store's schema, which costs one Spark job that reads a
     * footer. The `autoCompactBatches` policy takes the type from the batch
     * and starts no such job.
     */
-  def compactStore(spark: SparkSession, storeDir: String): Unit =
-    compact(spark, storeDir, spark.read.parquet(storeDir).schema("emb").dataType)
+  def compactStore(spark: SparkSession, storeDir: String, k: Int): Unit =
+    compact(spark, storeDir,
+      spark.read.parquet(storeDir).schema("emb").dataType, k)
 
-  private def compact(spark: SparkSession, storeDir: String, emb: DataType): Unit =
-    StoreMaint.compactTree(spark, storeDir, storeSchema(emb), "bucket",
-      Seq("doc_id", "emb", "_n"))
+  private def compact(spark: SparkSession, storeDir: String, emb: DataType,
+      k: Int): Unit =
+    StoreMaint.phase(spark, "semantic dedup compaction")(
+      StoreMaint.compactTree(spark, storeDir, storeSchema(emb), "bucket", k,
+        Seq("doc_id", "emb", "_n")))
 }

@@ -40,7 +40,10 @@ object UpsertSink {
     }
     val touched = incoming.select("bucket").distinct()
       .collect().map(_.getInt(0))
-    val stored = spark.read.parquet(storeDir)
+    // the store holds the caller's rows plus the bucket partition column,
+    // so its schema is the incoming frame's: no schema-inference job
+    val stored = spark.read.schema(incoming.drop("_src").schema)
+      .parquet(storeDir)
       .filter(col("bucket").isin(touched.toSeq: _*))
       .withColumn("_src", lit(0))
     val merged = stored.unionByName(incoming)

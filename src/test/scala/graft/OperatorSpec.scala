@@ -118,6 +118,23 @@ class OperatorSpec extends AnyFunSuite {
     assert(joined.count() == 500)
   }
 
+  test("row-local minhash_sig_of equals the MinHashAgg signature; null when empty") {
+    import spark.implicits._
+    graft.plans.ShingleHashes.register(spark, n = 3)
+    graft.plans.MinHashSigOf.register(spark, 64)
+    val hashed = Sources.documents(spark, sf)
+      .select($"doc_id", graft.plans.ShingleHashes.shingleHashes($"text").as("_sh"))
+      .unionByName(Seq((-1L, Seq.empty[Long])).toDF("doc_id", "_sh"))
+    val rowLocal = hashed.select($"doc_id",
+      graft.plans.MinHashSigOf.minhashSigOf($"_sh").as("sig"))
+    val agg = Dedup.minhashSigs(hashed, "doc_id", 64)
+    val joined = rowLocal.join(agg, "doc_id")
+    assert(joined.count() == 500)
+    assert(joined.filter(!($"sig" <=> $"_sig")).count() == 0)
+    // the aggregate has no group for an empty array; the scalar gives null
+    assert(rowLocal.filter($"doc_id" === -1L).collect().map(_.isNullAt(1)).toSeq == Seq(true))
+  }
+
   test("windows: unaligned/late-drop use broadcast per-key extrema, not a skewed window") {
     import spark.implicits._
     val ev = Sources.events(spark, sf)

@@ -1,13 +1,18 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions.col
 import org.scalatest.Assertions._
 
 /** Layout checks shared by the streaming-store specs: every `batch_id=`
-  * tree is flat (no bucket directories) and range-clustered, and a probe's
-  * bucket `isin` reaches the Parquet reader as a pushed filter.
+  * tree is flat (no bucket directories), its files cover disjoint bucket
+  * ranges, and a probe's bucket `isin` reaches the Parquet reader as a
+  * pushed filter.
   */
 object StoreLayout {
 
@@ -24,6 +29,44 @@ object StoreLayout {
       s"$tree holds ${files.size} data files, limit $limit")
     val nested = files.map(_.getParentFile).filter(_ != root).distinct
     assert(nested.isEmpty, s"$tree has data files in subdirectories: $nested")
+  }
+
+  /** Runs `body` with a 64-byte advisory partition size, so that the
+    * store writers split even a tree of a few rows into several files.
+    */
+  def withSmallFiles[T](spark: SparkSession)(body: => T): T = {
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val caller = spark.conf.getOption(key)
+    spark.conf.set(key, "64b")
+    try body finally caller.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** The files of `tree` cover disjoint `bucketCol` ranges: the min/max
+    * of each file, read from its Parquet footer's row-group statistics,
+    * overlap no other file's. Returns the ranges, sorted.
+    */
+  def assertDisjointRanges(spark: SparkSession, tree: String,
+      bucketCol: String): Seq[(Long, Long)] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val files = Option(new java.io.File(tree).listFiles).toSeq.flatten
+      .filter(_.getName.endsWith(".parquet"))
+    val ranges = files.flatMap { f =>
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new Path(f.toURI), conf))
+      val stats =
+        try reader.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala
+          .filter(_.getPath.toDotString == bucketCol).map(_.getStatistics))
+        finally reader.close()
+      val held = stats.filter(s => s.hasNonNullValue)
+      if (held.isEmpty) None // an empty tree's schema-only file
+      else Some((held.map(_.genericGetMin.asInstanceOf[Number].longValue).min,
+        held.map(_.genericGetMax.asInstanceOf[Number].longValue).max))
+    }.sorted
+    assert(ranges.nonEmpty, s"$tree: no file holds a $bucketCol value")
+    ranges.zip(ranges.drop(1)).foreach { case ((_, hi), (lo, _)) =>
+      assert(hi < lo, s"$tree: overlapping $bucketCol ranges $ranges")
+    }
+    ranges
   }
 
   /** A probe of `store` on `bucketCol isin values` carries the predicate in

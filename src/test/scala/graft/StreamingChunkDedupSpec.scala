@@ -135,4 +135,19 @@ class StreamingChunkDedupSpec extends AnyFunSuite {
     StreamingChunkDedup.processBatch(b((2L, textB)), 1L, store, flags)
     assert(rep(2L)._2 == 0L, s"replayed doc 2 must stay novel: ${rep(2L)}")
   }
+
+  test("per-batch and compacted trees cover disjoint hb ranges") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("chunkdedup_ranges").toString
+    val (store, flags) = (s"$dir/store", s"$dir/flags")
+    val text = (1 to 40).map(i => s"sentence number $i of a long document " +
+      s"whose content defined chunks land in many hash buckets $i").mkString(" ")
+    StoreLayout.withSmallFiles(spark) {
+      StreamingChunkDedup.processBatch(Seq((1L, text)).toDF("doc_id", "text"), 0L, store, flags)
+      StreamingChunkDedup.processBatch(Seq((2L, text.reverse)).toDF("doc_id", "text"), 1L, store, flags)
+      StoreLayout.assertDisjointRanges(spark, s"$store/batch_id=1", "hb")
+      StreamingChunkDedup.compactStore(spark, store)
+    }
+    StoreLayout.assertDisjointRanges(spark, s"$store/batch_id=-1", "hb")
+  }
 }

@@ -1,6 +1,9 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
@@ -239,6 +242,119 @@ class StreamingDedupSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == Set((3L, 1L)), got.toString)
     } finally q.stop()
+  }
+
+  test("per-batch and compacted trees cover disjoint bucket ranges") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_ranges").toString
+    val store = base + "/store"
+    def batch(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+    val trees = Seq("keys" -> "bucket", "docs" -> "dbucket")
+    StoreLayout.withSmallFiles(spark) {
+      StreamingDedup.processBatch(batch((1L, a), (2L, b), (4L, c)), 0L, store, base + "/flags", 64, 16, 0.5)
+      StreamingDedup.processBatch(batch((3L, aDup), (5L, c + " too")), 1L, store, base + "/flags", 64, 16, 0.5)
+      for ((sub, b) <- trees)
+        StoreLayout.assertDisjointRanges(spark, s"$store/$sub/batch_id=1", b)
+      StreamingDedup.compactStore(spark, store)
+    }
+    for ((sub, b) <- trees)
+      StoreLayout.assertDisjointRanges(spark, s"$store/$sub/batch_id=-1", b)
+  }
+
+  /** The job description of every Spark job that `body` starts, counted
+    * by a listener under a job group of its own. Listener events arrive in
+    * order, so once a marker job run after `body` is seen, every job of
+    * `body` has been counted. Also checks that `body` leaves the caller's
+    * job description in place.
+    */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val group = s"census-${System.nanoTime}"
+    val jobs = new ConcurrentLinkedQueue[String]
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val g = Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        if (g == group) jobs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+        else if (g == s"$group-marker") markerSeen.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "job census")
+      try {
+        body
+        assert(sc.getLocalProperty("spark.job.description") == "job census")
+      } finally {
+        sc.setJobGroup(s"$group-marker", "marker")
+        spark.range(1).count()
+        sc.clearJobGroup()
+      }
+      assert(markerSeen.await(30, TimeUnit.SECONDS), "marker job never seen")
+      jobs.asScala.toSeq
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("job budget: a batch on an empty store, a probing batch, a compaction") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_jobs").toString
+    val (store, flags) = (base + "/store", base + "/flags")
+    def batch(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+    def step(rows: Seq[(Long, String)], id: Long) = jobsOf(
+      StreamingDedup.processBatch(batch(rows: _*), id, store, flags, 64, 16, 0.5))
+    // warm-up on a store of its own, so code generation and first-use
+    // class loading do not count against the budget
+    StreamingDedup.processBatch(batch((1L, a)), 0L, base + "/warm", base + "/wf", 64, 16, 0.5)
+    StreamingDedup.processBatch(batch((2L, aDup)), 1L, base + "/warm", base + "/wf", 64, 16, 0.5)
+    val emptyStore = step(Seq((1L, a), (2L, b)), 0L)
+    val probing = step(Seq((3L, aDup), (4L, c), (5L, c)), 1L)
+    val compaction = jobsOf(StreamingDedup.compactStore(spark, store))
+    val counts = Seq(emptyStore, probing, compaction).map(_.size)
+    info(s"jobs: empty store, probing, compaction: $counts")
+    assert(counts(0) <= 9 && counts(1) <= 14 && counts(2) <= 6,
+      s"jobs: empty store, probing, compaction: $counts")
+    // every job is named by its phase
+    assert(probing.toSet == Seq("census", "probe", "flags", "docs", "keys")
+      .map(p => s"dedup batch 1: $p").toSet, probing)
+    assert(emptyStore.toSet == Seq("census", "flags", "docs", "keys")
+      .map(p => s"dedup batch 0: $p").toSet, emptyStore)
+    assert(compaction.toSet == Set("dedup compaction: keys", "dedup compaction: docs"),
+      compaction)
+    val got = spark.read.parquet(flags)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(got == Set((3L, 1L), (5L, 4L)), got.toString)
+  }
+
+  test("a batch that repeats a doc_id flags and stores as the unrepeated batch") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_repeat").toString
+    def batch(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+    // the same two batches, once with repeated rows (an upstream replay
+    // of a row inside one micro-batch) and once without
+    def run(dir: String, repeat: Boolean) = {
+      val r = if (repeat) 2 else 1
+      StreamingDedup.processBatch(
+        batch(Seq.fill(r)(1L -> a) ++ Seq(2L -> b): _*), 0L,
+        s"$dir/store", s"$dir/flags", 64, 16, 0.5)
+      StreamingDedup.processBatch(
+        batch(Seq.fill(r)(3L -> aDup) ++ Seq.fill(r)(4L -> c) ++ Seq(5L -> c): _*),
+        1L, s"$dir/store", s"$dir/flags", 64, 16, 0.5)
+      val flags = spark.read.parquet(s"$dir/flags").collect().toSeq
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+      val keys = spark.read.parquet(s"$dir/store/keys").collect().toSet
+      val docs = spark.read.parquet(s"$dir/store/docs").collect().toSeq
+      (flags, keys, docs)
+    }
+    val (flags, keys, docs) = run(base + "/repeated", repeat = true)
+    val (flags1, keys1, docs1) = run(base + "/once", repeat = false)
+    // one flag per flagged document, however often its row repeats
+    assert(flags.sorted == flags1.sorted, s"$flags vs $flags1")
+    assert(flags.map(f => (f._1, f._2, f._4)).sorted ==
+      Seq((3L, 1L, 1), (5L, 4L, 1)), flags.toString)
+    assert(keys == keys1)
+    // the docs tree keeps one payload row per input row
+    assert(docs.map(_.getLong(0)).sorted == Seq(1L, 1L, 2L, 3L, 3L, 4L, 4L, 5L))
+    assert(docs.toSet == docs1.toSet)
   }
 
   test("dropDuplicatesWithinWatermark: exact streaming dedup matches batch distinct") {

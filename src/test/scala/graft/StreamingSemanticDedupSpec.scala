@@ -59,7 +59,7 @@ class StreamingSemanticDedupSpec extends AnyFunSuite {
       store, s"$base/flags", 0.98, 2)
     val declared = StreamingSemanticDedup.storeSchema(batch().schema("emb").dataType)
     assert(spark.read.parquet(s"$store/batch_id=0").schema == declared)
-    StreamingSemanticDedup.compactStore(spark, store)
+    StreamingSemanticDedup.compactStore(spark, store, cents.size)
     assert(spark.read.parquet(s"$store/batch_id=-1").schema == declared)
     assert(spark.read.schema(declared).parquet(store).schema ==
       spark.read.parquet(store).schema)
@@ -83,7 +83,7 @@ class StreamingSemanticDedupSpec extends AnyFunSuite {
     assert(spark.read.parquet(store).drop("emb").collect().toSet == storeOnce)
     assert(spark.read.parquet(s"$base/flags").collect().toSet == flagsOnce)
     // compaction preserves content and keeps the bucket layout
-    StreamingSemanticDedup.compactStore(spark, store)
+    StreamingSemanticDedup.compactStore(spark, store, cents.size)
     assert(spark.read.parquet(store).select("doc_id").distinct().count() == 3)
     // per-batch and compacted trees are flat, range-clustered file sets,
     // and a probe restricted to bucket 0 pushes its predicate to the scan
@@ -95,5 +95,21 @@ class StreamingSemanticDedupSpec extends AnyFunSuite {
     val flags2 = spark.read.parquet(s"$base/flags")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(flags2.contains((20L, 1L)), flags2.toString)
+  }
+
+  test("per-batch and compacted trees cover disjoint bucket ranges") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_semdedup_ranges").toString
+    val store = s"$base/store"
+    def batch(rows: (Long, Array[Float])*) = rows.toDF("doc_id", "emb")
+    StoreLayout.withSmallFiles(spark) {
+      StreamingSemanticDedup.processBatch(batch((1L, a), (2L, b)), 0L, cents,
+        store, s"$base/flags", 0.98, 2)
+      StreamingSemanticDedup.processBatch(batch((3L, c), (4L, b), (5L, a)), 1L, cents,
+        store, s"$base/flags", 0.98, 2)
+      StoreLayout.assertDisjointRanges(spark, s"$store/batch_id=1", "bucket")
+      StreamingSemanticDedup.compactStore(spark, store, cents.size)
+    }
+    StoreLayout.assertDisjointRanges(spark, s"$store/batch_id=-1", "bucket")
   }
 }
