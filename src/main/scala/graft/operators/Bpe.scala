@@ -42,16 +42,15 @@ object Bpe {
     */
   private[graft] val VocabGate = 2000000
 
-  /** Collect the (word, cnt) histogram when it fits [[VocabGate]] —
-    * `limit(gate+1)` returns the complete histogram iff it is within
-    * the gate (one job, also materializes the persisted frame).
+  /** Collect the (word, cnt) histogram when it fits [[VocabGate]] (one
+    * job, [[Gate.collectWithin]]). The histogram is probed unpersisted:
+    * only the past-the-gate loops read it again, and they persist their
+    * own spelled form of it.
     */
-  private def collectHist(hist: DataFrame): Option[Array[(String, Long)]] = {
-    val rows = hist.limit(VocabGate + 1).collect()
-    if (rows.length <= VocabGate)
-      Some(rows.map(r => (r.getString(0), r.getLong(1))))
-    else None
-  }
+  private def collectHist(hist: DataFrame,
+      site: String): Option[Array[(String, Long)]] =
+    Gate.collectWithin(hist, VocabGate, site)
+      .map(_.map(r => (r.getString(0), r.getLong(1))))
 
   /** The local merge loop: identical semantics to the distributed form —
     * adjacent-pair counts weighted by word frequency (overlapping pairs
@@ -108,18 +107,15 @@ object Bpe {
     val spark = docs.sparkSession
     import spark.implicits._
     val histW = wordHist(docs, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      collectHist(histW) match {
-        case Some(words) =>
-          val (merges, _) = localMergeLoop(words, nMerges,
-            collectStages = false)
-          spark.createDataFrame(merges)
-            .toDF("round", "pair", "merged", "cnt")
-            .orderBy($"round")
-        case None => trainMergesShuffle(histW, nMerges)
-      }
-    } finally { histW.unpersist(): Unit }
+    collectHist(histW, "bpe merges") match {
+      case Some(words) =>
+        val (merges, _) = localMergeLoop(words, nMerges,
+          collectStages = false)
+        spark.createDataFrame(merges)
+          .toDF("round", "pair", "merged", "cnt")
+          .orderBy($"round")
+      case None => trainMergesShuffle(histW, nMerges)
+    }
   }
 
   /** Past-the-gate distributed loop (unchanged shape): per round one
@@ -172,22 +168,18 @@ object Bpe {
     val spark = docs.sparkSession
     import spark.implicits._
     val histW = wordHist(docs, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      collectHist(histW) match {
-        case Some(words) =>
-          // same local loop; the curve is Σ cnt·|symbols| per stage
-          val (_, stages) = localMergeLoop(words, nMerges)
-          val curve = stages.zipWithIndex.map { case (stage, i) =>
-            (i.toLong, stage.map { case (s, c) =>
-              c * (s.count(_ == ' ') + 1L) }.sum)
-          }.toSeq
-          return spark.createDataFrame(curve)
-            .toDF("stage", "n_symbols").orderBy($"stage")
-        case None => ()
-      }
-      compressionCurveShuffle(histW, nMerges)
-    } finally { histW.unpersist(): Unit }
+    collectHist(histW, "bpe curve") match {
+      case Some(words) =>
+        // same local loop; the curve is Σ cnt·|symbols| per stage
+        val (_, stages) = localMergeLoop(words, nMerges)
+        val curve = stages.zipWithIndex.map { case (stage, i) =>
+          (i.toLong, stage.map { case (s, c) =>
+            c * (s.count(_ == ' ') + 1L) }.sum)
+        }.toSeq
+        spark.createDataFrame(curve)
+          .toDF("stage", "n_symbols").orderBy($"stage")
+      case None => compressionCurveShuffle(histW, nMerges)
+    }
   }
 
   /** Past-the-gate distributed curve loop (unchanged shape). */

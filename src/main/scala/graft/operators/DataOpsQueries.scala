@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions._
 import graft.sources.Sources
@@ -115,6 +115,29 @@ object DataOpsQueries {
       .orderBy($"doc_sub", $"doc_sup")
   }
 
+  /** The recall report of an eval, one row: `names` = (exact pairs, pairs
+    * the evaluated arm found, exact pairs it missed), counted with
+    * multiplicity over the non-null `keys`. ONE aggregate pass: both pair
+    * sets are tagged, unioned and summed per pair — one shuffle and one
+    * global aggregate, where three count aggregates and a left anti-join
+    * ran four shuffles and three global aggregates, for the same counts.
+    */
+  private def recallCounts(exact: DataFrame, found: DataFrame, keys: Seq[String],
+      names: (String, String, String)): DataFrame = {
+    val k = keys.map(col)
+    exact.select(k :+ lit(1L).as("_e") :+ lit(0L).as("_f"): _*)
+      .unionAll(found.select(k :+ lit(0L).as("_e") :+ lit(1L).as("_f"): _*))
+      .groupBy(k: _*).agg(sum(col("_e")).as("_e"), sum(col("_f")).as("_f"))
+      .agg(coalesce(sum(col("_e")), lit(0L)).as(names._1),
+        coalesce(sum(col("_f")), lit(0L)).as(names._2),
+        coalesce(sum(when(col("_f") === 0L, col("_e"))), lit(0L)).as(names._3))
+  }
+
+  /** Estimated recall (nExact - nMissed) / nExact; null without exact pairs. */
+  private def recallEst(nExact: Column, nMissed: Column): Column =
+    when(nExact === 0, lit(null).cast("double"))
+      .otherwise((nExact - nMissed).cast("double") / nExact)
+
   /** Banded-containment recall measurement under the deterministic 25%
     * id-hash sample — the q_minhash_eval_sampled protocol: both arms run
     * inside the sample (the exact arm's quadratic candidate mass drops
@@ -135,17 +158,9 @@ object DataOpsQueries {
     // Pinned by ArmOverlapSpec (the r15 race in OPTIMIZATION_r15.md).
     val (exact0, banded0) = Dedup.containmentEvalArms(docs, "doc_id", "sh",
       num = 4, den = 5, preHashed = true, bandedQueryCap = Some(8))
-    val exact = exact0.select($"doc_sub", $"doc_sup")
-    val banded = banded0.select($"doc_sub", $"doc_sup")
-    val nE = exact.agg(count(lit(1)).as("n_exact_sample"))
-    val nB = banded.agg(count(lit(1)).as("n_banded_sample"))
-    val nM = exact.join(banded, Seq("doc_sub", "doc_sup"), "left_anti")
-      .agg(count(lit(1)).as("n_missed_sample"))
-    nE.crossJoin(nB).crossJoin(nM)
-      .select($"n_exact_sample", $"n_banded_sample", $"n_missed_sample",
-        when($"n_exact_sample" === 0, lit(null).cast("double"))
-          .otherwise(($"n_exact_sample" - $"n_missed_sample").cast("double") /
-            $"n_exact_sample").as("recall_est"))
+    recallCounts(exact0, banded0, Seq("doc_sub", "doc_sup"),
+      ("n_exact_sample", "n_banded_sample", "n_missed_sample"))
+      .withColumn("recall_est", recallEst($"n_exact_sample", $"n_missed_sample"))
   }
 
   /** LSH containment — the corpus-scale production arm for DENSE-df
@@ -172,17 +187,9 @@ object DataOpsQueries {
     // note in [[qContainmentEvalSampled]]
     val (exact0, lsh0) = Dedup.containmentEvalArms(docs, "doc_id", "sh",
       num = 4, den = 5, preHashed = true, bandedQueryCap = None)
-    val exact = exact0.select($"doc_sub", $"doc_sup")
-    val lsh = lsh0.select($"doc_sub", $"doc_sup")
-    val nE = exact.agg(count(lit(1)).as("n_exact_sample"))
-    val nB = lsh.agg(count(lit(1)).as("n_lsh_sample"))
-    val nM = exact.join(lsh, Seq("doc_sub", "doc_sup"), "left_anti")
-      .agg(count(lit(1)).as("n_missed_sample"))
-    nE.crossJoin(nB).crossJoin(nM)
-      .select($"n_exact_sample", $"n_lsh_sample", $"n_missed_sample",
-        when($"n_exact_sample" === 0, lit(null).cast("double"))
-          .otherwise(($"n_exact_sample" - $"n_missed_sample").cast("double") /
-            $"n_exact_sample").as("recall_est"))
+    recallCounts(exact0, lsh0, Seq("doc_sub", "doc_sup"),
+      ("n_exact_sample", "n_lsh_sample", "n_missed_sample"))
+      .withColumn("recall_est", recallEst($"n_exact_sample", $"n_missed_sample"))
   }
 
   def qDedupMinhash(s: SparkSession, dir: String): DataFrame = {
@@ -544,18 +551,15 @@ object DataOpsQueries {
     // arms OVERLAPPED (r16) — compiles/persists serialized under
     // Dedup.planLock, execution concurrent; the arms share no cached
     // frame (raw vs sorted shingle projections differ). See the safety
-    // note in [[qContainmentEvalSampled]].
+    // note in [[qContainmentEvalSampled]]. The LSH plan is lazy: its
+    // checkpoint runs it inside the overlap, compiled under the lock.
     val (lsh0, exact0) = Par.both(
-      Dedup.minhashLshPairs(docs, "doc_id", "sh",
-        numHashes = 64, bands = 16, threshold = 0.5, preHashed = true),
+      Dedup.lockedCheckpoint(Dedup.minhashLshPairs(docs, "doc_id", "sh",
+        numHashes = 64, bands = 16, threshold = 0.5, preHashed = true)),
       Dedup.jaccardPairs(docs, "doc_id", "sh", Seq.empty, 0.5,
         preHashed = true))
-    val lsh = lsh0.select($"doc_a", $"doc_b")
-    val exact = exact0.select($"doc_a", $"doc_b")
-    val missed = exact.join(lsh, Seq("doc_a", "doc_b"), "left_anti")
-    exact.agg(count(lit(1)).as("n_exact"))
-      .crossJoin(lsh.agg(count(lit(1)).as("n_lsh")))
-      .crossJoin(missed.agg(count(lit(1)).as("n_missed")))
+    recallCounts(exact0, lsh0, Seq("doc_a", "doc_b"),
+      ("n_exact", "n_lsh", "n_missed"))
   }
 
   /** SAMPLED recall evaluation — the 100 TB form of [[qMinhashEval]]. The
@@ -575,23 +579,17 @@ object DataOpsQueries {
     val docs = withHashedShingles(s, dir)
     val sampled = docs.filter(idSample($"doc_id"))
     // arms OVERLAPPED (r16) — see the safety note in
-    // [[qContainmentEvalSampled]]
+    // [[qContainmentEvalSampled]]; the lazy LSH plan runs inside the
+    // overlap through its checkpoint (see [[qMinhashEval]])
     val (lsh0, exact0) = Par.both(
-      Dedup.minhashLshPairs(docs, "doc_id", "sh",
-        numHashes = 64, bands = 16, threshold = 0.5, preHashed = true),
+      Dedup.lockedCheckpoint(Dedup.minhashLshPairs(docs, "doc_id", "sh",
+        numHashes = 64, bands = 16, threshold = 0.5, preHashed = true)),
       Dedup.jaccardPairs(sampled, "doc_id", "sh", Seq.empty, 0.5,
         preHashed = true))
-    val lsh = lsh0.select($"doc_a", $"doc_b")
-      .filter(idSample($"doc_a") && idSample($"doc_b"))
-    val exact = exact0.select($"doc_a", $"doc_b")
-    val missed = exact.join(lsh, Seq("doc_a", "doc_b"), "left_anti")
-    exact.agg(count(lit(1)).as("n_exact_sample"))
-      .crossJoin(lsh.agg(count(lit(1)).as("n_lsh_sample")))
-      .crossJoin(missed.agg(count(lit(1)).as("n_missed_sample")))
-      .withColumn("recall_est",
-        when($"n_exact_sample" === 0, lit(null).cast("double"))
-          .otherwise(($"n_exact_sample" - $"n_missed_sample").cast("double") /
-            $"n_exact_sample"))
+    val lsh = lsh0.filter(idSample($"doc_a") && idSample($"doc_b"))
+    recallCounts(exact0, lsh, Seq("doc_a", "doc_b"),
+      ("n_exact_sample", "n_lsh_sample", "n_missed_sample"))
+      .withColumn("recall_est", recallEst($"n_exact_sample", $"n_missed_sample"))
   }
 
   /** Vocabulary-coverage curve (the tokenizer-design metric): rank terms

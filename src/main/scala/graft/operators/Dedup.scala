@@ -1124,18 +1124,6 @@ object Dedup {
             col(s"raw_${(i + j) % numHashes}")): _*).as(s"mh_$i")): _*)
   }
 
-  /** LSH candidate pairs: band the signature, bucket-join on
-    * (band, band-slice), dedup the bare id pairs, then verify with exact
-    * Jaccard on the hashed shingle sets. Only ids + band slices travel
-    * through the band shuffle; shingle arrays are joined back just for the
-    * surviving pairs.
-    *
-    * `hashFn` defaults to xxhash64 (fast path); pass
-    * [[graft.functions.portableHash64]] to make the full chain
-    * reproducible in an ANSI-SQL oracle (band buckets are compared as raw
-    * signature slices, not engine-private hashes, so candidate sets are
-    * provably identical across engines).
-    */
   /** OPH MinHash signature → exploded (idCol, band, bk) band-key rows for
     * a pre-hashed (idCol, _sh: array<bigint>) frame. Shared by the batch
     * LSH pairs and the incremental streaming dedup so their stores stay
@@ -1172,39 +1160,62 @@ object Dedup {
       .select(col(idCol), col("_band.band"), col("_band.bk"))
   }
 
+  /** MinHash-LSH near-dup pairs (doc_a < doc_b, jaccard) at Jaccard >=
+    * `threshold`: OPH signatures banded into (band, slice) keys, a bucket
+    * self-join on the keys, the distinct candidate id pairs, then exact
+    * Jaccard on the hashed shingle sets. Only ids + band slices travel
+    * through the band shuffle; shingle arrays are joined back just for
+    * the candidates.
+    *
+    * The plan is LAZY: building it starts no Spark job, persists nothing
+    * and checkpoints nothing; the caller's action runs it. Signatures are
+    * computed row by row ([[graft.plans.MinHashSigOf]], the row-local form
+    * of [[graft.plans.MinHashAgg]]), so the chain has no signature
+    * aggregate: each side of the band self-join signs the documents it
+    * scans, which costs less than the job that materialised them once.
+    * The two verify sides share one exchange. A `doc_id` that
+    * occurs in several rows is signed per row, as the streaming dedup
+    * does, where the aggregate form merged its rows into one signature;
+    * callers pass one row per document. A row with no shingles has a null
+    * signature, so it pairs with nothing, as before.
+    *
+    * preHashed: `shingleCol` is already a distinct array<bigint> (e.g. the
+    * native graft.plans.ShingleHashes one-pass form); otherwise each
+    * shingle is hashed with `hashFn`, xxhash64 by default (fast path);
+    * pass [[graft.functions.portableHash64]] to make the full chain
+    * reproducible in an ANSI-SQL oracle (band buckets are compared as raw
+    * signature slices, not engine-private hashes, so candidate sets are
+    * provably identical across engines).
+    */
   def minhashLshPairs(docs: DataFrame, idCol: String, shingleCol: String,
       numHashes: Int, bands: Int, threshold: Double,
       hashFn: Column => Column = xxhash64(_),
       preHashed: Boolean = false): DataFrame = {
-    // preHashed: shingleCol is already a distinct array<bigint> (e.g. the
-    // native graft.plans.ShingleHashes one-pass form)
-    val hashed = lockedPersist(
+    graft.plans.MinHashSigOf.register(docs.sparkSession, numHashes)
+    val hashed =
       if (preHashed) docs.select(col(idCol), col(shingleCol).as("_sh"))
       else docs.select(col(idCol),
-        array_distinct(transform(col(shingleCol), s => hashFn(s))).as("_sh")))
-    try {
-      // one checkpointed signature pass (r16, same fix as the containment
-      // LSH arm): the band self-join's two sides otherwise re-run the
-      // OPH aggregate twice; bucket keys are unchanged
-      // (minhashBandKeys = bandKeysFromSig ∘ minhashSigs)
-      val banded = bandKeysFromSig(
-        lockedCheckpoint(minhashSigs(hashed, idCol, numHashes)),
-        idCol, numHashes, bands)
-      val other = banded.select(col(idCol).as(s"${idCol}_b"), col("band"), col("bk"))
-      val pairs = banded.join(other, Seq("band", "bk"))
-        .filter(col(idCol) < col(s"${idCol}_b"))
-        .select(col(idCol).as("doc_a"), col(s"${idCol}_b").as("doc_b"))
-        .distinct()
-      val jac = size(array_intersect(col("_sh"), col("_sh_b"))).cast("double") /
-        size(array_union(col("_sh"), col("_sh_b")))
-      // pairs ≪ corpus; the checkpoint frees the shingle cache
-      lockedCheckpoint(pairs
-        .join(hashed.select(col(idCol).as("doc_a"), col("_sh")), "doc_a")
-        .join(hashed.select(col(idCol).as("doc_b"), col("_sh").as("_sh_b")), "doc_b")
-        .withColumn("jaccard", jac)
-        .filter(col("jaccard") >= threshold)
-        .select(col("doc_a"), col("doc_b"), col("jaccard")))
-    } finally lockedUnpersist(hashed)
+        array_distinct(transform(col(shingleCol), s => hashFn(s))).as("_sh"))
+    // no `_sig IS NOT NULL` filter: Catalyst would push it below the
+    // projection and sign every row twice; a null signature's null band
+    // slices match no key of the equi-join anyway
+    val banded = bandKeysFromSig(
+      hashed.select(col(idCol),
+        graft.plans.MinHashSigOf.minhashSigOf(col("_sh")).as("_sig")),
+      idCol, numHashes, bands)
+    val other = banded.select(col(idCol).as(s"${idCol}_b"), col("band"), col("bk"))
+    val pairs = banded.join(other, Seq("band", "bk"))
+      .filter(col(idCol) < col(s"${idCol}_b"))
+      .select(col(idCol).as("doc_a"), col(s"${idCol}_b").as("doc_b"))
+      .distinct()
+    val jac = size(array_intersect(col("_sh"), col("_sh_b"))).cast("double") /
+      size(array_union(col("_sh"), col("_sh_b")))
+    pairs
+      .join(hashed.select(col(idCol).as("doc_a"), col("_sh")), "doc_a")
+      .join(hashed.select(col(idCol).as("doc_b"), col("_sh").as("_sh_b")), "doc_b")
+      .withColumn("jaccard", jac)
+      .filter(col("jaccard") >= threshold)
+      .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
   /** Columnar SimHash over a pre-hashed token column: majority vote on the
@@ -1265,8 +1276,14 @@ object Dedup {
     // jobs; above it, the O(log diameter) distributed loop takes over.
     val longIds = pairs.schema.take(2).forall(_.dataType ==
       org.apache.spark.sql.types.LongType)
-    if (longIds && pairs.count() <= driverMaxEdges)
-      return driverUnionFind(pairs)
+    // one job gates and fetches the edges (Gate.collectWithin), so a lazy
+    // pair plan runs once inside the gate
+    if (longIds) Gate.collectWithin(
+        pairs.select(col("doc_a").cast("long"), col("doc_b").cast("long")),
+        driverMaxEdges, "dup clusters") match {
+      case Some(es) => return driverUnionFind(pairs.sparkSession, es)
+      case None => ()
+    }
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .localCheckpoint(true)
@@ -1354,9 +1371,9 @@ object Dedup {
       .toDF("id", "label")
   }
 
-  private def driverUnionFind(pairs: DataFrame): DataFrame = {
-    val es = pairs.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+  private def driverUnionFind(spark: SparkSession,
+      edges: Array[org.apache.spark.sql.Row]): DataFrame = {
+    val es = edges.map(r => (r.getLong(0), r.getLong(1)))
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
     def find(x: Long): Long = {
       var r = x
@@ -1372,7 +1389,7 @@ object Dedup {
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
     val labels = parent.keysIterator.map(v => (v, find(v))).toSeq
-    pairs.sparkSession.createDataFrame(labels).toDF("id", "label")
+    spark.createDataFrame(labels).toDF("id", "label")
   }
 
   /** The end-use of the dedup family: remove every non-representative

@@ -39,11 +39,17 @@ object Graph {
     * whole local iteration — the Rows are transient and freed after the
     * copy; the arrays are ~16 B/edge.
     */
-  private[graft] def collectEdgePairs(e: DataFrame): (Array[Long], Array[Long]) = {
-    // Callers pass whatever integral type the id columns carry (int edge
-    // ids are common); getLong on an IntegerType row slot throws, so
-    // normalize to long here rather than at every entry point.
-    val rows = e.select(e.columns.map(c => col(c).cast("long")): _*).collect()
+  private[graft] def collectEdgePairs(e: DataFrame): (Array[Long], Array[Long]) =
+    edgeArrays(asLongEdges(e).collect())
+
+  // Callers pass whatever integral type the id columns carry (int edge
+  // ids are common); getLong on an IntegerType row slot throws, so
+  // normalize to long here rather than at every entry point.
+  private def asLongEdges(e: DataFrame): DataFrame =
+    e.select(e.columns.map(c => col(c).cast("long")): _*)
+
+  private def edgeArrays(rows: Array[org.apache.spark.sql.Row])
+      : (Array[Long], Array[Long]) = {
     val n = rows.length
     val src = new Array[Long](n)
     val dst = new Array[Long](n)
@@ -74,39 +80,21 @@ object Graph {
     java.util.Arrays.copyOf(all, w)
   }
 
-  /** ONE-JOB gate + collect (r15): fetch up to `gate + 1` edges via
-    * `limit` — if the result fits the gate it IS the complete edge list
-    * (the local paths' input), collected in the same job that would
-    * otherwise only have counted; past the gate, `CollectLimit`'s
-    * incremental partition execution stops after ~gate rows, so the
-    * probe stays cheap on a huge graph and the caller falls back to the
-    * shuffle formulation.
+  /** The edge list of `e` as two primitive arrays when it has at most
+    * [[EdgeGate]] edges, else None ([[Gate.collectWithin]]: one job that
+    * both gates and fetches). Callers probe the unpersisted edge frame
+    * and persist it only on the past-the-gate fallback, which is the only
+    * path that reads it again.
     *
     * DRIVER HEAP BUDGET (r15 verdict item 7): the collect's transient Row
     * array is the peak — (gate+1) GenericRows of two boxed longs is
     * ~80-100 B/edge ≈ 300 MB at the 3M gate, on top of the 48 MB
     * primitive target arrays; both are freed (rows) or retained (arrays)
-    * before the local algorithms allocate their CSR structures. Callers
-    * persist `e` BEFORE probing (and unpersist on the local path), so the
-    * past-the-gate fallback reuses the probe's computed partitions
-    * instead of recomputing the distinct from scratch (r15 ADVICE).
+    * before the local algorithms allocate their CSR structures.
     */
   private[graft] def collectEdgesWithin(e: DataFrame,
-      gate: Long): Option[(Array[Long], Array[Long])] = {
-    val rows = e.select(e.columns.map(c => col(c).cast("long")): _*)
-      .limit((gate + 1).toInt).collect()
-    if (rows.length > gate) None
-    else {
-      val n = rows.length
-      val src = new Array[Long](n)
-      val dst = new Array[Long](n)
-      var i = 0
-      while (i < n) {
-        src(i) = rows(i).getLong(0); dst(i) = rows(i).getLong(1); i += 1
-      }
-      Some((src, dst))
-    }
-  }
+      site: String): Option[(Array[Long], Array[Long])] =
+    Gate.collectWithin(asLongEdges(e), EdgeGate, site).map(edgeArrays)
 
   /** Remap raw edge endpoints to dense indices into `ids`. Each slot is
     * an independent binary search with an exclusive write — parallel
@@ -154,23 +142,18 @@ object Graph {
       iters: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // persisted BEFORE the gate probe (r16, r15 ADVICE): the probe's
-    // CollectLimit executes the distinct's full map side either way; with
-    // the persist in place those partitions land in cache, so the
-    // past-the-gate fallback reuses them instead of recomputing the
-    // distinct from scratch. On the local path the cache is dropped
-    // unread — one ~16 B/edge columnar write during the probe job.
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // ONE-JOB gate+collect (see collectEdgesWithin): inside the gate the
-    // edge list is already in hand — no persist/count round-trip at all
-    collectEdgesWithin(e, EdgeGate) match {
+    // probe first (see collectEdgesWithin): inside the gate the edge list
+    // is already in hand and nothing was cached; only the fallback, which
+    // reads the distinct edges twice, persists them (and so pays the
+    // distinct a second time, past the gate only)
+    collectEdgesWithin(e, "pagerank") match {
       case Some((srcA, dstA)) =>
-        e.unpersist()
         return pageRankLocalCore(spark, srcA, dstA, iters)
       case None => ()
     }
+    e.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // fuse out-degree into the edge list ONCE (every src has deg ≥ 1, so
       // the inner join keeps all edges) — each iteration then needs a
@@ -286,10 +269,9 @@ object Graph {
     import spark.implicits._
     val d0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct()
-    // ONE-JOB gate+collect (see collectEdgesWithin); the local path
-    // symmetrizes in memory, so only the distinct DIRECTED list is
-    // ever fetched
-    collectEdgesWithin(d0, EdgeGate) match {
+    // probe first (see collectEdgesWithin); the local path symmetrizes
+    // in memory, so only the distinct DIRECTED list is ever fetched
+    collectEdgesWithin(d0, "label propagation") match {
       case Some((srcA, dstA)) =>
         return labelPropLocalCore(spark, srcA, dstA, iters)
       case None => ()
@@ -475,7 +457,7 @@ object Graph {
     * per order in this schema), so the quadratic per-order fan-out is a
     * constant.
     */
-  private def copurchaseEdges(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def copurchaseEdges(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     graft.plans.PairCombos.register(s)
     Sources.lineitem(s, dir)
@@ -506,20 +488,18 @@ object Graph {
     */
   def qTriangles(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // persisted BEFORE the gate probe — see the pageRank rationale
     val und = copurchaseEdges(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // ONE-JOB gate+collect (see collectEdgesWithin): inside the gate the
-    // collected list IS the edge set (count = length) — no persist /
-    // count / second-collect round-trip
-    collectEdgesWithin(und, EdgeGate) match {
+    // probe first (see collectEdgesWithin): inside the gate the collected
+    // list IS the edge set (count = length) — no count or second collect;
+    // only the fallback persists the edges it reads again
+    collectEdgesWithin(und, "triangles") match {
       case Some((srcA, dstA)) =>
-        und.unpersist()
         val (nNodes, nTriangles) = countTrianglesLocalCore(srcA, dstA)
         return Seq((nNodes, srcA.length.toLong, nTriangles))
           .toDF("n_nodes", "n_edges", "n_triangles")
       case None => ()
     }
+    und.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val nEdges = und.count()
       val deg = und.select($"src".as("n"), $"dst")
@@ -682,37 +662,70 @@ object Graph {
   def qBfsLevels(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val maxDepth = 3
-    // persisted BEFORE the gate probe — see the pageRank rationale
     val und = copurchaseEdges(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // ONE-JOB gate+collect (see collectEdgesWithin); traversal is
-    // latency-bound — three shuffle rounds on a memory-sized graph cost
-    // seconds the local walk doesn't. The local path fetches only the
-    // UNDIRECTED list and derives degrees + max-degree sources in memory.
-    val levelsLocal = collectEdgesWithin(und, EdgeGate).map {
-      case (srcA, dstA) =>
-        und.unpersist()
-        bfsLevelsLocalCore(s, srcA, dstA, maxDepth)
+    // probe first (see collectEdgesWithin); traversal is latency-bound —
+    // three shuffle rounds on a memory-sized graph cost seconds the local
+    // walk doesn't. The local path fetches only the UNDIRECTED list,
+    // derives degrees + max-degree sources in memory, and reports the
+    // per-level histogram from its arrays: the probe is its only job.
+    collectEdgesWithin(und, "bfs levels") match {
+      case Some((srcA, dstA)) =>
+        val (ids, dist) = bfsDistances(srcA, dstA, maxDepth)
+        return levelHistogramLocal(s, ids, dist, maxDepth)
+      case None => ()
     }
-    val levels = levelsLocal.getOrElse {
+    und.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val e = und.union(und.select($"dst".as("src"), $"src".as("dst")))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val e = und.union(und.select($"dst".as("src"), $"src".as("dst")))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val deg = e.groupBy($"src".as("node")).agg(count(lit(1)).as("deg"))
-          val sources = deg
-            .crossJoin(broadcast(deg.agg(max($"deg").as("max_deg"))))
-            .filter($"deg" === $"max_deg")
-            .select($"node")
-          // safe to unpersist after: every frontier is checkpointed
-          bfsLevelsShuffle(e, sources, maxDepth)
-        } finally e.unpersist()
-      } finally und.unpersist()
+        val deg = e.groupBy($"src".as("node")).agg(count(lit(1)).as("deg"))
+        val sources = deg
+          .crossJoin(broadcast(deg.agg(max($"deg").as("max_deg"))))
+          .filter($"deg" === $"max_deg")
+          .select($"node")
+        // safe to unpersist after: every frontier is checkpointed
+        levelHistogram(bfsLevelsShuffle(e, sources, maxDepth))
+      } finally e.unpersist()
+    } finally und.unpersist()
+  }
+
+  /** Per-level (dist, n_nodes, min_node, max_node) of a (node, dist)
+    * frame, ordered by dist.
+    */
+  private[graft] def levelHistogram(levels: DataFrame): DataFrame =
+    levels.groupBy(col("dist"))
+      .agg(count(lit(1)).as("n_nodes"), min(col("node")).as("min_node"),
+        max(col("node")).as("max_node"))
+      .orderBy(col("dist"))
+
+  /** [[levelHistogram]] of the local BFS, computed on the driver: `ids`
+    * ascending, so a level's first and last reached id are its min and
+    * max. Same rows and schema as the aggregate (parity spec); a local
+    * relation, so collecting it starts no job.
+    */
+  private[graft] def levelHistogramLocal(s: SparkSession, ids: Array[Long],
+      dist: Array[Int], maxDepth: Int): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val n = new Array[Long](maxDepth + 1)
+    val lo = new Array[Long](maxDepth + 1)
+    val hi = new Array[Long](maxDepth + 1)
+    var i = 0
+    while (i < ids.length) {
+      val d = dist(i)
+      if (d >= 0) {
+        if (n(d) == 0L) lo(d) = ids(i)
+        hi(d) = ids(i); n(d) += 1L
+      }
+      i += 1
     }
-    levels.groupBy($"dist")
-      .agg(count(lit(1)).as("n_nodes"), min($"node").as("min_node"),
-        max($"node").as("max_node"))
-      .orderBy($"dist")
+    val rows = (0 to maxDepth).filter(n(_) > 0L).map(d =>
+      org.apache.spark.sql.Row(d.toLong, n(d), lo(d), hi(d)))
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("dist", LongType, nullable = false),
+      StructField("n_nodes", LongType, nullable = false),
+      StructField("min_node", LongType),
+      StructField("max_node", LongType))))
   }
 
   /** Frontier-join distributed path (any graph size): per round one
@@ -748,11 +761,17 @@ object Graph {
   private[graft] def bfsLevelsLocal(und: DataFrame, maxDepth: Int): DataFrame = {
     import und.sparkSession.implicits._
     val (srcA, dstA) = collectEdgePairs(und.select($"src", $"dst"))
-    bfsLevelsLocalCore(und.sparkSession, srcA, dstA, maxDepth)
+    val (ids, dist) = bfsDistances(srcA, dstA, maxDepth)
+    und.sparkSession.createDataFrame(
+      ids.indices.collect { case i if dist(i) >= 0 => (ids(i), dist(i).toLong) })
+      .toDF("node", "dist")
   }
 
-  private def bfsLevelsLocalCore(s: SparkSession, srcA: Array[Long],
-      dstA: Array[Long], maxDepth: Int): DataFrame = {
+  /** The local BFS core: (sorted distinct node ids, distance per id),
+    * -1 for a node not reached within `maxDepth` hops.
+    */
+  private def bfsDistances(srcA: Array[Long], dstA: Array[Long],
+      maxDepth: Int): (Array[Long], Array[Int]) = {
     val m = srcA.length
     // dense remap + CSR (r15, see countTrianglesLocal): und is distinct
     // with src < dst, so the symmetrized adjacency has no duplicate
@@ -794,9 +813,7 @@ object Graph {
       }
       frontier = next; fLen = nLen
     }
-    s.createDataFrame(
-      ids.indices.collect { case i if dist(i) >= 0 => (ids(i), dist(i).toLong) })
-      .toDF("node", "dist")
+    (ids, dist)
   }
 
   /** Degree histogram of the co-purchase graph: how many nodes have each

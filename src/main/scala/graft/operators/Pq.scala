@@ -124,19 +124,28 @@ object Pq {
   }
 
   def trainBooks(coded: DataFrame, subDim: Int, m: Int, k: Int, iters: Int,
-      salt: String): Array[Seq[(Long, Array[Long])]] = {
+      salt: String, heapBytes: Long = Runtime.getRuntime.maxMemory)
+      : Array[Seq[(Long, Array[Long])]] = {
     // ONE-JOB gate+collect (see LocalCodesGate). Columns selected BY NAME
     // (r15 ADVICE): the rows are read positionally below, and the
     // distributed twin resolves by name — an explicit select pins the
     // positions so a caller passing extra/reordered columns can't
-    // silently train on the wrong slots.
-    val fetched = coded.select(col("vec_id"), col("codes"))
-      .limit(LocalCodesGate + 1).collect()
-    if (fetched.length <= LocalCodesGate)
-      localTrainBooks(
-        fetched.map(r => (r.getLong(0), r.getSeq[Long](1).toArray)),
-        subDim, m, k, iters, salt)
-    else trainBooksShuffle(coded, subDim, m, k, iters, salt)
+    // silently train on the wrong slots. BYTE guard on top of the row
+    // gate (the trainIvfCentroids rule, Gate.fitsHeap): a wide codes
+    // column is 8 B per code per row, so 200k rows of a dim-1024 code
+    // vector go to the distributed trainer instead of the driver heap.
+    // Local == distributed centroid-for-centroid (PqLocalTrainSpec), so
+    // the route never changes results.
+    Gate.collectWithin(coded.select(col("vec_id"), col("codes")),
+        LocalCodesGate, s"pq train $salt", rows => rows.isEmpty ||
+          Gate.fitsHeap(rows.length,
+            rows(0).getSeq[Long](1).length * 8L + 64L, heapBytes)) match {
+      case Some(fetched) =>
+        localTrainBooks(
+          fetched.map(r => (r.getLong(0), r.getSeq[Long](1).toArray)),
+          subDim, m, k, iters, salt)
+      case None => trainBooksShuffle(coded, subDim, m, k, iters, salt)
+    }
   }
 
   /** Past-the-gate distributed trainer (unchanged shape); package-private

@@ -10,7 +10,7 @@ import graft.sources.Sources
   * shard (4× smaller than float32, distance-preserving to ~1e-5 MSE).
   *
   * Two passes, both trivially parallel: (1) per-dimension min/max (one
-  * algebraic aggregate, 2·dim values collected — dim ≪ data); (2) a pure
+  * grouped aggregate, 2·dim values collected — dim ≪ data); (2) a pure
   * projection quantizing each vector against the broadcast-literal ranges.
   * Codes use `floor((x-min)/(max-min)·255)` clamped to 255 — floor (not
   * round) because both engines floor identically, which makes the whole
@@ -19,16 +19,25 @@ import graft.sources.Sources
 object Quantize {
 
   /** Per-dimension (min, max) of a float-array column, collected to the
-    * driver (2·dim doubles).
+    * driver (2·dim doubles). ONE narrow grouped aggregate over
+    * `posexplode` (dim groups, two aggregate columns): the former global
+    * aggregate had 2·dim columns, past `spark.sql.codegen.maxFields`, so
+    * it ran without whole-stage codegen and paid projection codegen in
+    * every task. min/max are exact, so the ranges are the same values.
     */
   def dimRanges(emb: DataFrame, vecCol: String, dim: Int): (Array[Double], Array[Double]) = {
-    val aggs = (0 until dim).flatMap { i =>
-      val x = element_at(col(vecCol), i + 1).cast("double")
-      Seq(min(x).as(s"mn$i"), max(x).as(s"mx$i"))
+    val rows = emb.select(posexplode(col(vecCol)).as(Seq("_i", "_x")))
+      .filter(col("_i") < dim)
+      .groupBy(col("_i"))
+      .agg(min(col("_x").cast("double")), max(col("_x").cast("double")))
+      .collect()
+    require(rows.length == dim,
+      s"dimRanges: ${dim - rows.length} of $dim dimensions have no value")
+    val mins = new Array[Double](dim)
+    val maxs = new Array[Double](dim)
+    rows.foreach { r =>
+      mins(r.getInt(0)) = r.getDouble(1); maxs(r.getInt(0)) = r.getDouble(2)
     }
-    val r = emb.agg(aggs.head, aggs.tail: _*).head()
-    val mins = Array.tabulate(dim)(i => r.getDouble(2 * i))
-    val maxs = Array.tabulate(dim)(i => r.getDouble(2 * i + 1))
     (mins, maxs)
   }
 

@@ -210,27 +210,26 @@ object Similarity {
   def trainIvfCentroids(emb: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int): Seq[(Long, Array[Double])] = {
     graft.plans.VecCosine.register(emb.sparkSession)
-    // ONE-JOB gate+collect (see LocalVecGate)
-    val fetched = emb
-      .select(col(idCol).cast("long").as("_id"), col(vecCol).as("_v"))
-      .limit(LocalVecGate + 1).collect()
-    // BYTE-scaled gate on top of the row gate (r15 ADVICE): 200k rows of
-    // dim-64 floats is ~50 MB, but a dim-1024+ embedding column is
-    // gigabytes of boxed rows — route wide corpora to the distributed
-    // trainer even under the row count. Probe heap budget: the collect
-    // itself is bounded by (gate+1) × (dim·4 B + row overhead); the local
-    // path additionally holds the primitive copy, so require ~4× the raw
-    // estimate to fit in a quarter of the heap (the verifySide pattern).
+    // ONE-JOB gate+collect (see LocalVecGate), with a BYTE-scaled guard
+    // on top of the row gate (r15 ADVICE): 200k rows of dim-64 floats is
+    // ~50 MB, but a dim-1024+ embedding column is gigabytes of boxed rows
+    // — route wide corpora to the distributed trainer even under the row
+    // count. The collect itself is bounded by (gate+1) × (dim·4 B + row
+    // overhead); the local path additionally holds the primitive copy
+    // ([[Gate.fitsHeap]], the verifySide pattern).
     // Local == distributed centroid-for-centroid (PqLocalTrainSpec), so
     // the route can never change results.
-    val dim = if (fetched.nonEmpty) fetched(0).getSeq[Float](1).length else 0
-    val localBytes = fetched.length.toLong * (dim.toLong * 4L + 64L)
-    if (fetched.length <= LocalVecGate &&
-        localBytes * 4L <= Runtime.getRuntime.maxMemory / 4L)
-      trainIvfCentroidsLocal(
-        fetched.map(r => (r.getLong(0), r.getSeq[Float](1).toArray)),
-        k, iters)
-    else trainIvfCentroidsShuffle(emb, idCol, vecCol, k, iters)
+    Gate.collectWithin(
+        emb.select(col(idCol).cast("long").as("_id"), col(vecCol).as("_v")),
+        LocalVecGate, "ivf centroids", rows => rows.isEmpty ||
+          Gate.fitsHeap(rows.length,
+            rows(0).getSeq[Float](1).length * 4L + 64L)) match {
+      case Some(fetched) =>
+        trainIvfCentroidsLocal(
+          fetched.map(r => (r.getLong(0), r.getSeq[Float](1).toArray)),
+          k, iters)
+      case None => trainIvfCentroidsShuffle(emb, idCol, vecCol, k, iters)
+    }
   }
 
   /** Past-the-gate distributed trainer (unchanged shape); package-private

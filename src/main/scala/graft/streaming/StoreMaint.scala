@@ -44,7 +44,7 @@ import org.apache.spark.sql.types.StructType
   * leave out `batch_id`, which stays a partition column discovered from
   * the directory names.
   */
-private[streaming] object StoreMaint {
+private[graft] object StoreMaint {
 
   /** Whether the store tree at `dir` exists, after first finishing a
     * [[compactTree]] swap that a crash interrupted. No `dir` but both its

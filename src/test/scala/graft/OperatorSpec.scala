@@ -85,6 +85,43 @@ class OperatorSpec extends AnyFunSuite {
     assert(pairs.forall(_.getDouble(2) >= 0.5))
   }
 
+  test("minhash-lsh: the lazy plan equals the checkpointed aggregate-signature chain") {
+    import spark.implicits._
+    // the former chain: signatures by the MinHashAgg group-by, the
+    // signatures and the verified pairs each localCheckpointed
+    def checkpointed(hashed: org.apache.spark.sql.DataFrame) = {
+      val banded = Dedup.bandKeysFromSig(
+        Dedup.minhashSigs(hashed, "doc_id", 64).localCheckpoint(true),
+        "doc_id", 64, 16)
+      val other = banded.select($"doc_id".as("doc_id_b"), $"band", $"bk")
+      val pairs = banded.join(other, Seq("band", "bk"))
+        .filter($"doc_id" < $"doc_id_b")
+        .select($"doc_id".as("doc_a"), $"doc_id_b".as("doc_b")).distinct()
+      pairs
+        .join(hashed.select($"doc_id".as("doc_a"), $"_sh"), "doc_a")
+        .join(hashed.select($"doc_id".as("doc_b"), $"_sh".as("_sh_b")), "doc_b")
+        .withColumn("jaccard", size(array_intersect($"_sh", $"_sh_b")).cast("double") /
+          size(array_union($"_sh", $"_sh_b")))
+        .filter($"jaccard" >= 0.5)
+        .select($"doc_a", $"doc_b", $"jaccard")
+        .localCheckpoint(true)
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    graft.plans.ShingleHashes.register(spark, n = 3)
+    val docs = Sources.documents(spark, sf)
+      .withColumn("native", graft.plans.ShingleHashes.shingleHashes($"text"))
+      .withColumn("words", Dedup.wordShingles($"text"))
+    val preHashed = rows(Dedup.minhashLshPairs(docs, "doc_id", "native", 64, 16,
+      0.5, preHashed = true))
+    assert(preHashed.nonEmpty)
+    assert(preHashed == rows(checkpointed(docs.select($"doc_id", $"native".as("_sh")))))
+    val hashedHere = rows(Dedup.minhashLshPairs(docs, "doc_id", "words", 64, 16, 0.5))
+    assert(hashedHere.nonEmpty)
+    assert(hashedHere == rows(checkpointed(docs.select($"doc_id",
+      array_distinct(transform($"words", w => xxhash64(w))).as("_sh")))))
+  }
+
   test("dedup corpus: one representative (min id) kept per dup cluster") {
     import spark.implicits._
     val docs = Sources.documents(spark, sf)

@@ -192,6 +192,32 @@ class PackFreqSpec extends AnyFunSuite {
     assert(worst < dim * maxStep * maxStep, s"worst=$worst step=$maxStep")
   }
 
+  test("dimRanges: the grouped posexplode aggregate equals the 2·dim-column aggregate") {
+    import spark.implicits._
+    val emb = graft.sources.Sources.embeddings(spark, sf)
+    val dim = 64
+    // the former form: one global aggregate with a min and a max column
+    // per dimension
+    def wide(df: org.apache.spark.sql.DataFrame) = {
+      val aggs = (0 until dim).flatMap { i =>
+        val x = element_at($"embedding", i + 1).cast("double")
+        Seq(min(x), max(x))
+      }
+      val r = df.agg(aggs.head, aggs.tail: _*).head()
+      (Seq.tabulate(dim)(i => r.getDouble(2 * i)),
+        Seq.tabulate(dim)(i => r.getDouble(2 * i + 1)))
+    }
+    // dimension 5 held constant
+    val constant = emb.withColumn("embedding", transform($"embedding",
+      (x, i) => when(i === 5, lit(0.25f)).otherwise(x)))
+    for (df <- Seq(emb, emb.repartition(7), constant.repartition(3))) {
+      val (mins, maxs) = Quantize.dimRanges(df, "embedding", dim)
+      assert((mins.toSeq, maxs.toSeq) == wide(df))
+    }
+    val (mins, maxs) = Quantize.dimRanges(constant, "embedding", dim)
+    assert(mins(5) == 0.25 && maxs(5) == 0.25)
+  }
+
   test("IVF-PQ probe is partitioning-invariant and prunes to nprobe buckets") {
     import spark.implicits._
     val emb = graft.sources.Sources.embeddings(spark, sf)

@@ -1,9 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
@@ -261,39 +258,7 @@ class StreamingDedupSpec extends AnyFunSuite {
       StoreLayout.assertDisjointRanges(spark, s"$store/$sub/batch_id=-1", b)
   }
 
-  /** The job description of every Spark job that `body` starts, counted
-    * by a listener under a job group of its own. Listener events arrive in
-    * order, so once a marker job run after `body` is seen, every job of
-    * `body` has been counted. Also checks that `body` leaves the caller's
-    * job description in place.
-    */
-  private def jobsOf(body: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val group = s"census-${System.nanoTime}"
-    val jobs = new ConcurrentLinkedQueue[String]
-    val markerSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val g = Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-        if (g == group) jobs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
-        else if (g == s"$group-marker") markerSeen.countDown()
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "job census")
-      try {
-        body
-        assert(sc.getLocalProperty("spark.job.description") == "job census")
-      } finally {
-        sc.setJobGroup(s"$group-marker", "marker")
-        spark.range(1).count()
-        sc.clearJobGroup()
-      }
-      assert(markerSeen.await(30, TimeUnit.SECONDS), "marker job never seen")
-      jobs.asScala.toSeq
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsOf(body: => Unit): Seq[String] = JobCensus.jobsOf(spark)(body)
 
   test("job budget: a batch on an empty store, a probing batch, a compaction") {
     import spark.implicits._
