@@ -387,7 +387,7 @@ object Bench {
     val retimedJson =
       retimedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
     // every SPARK_GRAFT_* knob in force lands in the artifact — a tuned
-    // run (e.g. SPARK_GRAFT_PAIR_STORAGE=ser) must be self-describing, not
+    // run (e.g. SPARK_GRAFT_OHA_FALLBACK=128) must be self-describing, not
     // reconstructed from shell history (the r12 sf4 run7 failure was
     // unadjudicable precisely because the env wasn't recorded)
     // full JSON string escaping — backslash, quote, AND control chars

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.storage.StorageLevel
 
 /** Session factory with the engine's standard tuning.
   *
@@ -29,47 +28,22 @@ import org.apache.spark.storage.StorageLevel
   * Every `SPARK_GRAFT_*` engine setting is parsed and checked here, when
   * the session is built: a bad value fails at once with a message that
   * names the variable, not at first use under a Spark key. `configure`
-  * reads the per-session settings from its `env` map (the process
-  * environment by default); `SPARK_GRAFT_PAIR_STORAGE` and
-  * `SPARK_GRAFT_VERIFY_BCAST_CAP` are process-wide and always come from
-  * the process environment.
+  * reads them from its `env` map (the process environment by default).
   */
 object GraftSession {
-  /** `name` from `env` as an integer in [1, max], `default` when unset;
-    * any other value fails with a message that names the variable.
+  /** `name` from `env` as a positive Int, `default` when unset; any
+    * other value fails with a message that names the variable.
     */
-  private def positiveLong(env: Map[String, String], name: String,
-      default: => Long, max: Long = Long.MaxValue): Long =
-    env.get(name).fold(default) { v =>
-      v.trim.toLongOption.filter(x => x > 0 && x <= max).getOrElse(throw
-        new IllegalArgumentException(s"$name must be a positive integer, got '$v'"))
-    }
-
   private def positiveInt(env: Map[String, String], name: String,
       default: => Int): Int =
-    positiveLong(env, name, default, Int.MaxValue).toInt
+    env.get(name).fold(default) { v =>
+      v.trim.toIntOption.filter(_ > 0).getOrElse(throw
+        new IllegalArgumentException(s"$name must be a positive integer, got '$v'"))
+    }
 
   /** The session's core budget: SPARK_GRAFT_CPUS, else the JVM's processors. */
   def cpus(env: Map[String, String] = sys.env): Int =
     positiveInt(env, "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors)
-
-  /** SPARK_GRAFT_PAIR_STORAGE: `ser` or `deser` pins the storage level
-    * of the pair family's corpus-sized persists; unset leaves the choice
-    * to [[graft.operators.Dedup.pairStorage]]'s heap-size rule.
-    */
-  def pairStorage(env: Map[String, String] = sys.env): Option[StorageLevel] =
-    env.get("SPARK_GRAFT_PAIR_STORAGE").map(_.trim match {
-      case "ser" => StorageLevel.MEMORY_AND_DISK_SER
-      case "deser" => StorageLevel.MEMORY_AND_DISK
-      case v => throw new IllegalArgumentException(
-        s"SPARK_GRAFT_PAIR_STORAGE must be 'ser' or 'deser', got '$v'")
-    })
-
-  /** SPARK_GRAFT_VERIFY_BCAST_CAP: the byte size up to which a pair
-    * verify side is broadcast (384 MB by default).
-    */
-  def verifyBcastCap(env: Map[String, String] = sys.env): Long =
-    positiveLong(env, "SPARK_GRAFT_VERIFY_BCAST_CAP", 384L << 20)
 
   def configure(b: SparkSession.Builder,
       env: Map[String, String] = sys.env): SparkSession.Builder = {
@@ -78,10 +52,6 @@ object GraftSession {
     val ohaFallback = positiveInt(env, "SPARK_GRAFT_OHA_FALLBACK", 4 << 20)
     val listThreshold = positiveInt(env, "SPARK_GRAFT_LIST_THRESHOLD", 4096)
     val codegenCache = positiveInt(env, "SPARK_GRAFT_CODEGEN_CACHE", 4096)
-    // process-wide: Dedup reads these two once per JVM from the process
-    // environment, not from `env`, so that is where they are checked
-    pairStorage(sys.env)
-    verifyBcastCap(sys.env)
     b.config("spark.sql.shuffle.partitions", n.toString)
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

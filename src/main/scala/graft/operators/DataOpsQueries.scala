@@ -32,24 +32,6 @@ object DataOpsQueries {
   private[graft] def idSampleSql(col: String): String =
     s"($col % 2147483648) * 2654435761 % 4294967296 < 1073741824"
 
-  /** ARM-OVERLAP HISTORY. r15: building each eval query's two arms
-    * CONCURRENTLY (guide §2.6) was reverted — with both arms persisting,
-    * broadcasting and unpersisting against one session, the exact
-    * containment arm's verify join intermittently emitted ~10×
-    * duplicated rows (reproduced at sf0.01: n_exact_sample 101 vs truth
-    * 10 whenever q_dedup_containment ran earlier in the session; the
-    * same code sequential is always correct). Mechanism: the optimizer's
-    * cached-plan substitution (`useCachedData`) racing the other arm's
-    * persist/unpersist during compile. r16: overlap RE-INTRODUCED in the
-    * structurally safe form ([[Dedup.planLock]]): every catalyst compile
-    * and cache-registry mutation is serialized under one lock, only
-    * stage execution overlaps, and overlapped arms never register
-    * identically-shaped caches (the containment evals share ONE
-    * deliberately shared `all` frame released after both arms).
-    * Re-verified with the r15 reproducer and a full in-session Verify
-    * (OPTIMIZATION_r15.md); `ArmOverlapSpec` pins it.
-    */
-
   def qDedupExact(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Dedup.exactGroups(Sources.documents(s, dir), $"doc_id", $"text")
@@ -145,21 +127,23 @@ object DataOpsQueries {
     * scale), and banded ⊆ exact (same threshold, exact verify of a
     * candidate subset) so the miss count is a plain anti-join.
     */
-  def qContainmentEvalSampled(s: SparkSession, dir: String): DataFrame = {
+  def qContainmentEvalSampled(s: SparkSession, dir: String): DataFrame =
+    containmentEvalOn(s, dir, Some(8), "banded")
+
+  /** The body of both containment recall evals: the exact arm against the
+    * banded arm (`bandedQueryCap`) or the LSH arm (None), overlapped over
+    * one shared set frame ([[Dedup.containmentEvalArms]]; see
+    * [[Dedup.planLock]] for why the overlap is safe, `ArmOverlapSpec`
+    * pins it). `arm` names the evaluated arm's count column.
+    */
+  private def containmentEvalOn(s: SparkSession, dir: String,
+      bandedQueryCap: Option[Int], arm: String): DataFrame = Dedup.scoped { sc =>
     import s.implicits._
-    val docs = withHashedShingles(s, dir).filter(idSample($"doc_id"))
-      .localCheckpoint(true)
-    // ARMS OVERLAPPED over ONE shared shingle cache (r16, VERDICT r15
-    // item 1). The r15 unrestricted overlap was reverted for a
-    // reproduced duplicate-row race (cached-plan substitution racing the
-    // other arm's persist/unpersist); this form serializes every compile
-    // and registry mutation under Dedup.planLock and overlaps only
-    // stage execution — see Dedup.containmentEvalArms / Dedup.planLock.
-    // Pinned by ArmOverlapSpec (the r15 race in OPTIMIZATION_r15.md).
-    val (exact0, banded0) = Dedup.containmentEvalArms(docs, "doc_id", "sh",
-      num = 4, den = 5, preHashed = true, bandedQueryCap = Some(8))
-    recallCounts(exact0, banded0, Seq("doc_sub", "doc_sup"),
-      ("n_exact_sample", "n_banded_sample", "n_missed_sample"))
+    val docs = sc.checkpoint(withHashedShingles(s, dir).filter(idSample($"doc_id")))
+    val (exact0, other0) = Dedup.containmentEvalArms(docs, "doc_id", "sh",
+      num = 4, den = 5, preHashed = true, bandedQueryCap = bandedQueryCap)
+    recallCounts(exact0, other0, Seq("doc_sub", "doc_sup"),
+      ("n_exact_sample", s"n_${arm}_sample", "n_missed_sample"))
       .withColumn("recall_est", recallEst($"n_exact_sample", $"n_missed_sample"))
   }
 
@@ -179,18 +163,8 @@ object DataOpsQueries {
   /** LSH-containment recall under the deterministic 25% id-hash sample —
     * same protocol as [[qContainmentEvalSampled]] for the LSH arm.
     */
-  def qContainmentLshEvalSampled(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val docs = withHashedShingles(s, dir).filter(idSample($"doc_id"))
-      .localCheckpoint(true)
-    // arms OVERLAPPED over one shared shingle cache — see the safety
-    // note in [[qContainmentEvalSampled]]
-    val (exact0, lsh0) = Dedup.containmentEvalArms(docs, "doc_id", "sh",
-      num = 4, den = 5, preHashed = true, bandedQueryCap = None)
-    recallCounts(exact0, lsh0, Seq("doc_sub", "doc_sup"),
-      ("n_exact_sample", "n_lsh_sample", "n_missed_sample"))
-      .withColumn("recall_est", recallEst($"n_exact_sample", $"n_missed_sample"))
-  }
+  def qContainmentLshEvalSampled(s: SparkSession, dir: String): DataFrame =
+    containmentEvalOn(s, dir, None, "lsh")
 
   def qDedupMinhash(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -222,42 +196,8 @@ object DataOpsQueries {
     * Jaccard, so both error directions are real — this is the report
     * that says whether Hamming <= 5 is the right gate for THIS corpus.
     */
-  def qSimhashEval(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    graft.plans.SimHashBits.register(s, bits = 60)
-    graft.plans.ShingleHashes.registerTokenHashes(s)
-    val chunksOf = (sim: org.apache.spark.sql.Column) =>
-      array((0 until 6).map(c =>
-        struct(lit(c).as("ck"),
-          shiftright(sim, c * 10).bitwiseAND(lit(1023L)).as("cv"))): _*)
-    // arms OVERLAPPED (r16) — see the safety note in
-    // [[qContainmentEvalSampled]]; the SimHash chain checkpoints, never
-    // persists, so the arms share no cached frame
-    val (sh, exact) = Par.both(
-      {
-        val sigs = Dedup.lockedCheckpoint(Sources.documents(s, dir)
-          .select($"doc_id", graft.plans.SimHashBits.simhashBits(
-            graft.plans.ShingleHashes.tokenHashes($"text")).as("sim")))
-        val banded = sigs.select($"doc_id", $"sim", explode(chunksOf($"sim")).as("b"))
-          .select($"doc_id", $"sim", $"b.ck", $"b.cv")
-        val other = banded.toDF("doc_id_b", "sim_b", "ck", "cv")
-        Dedup.lockedCheckpoint(banded.join(other, Seq("ck", "cv"))
-          .filter($"doc_id" < $"doc_id_b")
-          .filter(bit_count($"sim".bitwiseXOR($"sim_b")) <= 5)
-          .select($"doc_id".as("doc_a"), $"doc_id_b".as("doc_b"))
-          .distinct())
-      },
-      Dedup.jaccardPairs(withHashedShingles(s, dir), "doc_id", "sh",
-        Seq.empty, 0.5, preHashed = true)
-        .select($"doc_a", $"doc_b"))
-    val both = sh.join(exact, Seq("doc_a", "doc_b")).agg(count(lit(1)).as("n_both"))
-    sh.agg(count(lit(1)).as("n_simhash"))
-      .crossJoin(exact.agg(count(lit(1)).as("n_exact")))
-      .crossJoin(both)
-      .select($"n_simhash", $"n_exact", $"n_both",
-        expr("n_both * 1000000L DIV greatest(n_simhash, 1)").as("prec_ppm"),
-        expr("n_both * 1000000L DIV greatest(n_exact, 1)").as("rec_ppm"))
-  }
+  def qSimhashEval(s: SparkSession, dir: String): DataFrame =
+    simhashEvalOn(s, dir, _ => lit(true), "")
 
   /** SAMPLED SimHash evaluation — the corpus-scale form of
     * [[qSimhashEval]], same protocol as [[qMinhashEvalSampled]]: the
@@ -268,7 +208,17 @@ object DataOpsQueries {
     * drops by sample² and the
     * sampled P/R is an unbiased estimate of corpus P/R.
     */
-  def qSimhashEvalSampled(s: SparkSession, dir: String): DataFrame = {
+  def qSimhashEvalSampled(s: SparkSession, dir: String): DataFrame =
+    simhashEvalOn(s, dir, idSample, "_sample")
+
+  /** The body of both SimHash evals: `keep` selects the ids whose pairs
+    * are scored, `sfx` suffixes the count columns (a sampled run also
+    * names its ppm columns `_est`). The arms overlap ([[Dedup.planLock]]);
+    * the SimHash chain checkpoints and never persists, so they share no
+    * cached frame.
+    */
+  private def simhashEvalOn(s: SparkSession, dir: String,
+      keep: Column => Column, sfx: String): DataFrame = {
     import s.implicits._
     graft.plans.SimHashBits.register(s, bits = 60)
     graft.plans.ShingleHashes.registerTokenHashes(s)
@@ -276,37 +226,35 @@ object DataOpsQueries {
       array((0 until 6).map(c =>
         struct(lit(c).as("ck"),
           shiftright(sim, c * 10).bitwiseAND(lit(1023L)).as("cv"))): _*)
-    // arms OVERLAPPED (r16) — see the safety note in
-    // [[qContainmentEvalSampled]]
     val (sh, exact) = Par.both(
-      {
-        val sigs = Dedup.lockedCheckpoint(Sources.documents(s, dir)
+      Dedup.scoped { sc =>
+        val sigs = sc.checkpoint(Sources.documents(s, dir)
           .select($"doc_id", graft.plans.SimHashBits.simhashBits(
             graft.plans.ShingleHashes.tokenHashes($"text")).as("sim")))
         val banded = sigs.select($"doc_id", $"sim", explode(chunksOf($"sim")).as("b"))
           .select($"doc_id", $"sim", $"b.ck", $"b.cv")
         val other = banded.toDF("doc_id_b", "sim_b", "ck", "cv")
-        Dedup.lockedCheckpoint(banded.join(other, Seq("ck", "cv"))
+        sc.checkpoint(banded.join(other, Seq("ck", "cv"))
           .filter($"doc_id" < $"doc_id_b")
           .filter(bit_count($"sim".bitwiseXOR($"sim_b")) <= 5)
-          .filter(idSample($"doc_id") && idSample($"doc_id_b"))
+          .filter(keep($"doc_id") && keep($"doc_id_b"))
           .select($"doc_id".as("doc_a"), $"doc_id_b".as("doc_b"))
           .distinct())
       },
-      Dedup.jaccardPairs(
-        withHashedShingles(s, dir).filter(idSample($"doc_id")),
+      Dedup.jaccardPairs(withHashedShingles(s, dir).filter(keep($"doc_id")),
         "doc_id", "sh", Seq.empty, 0.5, preHashed = true)
         .select($"doc_a", $"doc_b"))
+    val est = if (sfx.isEmpty) "" else "_est"
     val both = sh.join(exact, Seq("doc_a", "doc_b"))
-      .agg(count(lit(1)).as("n_both_sample"))
-    sh.agg(count(lit(1)).as("n_simhash_sample"))
-      .crossJoin(exact.agg(count(lit(1)).as("n_exact_sample")))
+      .agg(count(lit(1)).as(s"n_both$sfx"))
+    sh.agg(count(lit(1)).as(s"n_simhash$sfx"))
+      .crossJoin(exact.agg(count(lit(1)).as(s"n_exact$sfx")))
       .crossJoin(both)
-      .select($"n_simhash_sample", $"n_exact_sample", $"n_both_sample",
-        expr("n_both_sample * 1000000L DIV greatest(n_simhash_sample, 1)")
-          .as("prec_ppm_est"),
-        expr("n_both_sample * 1000000L DIV greatest(n_exact_sample, 1)")
-          .as("rec_ppm_est"))
+      .select(col(s"n_simhash$sfx"), col(s"n_exact$sfx"), col(s"n_both$sfx"),
+        expr(s"n_both$sfx * 1000000L DIV greatest(n_simhash$sfx, 1)")
+          .as(s"prec_ppm$est"),
+        expr(s"n_both$sfx * 1000000L DIV greatest(n_exact$sfx, 1)")
+          .as(s"rec_ppm$est"))
   }
 
   /** Within-label embedding near-dup pairs, LSH-candidated (round-10
@@ -545,22 +493,8 @@ object DataOpsQueries {
     * scale-safe operators; the oracle brute-forces the exact set with the
     * integer form 3·|A∩B| >= |A|+|B| (≡ J >= 1/2, no float gate).
     */
-  def qMinhashEval(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val docs = withHashedShingles(s, dir)
-    // arms OVERLAPPED (r16) — compiles/persists serialized under
-    // Dedup.planLock, execution concurrent; the arms share no cached
-    // frame (raw vs sorted shingle projections differ). See the safety
-    // note in [[qContainmentEvalSampled]]. The LSH plan is lazy: its
-    // checkpoint runs it inside the overlap, compiled under the lock.
-    val (lsh0, exact0) = Par.both(
-      Dedup.lockedCheckpoint(Dedup.minhashLshPairs(docs, "doc_id", "sh",
-        numHashes = 64, bands = 16, threshold = 0.5, preHashed = true)),
-      Dedup.jaccardPairs(docs, "doc_id", "sh", Seq.empty, 0.5,
-        preHashed = true))
-    recallCounts(exact0, lsh0, Seq("doc_a", "doc_b"),
-      ("n_exact", "n_lsh", "n_missed"))
-  }
+  def qMinhashEval(s: SparkSession, dir: String): DataFrame =
+    minhashEvalOn(s, dir, _ => lit(true), "")
 
   /** SAMPLED recall evaluation — the 100 TB form of [[qMinhashEval]]. The
     * exact AllPairs ground truth is quadratic in near-dup pairs by
@@ -574,22 +508,30 @@ object DataOpsQueries {
     * measured recall over sampled pairs is an unbiased estimate of
     * corpus recall. Output: sampled-pair counts + estimated recall.
     */
-  def qMinhashEvalSampled(s: SparkSession, dir: String): DataFrame = {
+  def qMinhashEvalSampled(s: SparkSession, dir: String): DataFrame =
+    minhashEvalOn(s, dir, idSample, "_sample")
+
+  /** The body of both MinHash evals: `keep` selects the ids whose pairs
+    * are scored, `sfx` suffixes the count columns, and a sampled run adds
+    * `recall_est`. The arms overlap ([[Dedup.planLock]]) and share no
+    * cached frame (raw vs sorted shingle projections differ); the lazy
+    * LSH plan runs inside the overlap through its checkpoint.
+    */
+  private def minhashEvalOn(s: SparkSession, dir: String,
+      keep: Column => Column, sfx: String): DataFrame = {
     import s.implicits._
     val docs = withHashedShingles(s, dir)
-    val sampled = docs.filter(idSample($"doc_id"))
-    // arms OVERLAPPED (r16) — see the safety note in
-    // [[qContainmentEvalSampled]]; the lazy LSH plan runs inside the
-    // overlap through its checkpoint (see [[qMinhashEval]])
     val (lsh0, exact0) = Par.both(
       Dedup.lockedCheckpoint(Dedup.minhashLshPairs(docs, "doc_id", "sh",
         numHashes = 64, bands = 16, threshold = 0.5, preHashed = true)),
-      Dedup.jaccardPairs(sampled, "doc_id", "sh", Seq.empty, 0.5,
-        preHashed = true))
-    val lsh = lsh0.filter(idSample($"doc_a") && idSample($"doc_b"))
-    recallCounts(exact0, lsh, Seq("doc_a", "doc_b"),
-      ("n_exact_sample", "n_lsh_sample", "n_missed_sample"))
-      .withColumn("recall_est", recallEst($"n_exact_sample", $"n_missed_sample"))
+      Dedup.jaccardPairs(docs.filter(keep($"doc_id")), "doc_id", "sh",
+        Seq.empty, 0.5, preHashed = true))
+    val counts = recallCounts(exact0,
+      lsh0.filter(keep($"doc_a") && keep($"doc_b")), Seq("doc_a", "doc_b"),
+      (s"n_exact$sfx", s"n_lsh$sfx", s"n_missed$sfx"))
+    if (sfx.isEmpty) counts
+    else counts.withColumn("recall_est",
+      recallEst(col(s"n_exact$sfx"), col(s"n_missed$sfx")))
   }
 
   /** Vocabulary-coverage curve (the tokenizer-design metric): rank terms
@@ -764,42 +706,35 @@ object DataOpsQueries {
     * shingle frame, exact arm from the lossless AllPairs join.
     */
   private def lshSweepOn(s: SparkSession, docsIn: DataFrame,
-      sfx: String): DataFrame = {
+      sfx: String): DataFrame = Dedup.scoped { sc =>
     import s.implicits._
-    val docs = docsIn.localCheckpoint(true)
-    val hashed = Dedup.lockedPersist(docs.select($"doc_id", $"sh".as("_sh")))
-    try {
-      // arms OVERLAPPED (r16): the signature pass and the exact AllPairs
-      // chain are independent — see the safety note in
-      // [[qContainmentEvalSampled]]
-      val (signed, exactPairs) = Par.both(
-        Dedup.lockedCheckpoint(
-          Dedup.minhashSigs(hashed, "doc_id", numHashes = 64)),
-        Dedup.jaccardPairs(docs, "doc_id", "sh", Seq.empty, 0.5,
-          preHashed = true))
-      val exact = exactPairs.agg(count(lit(1)).as(s"n_exact$sfx"))
-      val jac = size(array_intersect($"_sh", $"_sh_b")).cast("double") /
-        size(array_union($"_sh", $"_sh_b"))
-      val rows = Seq(8, 16, 32).map { b =>
-        val banded = Dedup.bandKeysFromSig(signed, "doc_id", 64, b)
-        val other = banded.select($"doc_id".as("doc_id_b"), $"band", $"bk")
-        banded.join(other, Seq("band", "bk"))
-          .filter($"doc_id" < $"doc_id_b")
-          .select($"doc_id".as("doc_a"), $"doc_id_b".as("doc_b")).distinct()
-          .join(hashed.select($"doc_id".as("doc_a"), $"_sh"), "doc_a")
-          .join(hashed.select($"doc_id".as("doc_b"), $"_sh".as("_sh_b")),
-            "doc_b")
-          .filter(jac >= 0.5)
-          .agg(count(lit(1)).as(s"n_lsh$sfx"))
-          .select(lit(b.toLong).as("bands"), col(s"n_lsh$sfx"))
-      }
-      Dedup.lockedCheckpoint(rows.reduce(_.unionByName(_))
-        .crossJoin(broadcast(exact))
-        .select($"bands", col(s"n_lsh$sfx"), col(s"n_exact$sfx"),
-          expr(s"n_lsh$sfx * 1000000L DIV greatest(n_exact$sfx, 1)")
-            .as("rec_ppm"))
-        .orderBy($"bands"))
-    } finally Dedup.lockedUnpersist(hashed)
+    val docs = sc.checkpoint(docsIn)
+    val hashed = sc.persist(docs.select($"doc_id", $"sh".as("_sh")))
+    // the signature pass and the exact AllPairs chain are independent
+    // arms (see [[Dedup.planLock]])
+    val (signed, exactPairs) = Par.both(
+      sc.checkpoint(Dedup.minhashSigs(hashed, "doc_id", numHashes = 64)),
+      Dedup.jaccardPairs(docs, "doc_id", "sh", Seq.empty, 0.5,
+        preHashed = true))
+    val exact = exactPairs.agg(count(lit(1)).as(s"n_exact$sfx"))
+    val jac = size(array_intersect($"_sh", $"_sh_b")).cast("double") /
+      size(array_union($"_sh", $"_sh_b"))
+    val rows = Seq(8, 16, 32).map { b =>
+      Dedup.bandPairs(Dedup.bandKeysFromSig(signed, "doc_id", 64, b),
+          "doc_id", "doc_a", "doc_b")
+        .join(hashed.select($"doc_id".as("doc_a"), $"_sh"), "doc_a")
+        .join(hashed.select($"doc_id".as("doc_b"), $"_sh".as("_sh_b")),
+          "doc_b")
+        .filter(jac >= 0.5)
+        .agg(count(lit(1)).as(s"n_lsh$sfx"))
+        .select(lit(b.toLong).as("bands"), col(s"n_lsh$sfx"))
+    }
+    sc.checkpoint(rows.reduce(_.unionByName(_))
+      .crossJoin(broadcast(exact))
+      .select($"bands", col(s"n_lsh$sfx"), col(s"n_exact$sfx"),
+        expr(s"n_lsh$sfx * 1000000L DIV greatest(n_exact$sfx, 1)")
+          .as("rec_ppm"))
+      .orderBy($"bands"))
   }
 
   /** SAMPLED band-configuration sweep — the 100 TB form of [[qLshSweep]],

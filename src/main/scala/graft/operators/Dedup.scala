@@ -1,9 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.functions._
-import graft.sources.Sources
 
 /** Training-data deduplication operators: exact, normalized-fingerprint,
   * banded n-gram Jaccard, MinHash+LSH, and SimHash.
@@ -17,34 +18,21 @@ import graft.sources.Sources
   */
 object Dedup {
 
-  /** Storage level for the pair family's corpus-sized intermediate
-    * persists (hashed-shingle / signature / banded-vector frames).
-    * Default MEMORY_AND_DISK (deserialized — fastest when the heap has
-    * room). `SPARK_GRAFT_PAIR_STORAGE=ser` flips every site to
-    * MEMORY_AND_DISK_SER: array-heavy rows compress 2-4× serialized, so
-    * on a tight heap (the 24 g driver-memory sensitivity, SURVEY §7f-2)
-    * the cache stops evicting/GC-thrashing at the price of per-access
-    * deserialization. `MEMAUDIT_r11_*.json` records the trade at both
-    * heap sizes.
-    *
-    * AUTO-SELECT (round-11 verdict item 3): when the env var is unset
-    * and the JVM max heap is under 32 GiB, default to the serialized
-    * level — MEMAUDIT_r11 measured the deserialized cache GC-thrashing
-    * at 24 g (43.5 s vs 14.1 s serialized on the worst row) while at
-    * 48 g deserialized wins. `SPARK_GRAFT_PAIR_STORAGE=deser` forces
-    * the deserialized level on any heap.
+  /** Storage level of the pair family's corpus-sized persists (set frames,
+    * rep tables, ranked postings): serialized below a ~32 GiB heap,
+    * deserialized above. Array-heavy rows compress 2-4× serialized;
+    * `MEMAUDIT_r11_*.json` measured the deserialized cache GC-thrashing on
+    * a 24 g heap (43.5 s against 14.1 s serialized on the worst row), while
+    * on 48 g the deserialized level wins.
     */
-  private[graft] lazy val pairStorage: org.apache.spark.storage.StorageLevel =
-    graft.GraftSession.pairStorage().getOrElse {
-      // 30 GiB, not 32: Runtime.maxMemory reports slightly under the
-      // nominal -Xmx (GC region accounting), and a -Xmx32g run should
-      // classify as the 32 g tier, not flip to ser on the rounding
-      if (Runtime.getRuntime.maxMemory < 30L * 1024 * 1024 * 1024) {
-        System.err.println("[graft] pairStorage: heap < ~32g -> " +
-          "MEMORY_AND_DISK_SER (SPARK_GRAFT_PAIR_STORAGE=deser to override)")
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-      } else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    }
+  private[graft] lazy val pairStorage: StorageLevel =
+    // 30 GiB, not 32: Runtime.maxMemory reports slightly under the
+    // nominal -Xmx (GC region accounting), and a -Xmx32g run should
+    // classify as the 32 g tier, not flip to ser on the rounding
+    if (Runtime.getRuntime.maxMemory < 30L * 1024 * 1024 * 1024) {
+      System.err.println("[graft] pairStorage: heap < ~32g -> MEMORY_AND_DISK_SER")
+      StorageLevel.MEMORY_AND_DISK_SER
+    } else StorageLevel.MEMORY_AND_DISK
 
   /** Word n-gram shingles (distinct) of a text column.
     *
@@ -79,189 +67,516 @@ object Dedup {
     df.groupBy(normFingerprint(textCol).as("fingerprint"))
       .agg(min(idCol).as("rep_id"), count(lit(1)).as("n_copies"))
 
-  /** Exact Jaccard near-dup pairs via prefix-filtered posting joins (the
-    * AllPairs/SSJoin formulation): shingles are hashed + globally ordered,
-    * only each set's prefix postings enter the candidate self-join (a pair
-    * with J ≥ t must share a prefix element), candidates are
-    * size-ratio-pruned (t·|A| ≤ |B| ≤ |A|/t), and only survivors pay an
-    * exact intersect. Shuffle keys are single shingle hashes — skew-safe
-    * under AQE, never a bucket cross-product.
-    */
-  /** `collapseKeys` — enables the exact-duplicate collapse (see
-    * [[containmentPairs]]) when a `pairPredicate` is present: the
-    * predicate must be a FUNCTION of the listed per-doc expressions (e.g.
-    * the ingest parity gate `id % 2 ≠ id_b % 2` is a function of
-    * `Seq(col(id) % 2)`), so that every collapse group is
-    * predicate-homogeneous and rep-level blocking equals member-level
-    * blocking. The predicate must additionally be SYMMETRIC in the two
-    * sides (`p(a, b) = p(b, a)`, as the parity gate is): rep-level
-    * pruning evaluates it under REP id ordering while the legacy path
-    * evaluates it under MEMBER id ordering, and the two orderings can
-    * disagree across groups — symmetry is what makes both evaluations
-    * equal. (The member-level re-application is canonicalized to
-    * least/greatest order, so only the rep-level PRUNING leans on this.)
-    * With no predicate the collapse is always safe and always
-    * on; with a predicate and NO keys the collapse is skipped (legacy
-    * exact path) because a predicate that varies inside a group could be
-    * blocked at the rep and silently lose qualifying member pairs.
-    */
-  /** `collapseExactDups` — the collapse pays two extra linear
-    * array-keyed shuffles to remove clique candidate+verify work; it WINS
-    * when candidate precision is low (unbanded joins: measured ingest
-    * sf4-replica 35 → 27 s) and LOSES when bands already keep verify
-    * ≈ output-sized (q_dedup_ngram_jaccard's (lang, lb) bands, isolated
-    * like-for-like A/B at 40× data: 17.0 vs 20.2 s replica, 16.3 vs
-    * 23.9 s fresh) — banded callers with tight candidate precision
-    * should pass false.
+  // ---------------------------------------------------------------------
+  // Set-similarity pairs. Jaccard and containment run one pipeline:
+  // set frame -> stats -> (collapse) -> candidates -> verify -> (expand).
+  // The variants differ only in the candidate stage and the final
+  // predicate.
+  // ---------------------------------------------------------------------
+
+  /** Exact Jaccard near-dup pairs (doc_a < doc_b, jaccard) at J ≥
+    * `threshold`, via prefix-filtered posting joins (the AllPairs/SSJoin
+    * formulation): shingles are hashed and globally ordered, only each
+    * set's prefix postings enter the candidate self-join (a pair with
+    * J ≥ t must share a prefix element), candidates are size-ratio-pruned
+    * (t·|A| ≤ |B| ≤ |A|/t), and only survivors pay an exact intersect.
+    * Shuffle keys are single shingle hashes — skew-safe under AQE, never a
+    * bucket cross-product. Candidates share the values of `bandCols`.
+    *
+    * `pairPredicate` — optional blocking constraint over the pair's two id
+    * columns (`idCol`, `${idCol}_b`), e.g. the ingest gate's "new vs
+    * existing" parity. It is applied AT the candidate posting join, so
+    * excluded pairs never reach the distinct or the verify join.
+    *
+    * `collapseExactDups` — run the exact-duplicate [[collapse]] when the
+    * dup-rate gate finds ≥ 5% duplicate sets. The collapse pays two
+    * array-keyed shuffles to remove clique candidate+verify work: it wins
+    * when candidate precision is low (unbanded joins: ingest sf4-replica
+    * 35 → 27 s) and loses when bands already keep the verify ≈
+    * output-sized (q_dedup_ngram_jaccard's (lang, lb) bands at 40× data:
+    * 17.0 vs 20.2 s replica, 16.3 vs 23.9 s fresh); such callers pass
+    * false.
+    *
+    * `collapseKeys` — with a `pairPredicate`, the collapse runs only when
+    * the predicate is a function of these per-doc expressions (the ingest
+    * parity gate `id % 2 ≠ id_b % 2` is a function of `Seq(col(id) % 2)`),
+    * so every collapse group is predicate-homogeneous. The predicate must
+    * also be symmetric (`p(a, b) = p(b, a)`): rep pairs are pruned under
+    * rep id order and member pairs re-checked under least/greatest member
+    * order, and symmetry makes the two agree. A predicate without keys
+    * skips the collapse: a predicate that varies inside a group could
+    * block a rep pair and lose qualifying member pairs.
     */
   def jaccardPairs(docs: DataFrame, idCol: String, shingleCol: String,
       bandCols: Seq[String], threshold: Double,
       preHashed: Boolean = false,
       pairPredicate: Option[Column] = None,
       collapseKeys: Seq[Column] = Seq.empty,
-      collapseExactDups: Boolean = true): DataFrame = {
-    graft.plans.SortedIntersectCount.register(docs.sparkSession)
-    // the text→shingle→hash chain feeds the posting join AND both verify
-    // sides — persist it once (size ~ corpus ids + hashed shingles).
-    // preHashed: shingleCol is already a distinct array<bigint>.
-    // array_compact on the pre-hashed branch: drops null slots AND marks
-    // the element type non-null — the SortedIntersectCount verify kernel
-    // rejects containsNull=true (a null slot would read undefined), and a
-    // caller-supplied hash column (e.g. portableHash64, whose conv() chain
-    // is nullable-typed) legitimately carries the nullable marker with no
-    // actual nulls. The xxhash64 branch is containsNull=false already.
-    val sh =
-      if (preHashed) array_sort(array_compact(col(shingleCol)))
-      else array_sort(array_distinct(transform(col(shingleCol), s => xxhash64(s))))
-    if (!collapseExactDups || (pairPredicate.isDefined && collapseKeys.isEmpty)) {
-      // legacy path: predicate without a group-homogeneity contract
-      val base = lockedPersist(docs.select(
-        (bandCols :+ idCol).map(col) :+ sh.as("_sh"): _*)
-        .withColumn("_n", size(col("_sh"))))
-      // materialize (pairs ≪ corpus) so the cache can go
-      try lockedCheckpoint(
-        jaccardPairsOn(base, idCol, bandCols, threshold, pairPredicate))
-      finally lockedUnpersist(base)
-    } else {
-      // EXACT-DUPLICATE COLLAPSE (round 12, the containmentPairs pattern):
-      // Jaccard is a function of the two shingle SETS, so identical
-      // (bandCols, collapseKeys, set) rows run the posting/verify
-      // machinery once per distinct group and rep pairs expand back to
-      // member pairs with output-sized joins. A g-copy replica clique
-      // pays 1 candidate+verify unit instead of g²; an all-distinct
-      // corpus pays two linear co-partitioned shuffles on _sh.
-      val ckNames = collapseKeys.indices.map(i => s"_ck$i")
-      val all = lockedPersist(docs.select(bandCols.map(col) ++ Seq(col(idCol)) ++
-        collapseKeys.zip(ckNames).map { case (c, n) => c.as(n) } :+
-        sh.as("_sh"): _*))
-      // DUP-RATE GATE (the autoBanding pattern — decide the shape from a
-      // cheap corpus stat): the collapse's array-keyed groupBy + mapping
-      // join cost ~15-20% of the whole pair job on an all-distinct
-      // corpus, so probe the duplicate rate first with one linear
-      // int-aggregate over the already-persisted frame (hash of the set,
-      // not the set — nothing array-keyed shuffles in the probe). Under
-      // 5% duplicates the clique savings cannot repay the shuffles: run
-      // the legacy single-corpus pipeline. The hash is only a gate
-      // heuristic — a collision merely under-counts distinct sets and
-      // flips the gate toward collapsing, never toward wrong results.
-      // ONE aggregate job for both stats (count + countDistinct share the
-      // scan that also materializes the persisted frame): the r12 shape ran
-      // a separate count() first, and at sf0.1 the two fixed job walls on
-      // ~8 gated queries showed up as pure catalog overhead
-      // r15: the same aggregate also returns Σ|_sh| — the verify-side
-      // byte estimate, so the skip path no longer pays arraySideBytes
-      // a separate job for it
-      val probe = lockedHead(all.agg(count(lit(1)).as("n"),
-        countDistinct(struct((bandCols ++ ckNames).map(col) :+
-          xxhash64(col("_sh")): _*)).as("d"),
-        coalesce(sum(size(col("_sh"))), lit(0L)).as("p")))
-      val nDocs = probe.getLong(0)
-      val nSets = probe.getLong(1)
-      val sideBytes = Some(nDocs * 24L + probe.getLong(2) * 8L)
-      val skipCollapse = nSets * 20L >= nDocs * 19L // dup rate < 5%
-      System.err.println(s"[graft] jaccard dup-rate gate: docs=$nDocs " +
-        s"distinct=$nSets -> ${if (skipCollapse) "skip collapse" else "collapse"}")
-      if (skipCollapse) {
-        val base = all
-          .select((bandCols :+ idCol).map(col) :+ col("_sh"): _*)
-          .withColumn("_n", size(col("_sh")))
-        try lockedCheckpoint(jaccardPairsOn(base, idCol, bandCols, threshold,
-          pairPredicate, sideBytes))
-        finally lockedUnpersist(all)
-      } else collapsedJaccardPairs(all, idCol, bandCols, threshold,
-        pairPredicate, ckNames)
-    }
-  }
-
-  /** The collapse arm of [[jaccardPairs]] — only entered when the
-    * dup-rate gate measured ≥ 5% exact-duplicate sets.
-    */
-  private def collapsedJaccardPairs(all: DataFrame, idCol: String,
-      bandCols: Seq[String], threshold: Double,
-      pairPredicate: Option[Column], ckNames: Seq[String]): DataFrame = {
-    {
-      val gKeys = (bandCols ++ ckNames) :+ "_sh"
-      val repTab = all.groupBy(gKeys.map(col): _*)
-        .agg(min(col(idCol)).as("_rep"))
-      val base = lockedPersist(repTab
-        .select(bandCols.map(col) ++ Seq(col("_rep").as(idCol), col("_sh")): _*)
-        .withColumn("_n", size(col("_sh"))))
-      val mapping = lockedPersist(all.join(repTab, gKeys)
-        .select(col(idCol).as("_m"), col("_rep")))
-      // release the corpus-scale source cache once the two derived caches
-      // exist — every later read is off base or mapping (see
-      // collapsedContainmentPairs for the measured pressure rationale);
-      // r15: the two independent materialization jobs run concurrently
-      Par.both(lockedCount(base), lockedCount(mapping))
-      lockedUnpersist(all)
-      try {
-        val repPairs = jaccardPairsOn(base, idCol, bandCols, threshold,
-          pairPredicate)
-        val subMap = mapping.select(col("_m").as("_ma"), col("_rep").as("doc_a"))
-        val supMap = mapping.select(col("_m").as("_mb"), col("_rep").as("doc_b"))
-        val cross = repPairs.join(subMap, "doc_a").join(supMap, "doc_b")
-          .select(col("_ma").as(idCol), col("_mb").as(s"${idCol}_b"),
-            col("jaccard"))
-        // within-group member pairs: identical sets, J exactly 1.0 — the
-        // pre-collapse pipeline found them via shared postings (df ≥ 2
-        // because both copies were present); empty sets (_n = 0) never
-        // shared a posting, so they stay excluded
-        val m2 = mapping.toDF("_m2", "_rep")
-        val sizes = base.select(col(idCol).as("_rep"), col("_n"))
-          .filter(col("_n") > 0)
-        val within = mapping.join(m2, "_rep")
-          .filter(col("_m") < col("_m2"))
-          .join(sizes, "_rep")
-          .select(col("_m").as(idCol), col("_m2").as(s"${idCol}_b"),
-            lit(1.0).as("jaccard"))
-        // re-apply the predicate on member pairs AFTER least/greatest
-        // canonicalization, so it sees exactly the (doc_a < doc_b)
-        // orientation the legacy path evaluates at its candidate join —
-        // an orientation-dependent expression can't silently diverge
-        // between the two arms on the re-application. (Rep-level pruning
-        // inside jaccardPairsOn still evaluates the predicate at REP ids
-        // under rep ordering — sound because the collapseKeys contract
-        // below also requires symmetry in the two sides.)
-        lockedCheckpoint(cross.unionAll(within)
-          .select(least(col(idCol), col(s"${idCol}_b")).as(idCol),
-            greatest(col(idCol), col(s"${idCol}_b")).as(s"${idCol}_b"),
-            col("jaccard"))
+      collapseExactDups: Boolean = true): DataFrame = scoped { sc =>
+    val ckNames = collapseKeys.indices.map(i => s"_ck$i")
+    val all = sc.persist(setFrame(docs, idCol, shingleCol, preHashed,
+      bandCols.map(col) ++ collapseKeys.zip(ckNames).map { case (c, n) => c.as(n) }))
+    val jaccard = col("_c").cast("double") / (col("_n_a") + col("_n_b") - col("_c"))
+    def pairsOn(base: DataFrame, sideBytes: Long): DataFrame =
+      verify(prefixCandidates(base, idCol, bandCols, threshold, pairPredicate),
+          base, idCol, sideBytes)
+        .filter(col("_n_b") >= col("_n_a") * threshold &&
+          col("_n_a") >= col("_n_b") * threshold)
+        .withColumn("jaccard", jaccard)
+        .filter(col("jaccard") >= threshold)
+    def out(pairs: DataFrame): DataFrame = sc.checkpoint(
+      pairs.select(col("_a").as("doc_a"), col("_b").as("doc_b"), col("jaccard")))
+    if (!collapseExactDups || (pairPredicate.isDefined && collapseKeys.isEmpty))
+      out(pairsOn(all, setStats(all, None).sideBytes))
+    else {
+      val st = setStats(all, Some(bandCols ++ ckNames))
+      if (fewDups("jaccard", st)) out(pairsOn(all, st.sideBytes))
+      else {
+        val c = collapse(sc, all, idCol, bandCols, ckNames)
+        // the predicate applies again on member pairs in (least, greatest)
+        // order: the orientation the path without the collapse sees
+        out(expand(pairsOn(c.base, c.reps.sideBytes), c, idCol, directed = false)
+          .select(least(col("_a"), col("_b")).as(idCol),
+            greatest(col("_a"), col("_b")).as(s"${idCol}_b"), jaccard.as("jaccard"))
           .filter(pairPredicate.getOrElse(lit(true)))
-          .select(col(idCol).as("doc_a"), col(s"${idCol}_b").as("doc_b"),
-            col("jaccard")))
-      } finally {
-        lockedUnpersist(base); lockedUnpersist(mapping); lockedUnpersist(all)
+          .select(col(idCol).as("_a"), col(s"${idCol}_b").as("_b"), col("jaccard")))
       }
     }
   }
 
-  /** `pairPredicate` — optional blocking constraint over the pair's two id
-    * columns (`idCol`, `${idCol}_b`), e.g. ingest-gate "new vs existing"
-    * parity or cross-source-only. Applied AT the candidate posting join,
-    * so excluded pairs never reach the distinct or the verify join —
-    * filtering after pair generation would pay the full quadratic
-    * candidate cost for pairs the caller then throws away.
+  /** Asymmetric CONTAINMENT near-dup pairs: C(A,B) = |A∩B| / |A| ≥ t —
+    * the "document A is quoted/embedded inside B" shape that symmetric
+    * Jaccard misses when |B| ≫ |A| (boilerplate-wrapped copies, quote
+    * farms). Same posting-join discipline as [[jaccardPairs]] but with the
+    * containment prefix filter (see [[containmentCandidates]]).
+    *
+    * Emits directed pairs (doc_sub → doc_sup): `threshold = num/den`.
+    *
+    * ARM GATE: the exact posting join is lossless ground truth, but on
+    * DENSE-df corpora its candidate mass is quadratic (true-pair shingle
+    * df ∝ corpus, so every posting group ∝ N; measured e 1.56, 79.6 s at
+    * 40×), while the LSH arm reads e 0.74 at recall 1.0 on the same chain.
+    * Route by the average shingle document frequency over the
+    * DISTINCT-SET corpus (exact-dup copies collapse before any posting
+    * work in both arms, so they must not inflate df). Below
+    * [[ContainmentFloor]] distinct sets the exact arm always runs, so
+    * both oracle scales keep the lossless arm and its hashes; the density
+    * pass (explode + HLL) is paid only above the floor. Ground-truth runs
+    * call [[containmentPairsExact]] / [[containmentPairsLsh]] directly.
     */
+  def containmentPairs(docs: DataFrame, idCol: String, shingleCol: String,
+      num: Int, den: Int, preHashed: Boolean = false): DataFrame = scoped { sc =>
+    requireThreshold(num, den)
+    val all = sc.persist(setFrame(docs, idCol, shingleCol, preHashed))
+    val st = setStats(all, Some(Nil))
+    val useLsh =
+      if (st.sets < ContainmentFloor) {
+        System.err.println(s"[graft] containment arm gate: docs=${st.docs} " +
+          s"distinct=${st.sets} < floor $ContainmentFloor -> exact")
+        false
+      } else {
+        // distinct-set postings ≈ p·d/n (exact when n = d; dup copies
+        // carry the same set sizes on average), one HLL pass for the
+        // distinct-shingle count
+        val distinctSh = lockedHead(all
+          .select(explode(col("_sh")).as("_h"))
+          .agg(approx_count_distinct(col("_h")))).getLong(0)
+        val avgDf =
+          if (distinctSh == 0L) 0.0
+          else (st.postings.toDouble * st.sets / math.max(1L, st.docs)) / distinctSh
+        val lsh = avgDf > ContainmentDfGate
+        System.err.println(f"[graft] containment arm gate: docs=${st.docs} " +
+          f"distinct=${st.sets} postings=${st.postings} shingles=$distinctSh " +
+          f"avgDf=$avgDf%.1f gate=$ContainmentDfGate%.1f -> " +
+          (if (lsh) "lsh" else "exact"))
+        lsh
+      }
+    if (useLsh) containmentCollapsed(sc, all, idCol, num, den, lshBands = Some((0, 0)))
+    else containmentExact(sc, all, idCol, num, den, st)
+  }
+
+  /** [[containmentPairs]]' arm gate: below this many distinct sets the
+    * exact arm always runs; above it, the LSH arm runs when the average
+    * shingle document frequency exceeds [[ContainmentDfGate]].
+    */
+  private val ContainmentFloor = 100000L
+  private val ContainmentDfGate = 64.0
+
+  /** The lossless exact arm of [[containmentPairs]], bypassing the arm
+    * gate — ground truth for the recall evals and probes (which run it
+    * on sampled/large corpora where the gate would route to LSH).
+    */
+  def containmentPairsExact(docs: DataFrame, idCol: String,
+      shingleCol: String, num: Int, den: Int,
+      preHashed: Boolean = false): DataFrame = scoped { sc =>
+    requireThreshold(num, den)
+    val all = sc.persist(setFrame(docs, idCol, shingleCol, preHashed))
+    containmentExact(sc, all, idCol, num, den, setStats(all, Some(Nil)))
+  }
+
+  /** BANDED containment near-dup pairs — the corpus-scale production arm
+    * of [[containmentPairs]] for high-entropy corpora (the exact arm's
+    * fresh-mode candidate mass is provably the post-filter floor,
+    * SURVEY §5n-2/§5o-7, measured e≈1.8 at 40×).
+    *
+    * Same directed semantics (C(A,B) = |A∩B|/|A| ≥ num/den, pairs over
+    * the distinct-set corpus expanded to members), but the candidate
+    * join is BANDED instead of lossless: each query posts only its
+    * `queryCap` rarest prefix shingles, and shingles in more than
+    * `dfCap` documents are dropped from both sides (stop-shingle rule).
+    * Candidates ≤ docs × queryCap × dfCap — linear in the corpus — and
+    * every surviving pair is verified EXACTLY, so precision is 1 and
+    * only recall is approximate. Recall is measured, never assumed:
+    * `q_containment_eval_sampled` runs both arms inside the
+    * deterministic 25% id-sample and reports the recall estimate.
+    *
+    * Always runs the exact-duplicate collapse (no gate): banded semantics
+    * are DEFINED over the distinct-set corpus, so document frequency —
+    * and with it the banding itself — cannot be inflated by exact
+    * duplicates (a boilerplate doc duplicated 10⁹ times at 100 TB must
+    * not push its own shingles over the stop-shingle cap), and
+    * within-group pairs (C = 1.0 by identity) are emitted exactly.
+    * `dfCap = 0` resolves adaptively from the measured distinct-set count.
+    */
+  def containmentPairsBanded(docs: DataFrame, idCol: String,
+      shingleCol: String, num: Int, den: Int, preHashed: Boolean = false,
+      queryCap: Int = 8, dfCap: Long = 0L): DataFrame = scoped { sc =>
+    requireThreshold(num, den)
+    require(queryCap > 0, "queryCap must be positive")
+    containmentCollapsed(sc, sc.persist(setFrame(docs, idCol, shingleCol,
+      preHashed)), idCol, num, den, caps = Some((queryCap, dfCap)))
+  }
+
+  /** LSH containment near-dup pairs — the corpus-scale production arm
+    * for DENSE-df corpora. Both exact and df-capped postings fail on such
+    * corpora: the shingles that identify true pairs have df proportional
+    * to the corpus (df/N constant), so ANY posting join on raw shingles
+    * carries candidate groups ∝ N per posting — quadratic total — while a
+    * fixed df cap loses the true pairs once their shingles outgrow it
+    * (measured cliff: recall 1.0 → 0.05 from sf2f to sf4f at dfCap 256,
+    * SURVEY §5p).
+    *
+    * The LSH-Ensemble reading (Zhu et al., VLDB'16) instead converts the
+    * directed containment threshold into a Jaccard floor within a
+    * declared size-ratio horizon: C(A,B) = |A∩B|/|A| ≥ t and
+    * |B| ≤ R·|A| imply J(A,B) ≥ t/(1+R−t) (worst case |A∩B| = t·|A|,
+    * |B| = R·|A|), so OPH MinHash band-bucket candidates — whose mass is
+    * bounded by band-bucket occupancy, measured linear on this corpus
+    * (q_dedup_minhash e ≤ 1.11) — recover every horizon pair the
+    * banding's S-curve admits at its Jaccard. Survivors are verified
+    * EXACTLY in both directions (precision 1); recall is measured, never
+    * assumed (`q_containment_lsh_eval_sampled`). Pairs beyond the horizon
+    * are only found if a band still collides (J decays as 1/R); a 100 TB
+    * deployment chasing extreme-asymmetry pairs (tweet inside a book)
+    * should partition the index by size octave and re-band per
+    * partition — the full LSH-Ensemble construction this arm's horizon
+    * parameter is the single-partition form of.
+    *
+    * Banding: `numHashes = bands = 0` (the default) resolves via
+    * [[autoContainmentBanding]] from the measured distinct-set count once
+    * the collapse materializes. Explicit (numHashes, bands) pins the
+    * shape (oracle twins, probes). Always collapses exact-duplicate sets
+    * first, same discipline as [[containmentPairsBanded]].
+    */
+  def containmentPairsLsh(docs: DataFrame, idCol: String,
+      shingleCol: String, num: Int, den: Int, preHashed: Boolean = false,
+      numHashes: Int = 0, bands: Int = 0): DataFrame = scoped { sc =>
+    requireThreshold(num, den)
+    require((numHashes == 0) == (bands == 0),
+      "numHashes and bands must be pinned together (0,0 = auto)")
+    require(numHashes == 0 || numHashes % bands == 0,
+      "bands must divide numHashes")
+    containmentCollapsed(sc, sc.persist(setFrame(docs, idCol, shingleCol,
+      preHashed)), idCol, num, den, lshBands = Some((numHashes, bands)))
+  }
+
+  /** Size-octave banding for the containment-LSH arm: rows per band step
+    * 2 → 3 → 4 as the DISTINCT-SET corpus grows, band count fixed at 32.
+    * A fixed r = 2 banding admits coincidental (non-pair) band
+    * collisions with probability J², so their mass grows ~n²·E[J²] —
+    * the same fixed-shape risk [[autoBanding]] retired for the
+    * hyperplane family. Raising rows sharpens the S-curve
+    * (per-band collision J^r) at the cost of horizon-floor recall
+    * (J = 0.36: r2 ≈ 0.99, r3 ≈ 0.78, r4 ≈ 0.42 per 32 bands) — still
+    * ≥ 1−10⁻¹⁰ at the J ≥ 0.8 the measured true pairs sit at, and
+    * recall is MEASURED per rung (`q_containment_lsh_eval_sampled`).
+    * Floors to the oracle-pinned (64, 32×2) below 2²⁰ reps, so both
+    * correctness scales keep that shape byte-for-byte.
+    */
+  def autoContainmentBanding(nReps: Long): (Int, Int) =
+    if (nReps < (1L << 20)) (64, 32)        // r = 2 — oracle-pinned shape
+    else if (nReps < (1L << 27)) (96, 32)   // r = 3
+    else (128, 32)                          // r = 4
+
+  /** Both arms of a sampled containment recall eval over ONE shared set
+    * frame and ONE stats aggregate, run concurrently (see [[planLock]]
+    * for why that is sound): the exact arm and the banded
+    * (`bandedQueryCap`) or LSH (None) arm read one cache that outlives
+    * both. Returns (exactPairs, otherPairs), both checkpointed.
+    */
+  private[graft] def containmentEvalArms(docs: DataFrame, idCol: String,
+      shingleCol: String, num: Int, den: Int, preHashed: Boolean,
+      bandedQueryCap: Option[Int]): (DataFrame, DataFrame) = scoped { sc =>
+    requireThreshold(num, den)
+    val all = sc.persist(setFrame(docs, idCol, shingleCol, preHashed))
+    // the stats scan materialises the shared frame BEFORE the arms fork,
+    // so neither arm races the other populating it
+    val st = setStats(all, Some(Nil))
+    Par.both(
+      scoped(containmentExact(_, all, idCol, num, den, st)),
+      scoped(containmentCollapsed(_, all, idCol, num, den,
+        caps = bandedQueryCap.map((_, 0L)),
+        lshBands = if (bandedQueryCap.isEmpty) Some((0, 0)) else None)))
+  }
+
+  private def requireThreshold(num: Int, den: Int): Unit =
+    require(num > 0 && den > 0 && num <= den, "threshold must be in (0,1]")
+
+  /** The lossless exact containment arm: the dup-rate gate, then the
+    * posting join over the set frame itself or over the collapse's reps.
+    */
+  private def containmentExact(sc: Scope, all: DataFrame, idCol: String,
+      num: Int, den: Int, st: SetStats): DataFrame =
+    if (fewDups("containment", st)) {
+      // the rank-annotated postings feed both sides of the candidate join
+      val ranked = sc.persist(dfOrderedPosts(all, idCol, Seq.empty))
+      sc.checkpoint(containmentOut(contained(verify(
+        containmentCandidates(all, idCol, num, den, rankedPosts = Some(ranked)),
+        all, idCol, st.sideBytes), num, den)))
+    } else containmentCollapsed(sc, all, idCol, num, den)
+
+  /** Containment over the collapse's reps, expanded to member pairs. The
+    * candidates come from the lossless posting join by default, from the
+    * banded posting join with `caps` = Some((queryCap, dfCap)) (dfCap 0
+    * resolves from the rep count), or from MinHash band buckets with
+    * `lshBands` = Some((numHashes, bands)) ((0, 0) resolves from the rep
+    * count). Banded and LSH semantics are defined over the distinct-set
+    * corpus, which is why those arms always collapse.
+    */
+  private def containmentCollapsed(sc: Scope, all: DataFrame, idCol: String,
+      num: Int, den: Int, caps: Option[(Int, Long)] = None,
+      lshBands: Option[(Int, Int)] = None): DataFrame = {
+    val c = collapse(sc, all, idCol, Seq.empty, Seq.empty)
+    val nReps = c.reps.docs
+    val candidates = lshBands match {
+      case Some((numHashes0, bands0)) =>
+        // MinHash band-bucket candidates (the LSH-Ensemble reading of
+        // containment: C ≥ t within size ratio R implies J ≥ t/(1+R−t),
+        // so Jaccard banding bounds candidate mass linearly where the
+        // posting join's df-driven mass is quadratic)
+        val (numHashes, bands) =
+          if (numHashes0 > 0) (numHashes0, bands0)
+          else {
+            val shape = autoContainmentBanding(nReps)
+            System.err.println(s"[graft] containment lsh auto-banding: " +
+              s"reps=$nReps -> hashes=${shape._1} bands=${shape._2} " +
+              s"rows=${shape._1 / shape._2}")
+            shape
+          }
+        // signed once: unchecked, the signature aggregate re-ran on both
+        // sides of the band self-join and again under the union's second
+        // reference (four identical signature stages, 28 s of a 34 s query)
+        val sigs = sc.checkpoint(minhashSigs(
+          c.base.select(col(idCol), col("_sh")), idCol, numHashes))
+        val und = sc.checkpoint(bandPairs(
+          bandKeysFromSig(sigs, idCol, numHashes, bands), idCol))
+        // buckets are undirected and containment is directed: each
+        // colliding pair is verified in both directions
+        und.unionAll(und.select(col("_b").as("_a"), col("_a").as("_b")))
+      case None =>
+        // adaptive stop-shingle cap: a shingle present in more than ~1/64
+        // of the distinct-set corpus (floor 256 so small corpora never
+        // band) is boilerplate whose posting group is quadratic candidate
+        // mass with no dedup signal (measured grid: SURVEY §5p)
+        val resolvedCaps = caps.map { case (qc, dc) =>
+          (qc, if (dc > 0) dc else math.max(256L, nReps / 64L))
+        }
+        resolvedCaps.foreach { case (qc, dc) =>
+          System.err.println(s"[graft] containment banded caps: reps=$nReps " +
+            s"queryCap=$qc dfCap=$dc")
+        }
+        // persisted: the ranked postings feed both sides of the candidate
+        // join, and recomputing the df window per side put sf2
+        // containment from 18 to 29 s
+        containmentCandidates(c.base, idCol, num, den,
+          positional = resolvedCaps.isEmpty,
+          rankedPosts = Some(sc.persist(dfOrderedPosts(c.base, idCol, Seq.empty))),
+          queryCap = resolvedCaps.map(_._1),
+          dfCap = resolvedCaps.map(_._2))
+    }
+    sc.checkpoint(containmentOut(expand(contained(
+      verify(candidates, c.base, idCol, c.reps.sideBytes), num, den),
+      c, idCol, directed = true)))
+  }
+
+  private def contained(pairs: DataFrame, num: Int, den: Int): DataFrame =
+    pairs.filter(col("_c") * den >= col("_n_a") * num)
+
+  private def containmentOut(pairs: DataFrame): DataFrame =
+    pairs.select(col("_a").as("doc_sub"), col("_b").as("doc_sup"),
+      col("_c").cast("long").as("common"),
+      col("_n_a").cast("long").as("size_sub"),
+      (col("_c").cast("double") / col("_n_a")).as("containment"))
+
+  /** The set frame every pair entry point starts from: (keys…, id, _sh,
+    * _n), `_sh` the sorted distinct shingle hashes (the verify kernel's
+    * contract) and `_n` their count. `preHashed`: `shingleCol` is already
+    * an array<bigint> of distinct hashes. array_compact on that branch
+    * drops null slots AND marks the element type non-null: the
+    * SortedIntersectCount kernel rejects containsNull=true, and a
+    * caller-supplied hash column (e.g. portableHash64, whose conv() chain
+    * is nullable-typed) carries the nullable marker with no actual nulls.
+    * The xxhash64 branch is containsNull=false already.
+    */
+  private def setFrame(docs: DataFrame, idCol: String, shingleCol: String,
+      preHashed: Boolean, keys: Seq[Column] = Seq.empty): DataFrame = {
+    val sh =
+      if (preHashed) array_sort(array_compact(col(shingleCol)))
+      else array_sort(array_distinct(transform(col(shingleCol), s => xxhash64(s))))
+    docs.select(keys ++ Seq(col(idCol), sh.as("_sh")): _*)
+      .withColumn("_n", size(col("_sh")))
+  }
+
+  /** A set frame's docs, distinct sets and Σ|_sh| (postings). */
+  private final case class SetStats(docs: Long, sets: Long, postings: Long) {
+    /** Byte estimate of one verify side: rows × fixed row overhead +
+      * array elements × 8.
+      */
+    def sideBytes: Long = docs * 24L + postings * 8L
+  }
+
+  /** [[SetStats]] in one aggregate job, whose scan also materialises a
+    * freshly persisted frame. With `distinctBy`, sets counts the distinct
+    * (keys, set) values through a hash of the set, so nothing array-keyed
+    * shuffles; a collision only under-counts, which tips the dup-rate
+    * gate toward collapsing, never toward wrong results. Without it,
+    * every row counts as a distinct set (a rep table).
+    */
+  private def setStats(frame: DataFrame, distinctBy: Option[Seq[String]]): SetStats = {
+    val distinct = distinctBy.map(k =>
+      countDistinct(struct(k.map(col) :+ xxhash64(col("_sh")): _*)))
+    val r = lockedHead(frame.agg(count(lit(1)),
+      distinct.toSeq :+ coalesce(sum(col("_n")), lit(0L)): _*))
+    SetStats(r.getLong(0), r.getLong(r.length - 2), r.getLong(r.length - 1))
+  }
+
+  /** The dup-rate gate: under 5% duplicate sets the collapse's
+    * array-keyed groupBy and mapping join (~15-20% of the whole pair job
+    * on an all-distinct corpus) cannot repay themselves.
+    */
+  private def fewDups(family: String, st: SetStats): Boolean = {
+    val skip = st.sets * 20L >= st.docs * 19L
+    System.err.println(s"[graft] $family dup-rate gate: docs=${st.docs} " +
+      s"distinct=${st.sets} -> ${if (skip) "skip collapse" else "collapse"}")
+    skip
+  }
+
+  /** The reps of a collapse: `base` is their set frame, `mapping` maps
+    * each member id `_m` to its `_rep`.
+    */
+  private final case class Collapsed(base: DataFrame, mapping: DataFrame,
+      reps: SetStats)
+
+  /** EXACT-DUPLICATE COLLAPSE. Jaccard and containment are functions of
+    * the two shingle sets alone, so identical sets (under equal
+    * `bandCols` and collapse keys `ckNames`) are interchangeable: group
+    * them by exact array equality (no hash-collision exposure), run the
+    * posting/verify machinery once per distinct set with the min id as
+    * rep, and [[expand]] rep pairs back to member pairs. A g-copy clique
+    * pays one candidate+verify unit instead of g²; real 100 TB crawls
+    * carry 20-40% exact dups. The mapping is a co-partitioned join on
+    * `_sh`, never a collect_list of group members: a boilerplate doc
+    * duplicated 10⁹ times must not become one row.
+    *
+    * Both frames are materialised at once, concurrently, and `all` is
+    * released right after when `sc` owns it: every later read is off
+    * `base` or `mapping`, and holding three array-heavy caches to the end
+    * tripled the pair family's memory pressure.
+    */
+  private def collapse(sc: Scope, all: DataFrame, idCol: String,
+      bandCols: Seq[String], ckNames: Seq[String]): Collapsed = {
+    val gKeys = bandCols ++ ckNames :+ "_sh"
+    val repTab = all.groupBy(gKeys.map(col): _*).agg(min(col(idCol)).as("_rep"))
+    val base = sc.persist(repTab
+      .select(bandCols.map(col) ++ Seq(col("_rep").as(idCol), col("_sh")): _*)
+      .withColumn("_n", size(col("_sh"))))
+    val mapping = sc.persist(all.join(repTab, gKeys)
+      .select(col(idCol).as("_m"), col("_rep")))
+    val (reps, _) = Par.both(setStats(base, None), lockedCount(mapping))
+    sc.release(all)
+    Collapsed(base, mapping, reps)
+  }
+
+  /** Rep pairs (_a, _b, _c, _n_a, _n_b) → member pairs with the same
+    * columns: every (a ∈ group(_a), b ∈ group(_b)) inherits its rep
+    * pair's counts (same sets), plus the pairs within each group, whose
+    * sets are identical (_c = _n_a = _n_b = _n). `directed` emits both
+    * orders of a within-group pair (containment); otherwise only a < b
+    * (Jaccard). Empty sets (_n = 0) never share a posting, so the
+    * pipeline without the collapse never pairs them, and neither does
+    * this. Output-sized joins.
+    */
+  private def expand(repPairs: DataFrame, c: Collapsed, idCol: String,
+      directed: Boolean): DataFrame = {
+    val cross = repPairs
+      .join(c.mapping.select(col("_m").as("_ma"), col("_rep").as("_a")), "_a")
+      .join(c.mapping.select(col("_m").as("_mb"), col("_rep").as("_b")), "_b")
+      .select(col("_ma").as("_a"), col("_mb").as("_b"), col("_c"),
+        col("_n_a"), col("_n_b"))
+    val sizes = c.base.select(col(idCol).as("_rep"), col("_n"))
+      .filter(col("_n") > 0)
+    val within = c.mapping.join(c.mapping.toDF("_m2", "_rep"), "_rep")
+      .filter(if (directed) col("_m") =!= col("_m2") else col("_m") < col("_m2"))
+      .join(sizes, "_rep")
+      .select(col("_m").as("_a"), col("_m2").as("_b"), col("_n").as("_c"),
+        col("_n").as("_n_a"), col("_n").as("_n_b"))
+    cross.unionAll(within)
+  }
+
+  /** VERIFY: join candidate pairs (_a, _b) to both array sides of `base`
+    * and count |A ∩ B| → (_a, _b, _c, _n_a, _n_b); the variant adds its
+    * predicate. `_sh` is sorted-distinct by construction, so the
+    * two-pointer [[graft.plans.SortedIntersectCount]] IS
+    * size(array_intersect) without a per-pair hash set and intersection
+    * array. Join strategy: [[verifySide]].
+    */
+  private def verify(cands: DataFrame, base: DataFrame, idCol: String,
+      sideBytes: Long): DataFrame = {
+    graft.plans.SortedIntersectCount.register(base.sparkSession)
+    def side(s: String) = verifySide(base.select(col(idCol).as(s"_$s"),
+      col("_sh").as(s"_sh_$s"), col("_n").as(s"_n_$s")), sideBytes)
+    cands.join(side("a"), "_a").join(side("b"), "_b")
+      .withColumn("_c",
+        graft.plans.SortedIntersectCount.count(col("_sh_a"), col("_sh_b")))
+      .select(col("_a"), col("_b"), col("_c"), col("_n_a"), col("_n_b"))
+  }
+
+  /** VERIFY-JOIN STRATEGY: the candidate stream can be 10^8-10^9 skinny
+    * rows, and ANY plan that exchanges or sorts the FIRST array join's
+    * output materializes ~candidates × array-bytes — sf4 containment wrote
+    * 40+ GB of wide shuffle before being killed, under both SMJ (sorts
+    * the wide stream for join 2) and plain SHUFFLE_HASH (exchanges it).
+    * When the array side fits a broadcast, BOTH lookups pipeline around
+    * the unsorted candidate stream inside one stage and the wide rows
+    * never hit disk or the network. Past [[VerifyBcastCap]] (a 100 TB
+    * corpus's array side does not broadcast) fall back to SHUFFLE_HASH:
+    * the arrays stay on the build side, the stream is never SORTED, and
+    * the one wide exchange is linear in candidates — banding is what must
+    * bound candidates at that scale, not the join.
+    *
+    * Heap guard on top of the cap: BOTH sides broadcast at once and the
+    * in-memory HashedRelation runs ~1.5-3× the raw estimate, so 2 ×
+    * sideBytes × 3 must fit in a quarter of the heap. On an 8 g driver
+    * that lowers the per-side bound to ~341 MB, so two near-cap
+    * broadcasts fall back instead of running out of memory.
+    */
+  private def verifySide(side: DataFrame, sideBytes: Long): DataFrame =
+    if (sideBytes <= VerifyBcastCap &&
+        sideBytes * 6L <= Runtime.getRuntime.maxMemory / 4L) broadcast(side)
+    else side.hint("SHUFFLE_HASH")
+
+  private val VerifyBcastCap = 384L << 20
+
   /** Rank-annotated postings under the RAREST-FIRST global order — every
     * (doc, hash) posting carries the hash's 1-based position `_pos` in the
     * doc's `(document frequency, hash)` order plus the doc's set size
@@ -271,11 +586,9 @@ object Dedup {
     * the candidate volume: the posting join's output is Σ_h q_h·i_h, and
     * hash order makes prefixes a random sample of the df distribution —
     * at 20× data the frequent-shingle products dominated the entire
-    * containment/ingest wall (measured via the replica-vs-fresh A/B:
-    * candidate generation, not pair verification, was the sf2 floor).
-    * Rarest-first empties the prefixes of exactly the high-df postings,
-    * collapsing q_h for every frequent h. Costs two linear exchanges (df
-    * aggregate + annotate) and one per-doc window — all O(postings).
+    * containment/ingest wall. Rarest-first empties the prefixes of
+    * exactly the high-df postings, collapsing q_h for every frequent h.
+    * Costs one df window and one per-doc window — both O(postings).
     * Callers take their prefix with `filter(_pos <= plen)`; `_pos` also
     * feeds the PPJoin positional filter (see [[prefixCandidates]]).
     */
@@ -285,14 +598,9 @@ object Dedup {
     val posts = base.select(
       (bandCols.map(col) :+ col(idCol)) :+ col("_n") :+
         explode(col("_sh")).as("_h"): _*)
-    // _sh is distinct per doc, so count(*) per hash IS document frequency.
-    // r16: _df is a count window over _h instead of the former
-    // groupBy(_h) + join-back — the join side had to shuffle every
-    // posting by _h anyway, so annotating in place drops one Exchange +
-    // one full posting scan from every posting query's plan while
-    // producing the identical per-hash count (the aggregate-then-annotate
-    // fusion of VERDICT r15 item 3). The global (df, h) order — and with
-    // it every `_pos` rank and prefix length — is unchanged.
+    // _sh is distinct per doc, so count(*) per hash IS document frequency;
+    // a count window annotates in place, where a groupBy(_h) + join-back
+    // cost one more exchange and posting scan for the same count
     posts
       .withColumn("_df", count(lit(1)).over(Window.partitionBy(col("_h"))))
       .withColumn("_pos", row_number().over(
@@ -310,10 +618,15 @@ object Dedup {
         col("_h") :+ col("_pos") :+ col("_df"): _*)
   }
 
-  /** Candidate pairs for the symmetric-Jaccard posting join — exposed
+  /** Candidate pairs (_a < _b) for the symmetric-Jaccard posting join —
     * package-private so `PrefixFilterPropertySpec` can compare candidate
-    * sets with and without the `positional` filter; [[jaccardPairsOn]]
+    * sets with and without the `positional` filter; [[jaccardPairs]]
     * always runs with it on.
+    *
+    * Prefix filtering (AllPairs): under a global element order, two sets
+    * with J ≥ t must share an element within their first
+    * n - ceil(t·n) + 1 elements, so only prefix postings enter the join
+    * (taken rarest-first, see [[dfOrderedPosts]]).
     *
     * PPJoin positional filter (Xiao et al.): a match of hash h at 1-based
     * ranks (i, j) of the two docs' shared global order bounds the overlap
@@ -330,10 +643,6 @@ object Dedup {
       bandCols: Seq[String], threshold: Double,
       pairPredicate: Option[Column] = None,
       positional: Boolean = true): DataFrame = {
-    // prefix-filtering (AllPairs): under a global element order, two sets
-    // with J >= t must share an element within their first
-    // n - ceil(t*n) + 1 elements — only prefix postings enter the join,
-    // and the prefix is taken rarest-first (see dfOrderedPosts)
     val prefixLen = (col("_n") - ceil(col("_n") * threshold) + 1).cast("int")
     val posts = dfOrderedPosts(base, idCol, bandCols)
       .filter(col("_pos") <= prefixLen)
@@ -350,207 +659,91 @@ object Dedup {
     posts.join(rhs, bandCols :+ "_h")
       .filter(pairPredicate.foldLeft(col(idCol) < col(s"${idCol}_b"))(_ && _))
       .filter(if (positional) positionalOk else lit(true))
-      .select(col(idCol), col(s"${idCol}_b"))
+      .select(col(idCol).as("_a"), col(s"${idCol}_b").as("_b"))
       .distinct()
   }
 
-  /** Byte estimate of an (id, _sh, _n) array side — drives the verify
-    * join strategy choice. One tiny aggregate over the (cached) frame:
-    * rows x fixed row overhead + total array elements x 8.
-    */
-  private def arraySideBytes(base: DataFrame): Long = {
-    val st = lockedHead(base.agg(count(lit(1)).as("n"), sum(col("_n")).as("p")))
-    st.getLong(0) * 24L + (if (st.isNullAt(1)) 0L else st.getLong(1) * 8L)
-  }
-
-  /** VERIFY-JOIN STRATEGY (round 13, measured on the dense-df corpora):
-    * the candidate stream can be 10^8-10^9 skinny rows, and ANY plan that
-    * exchanges or sorts the FIRST array-join's output materializes
-    * ~candidates x array-bytes — sf4 containment wrote 40+ GB of wide
-    * shuffle before being killed, under both SMJ (sorts the wide stream
-    * for join 2) and plain SHUFFLE_HASH (exchanges it). When the array
-    * side fits a broadcast, BOTH lookups pipeline around the unsorted
-    * candidate stream inside one stage and the wide rows never hit disk
-    * or the network — that is the right plan at any candidate volume.
-    * Past the cap (384 MB default, SPARK_GRAFT_VERIFY_BCAST_CAP to tune;
-    * a 100 TB corpus's array side does not broadcast) fall back to
-    * SHUFFLE_HASH: the arrays stay on the build side, the stream is never
-    * SORTED, and the one wide exchange is linear in candidates — banding
-    * is what must bound candidates at that scale, not the join.
-    */
-  private lazy val verifyBcastCap: Long = graft.GraftSession.verifyBcastCap()
-
-  /** Heap guard on top of the cap: BOTH verify sides broadcast
-    * simultaneously and the in-memory HashedRelation runs ~1.5-3x the
-    * raw estimate (UnsafeRow + relation overhead), so require
-    * 2 x sideBytes x 3 to fit in a quarter of the heap before
-    * broadcasting. On the 48 g bench driver this never binds (the 384 MB
-    * cap does); on the default 8 g driver it lowers the effective
-    * per-side bound to ~341 MB, so two near-cap broadcasts can't OOM
-    * instead of falling back — the same heap-tier pattern as
-    * [[pairStorage]].
-    */
-  private def verifySide(side: DataFrame, sideBytes: Long): DataFrame =
-    if (sideBytes <= verifyBcastCap &&
-        sideBytes * 6L <= Runtime.getRuntime.maxMemory / 4L) broadcast(side)
-    else side.hint("SHUFFLE_HASH")
-
-  private def jaccardPairsOn(base: DataFrame, idCol: String,
-      bandCols: Seq[String], threshold: Double,
-      pairPredicate: Option[Column] = None,
-      knownSideBytes: Option[Long] = None): DataFrame = {
-    graft.plans.SortedIntersectCount.register(base.sparkSession)
-    val candidates = prefixCandidates(base, idCol, bandCols, threshold,
-      pairPredicate)
-    val aSide = base.select(col(idCol), col("_sh"), col("_n"))
-    val bSide = aSide.toDF(s"${idCol}_b", "_sh_b", "_n_b")
-    // callers whose gate probe already measured (rows, Σ|_sh|) pass the
-    // estimate in; others pay the one-aggregate job
-    val sideBytes = knownSideBytes.getOrElse(arraySideBytes(base))
-    candidates.join(verifySide(aSide, sideBytes), idCol)
-      .join(verifySide(bSide, sideBytes), s"${idCol}_b")
-      .filter(col("_n_b") >= col("_n") * threshold &&
-        col("_n") >= col("_n_b") * threshold)
-      // _sh is sorted-distinct by construction (see the callers'
-      // array_sort) — the two-pointer count IS size(array_intersect)
-      // without the per-pair hash set + materialized intersection array
-      .withColumn("_c",
-        graft.plans.SortedIntersectCount.count(col("_sh"), col("_sh_b")))
-      .withColumn("jaccard",
-        col("_c").cast("double") / (col("_n") + col("_n_b") - col("_c")))
-      .filter(col("jaccard") >= threshold)
-      .select(col(idCol).as("doc_a"), col(s"${idCol}_b").as("doc_b"), col("jaccard"))
-  }
-
-  /** Asymmetric CONTAINMENT near-dup pairs: C(A,B) = |A∩B| / |A| ≥ t —
-    * the "document A is quoted/embedded inside B" shape that symmetric
-    * Jaccard misses when |B| ≫ |A| (boilerplate-wrapped copies, quote
-    * farms). Same posting-join discipline as [[jaccardPairs]] but with the
-    * containment prefix filter: the QUERY side only posts its
-    * `n - ceil(t·n) + 1` smallest hashes (any pair with C ≥ t must share
-    * one of them — else A∩B fits inside A's top `ceil(t·n) - 1` elements,
-    * a contradiction), while the INDEX side posts everything. Prefix
-    * length uses exact integer `ceil(t·n) = (num·n + den - 1) div den`
-    * so float rounding can never break the lossless guarantee.
+  /** Candidate (query, index) pairs (_a, _b) for the containment posting
+    * join — package-private for `PrefixFilterPropertySpec`'s
+    * positional-filter comparison; the exact arm always runs with
+    * `positional` on.
     *
-    * Emits directed pairs (doc_sub → doc_sup): `threshold = num/den`.
+    * The query side posts its `n - ceil(t·n) + 1` smallest hashes (any
+    * pair with C ≥ t must share one of them — else A∩B fits inside A's
+    * top `ceil(t·n) - 1` elements, a contradiction), the index side
+    * posts everything, and BOTH sides carry their rarest-first rank so
+    * the positional filter can bound the overlap pairwise: a match at
+    * ranks (i, j) of the pair's first shared element bounds
+    * |A∩B| ≤ 1 + min(n_a−i, n_b−j), and C ≥ t needs |A∩B|·den ≥ n_a·num
+    * — all-integer, so float rounding can never break losslessness. (The
+    * query-side-only bound `1 + n_a − i ≥ ceil(t·n_a)` is a tautology at
+    * every prefix position — the prefix length is chosen as exactly the
+    * positions that satisfy it — which is why the index side's rank is
+    * what makes the filter bite.)
+    *
+    * BANDED CAPS ([[containmentPairsBanded]]): `queryCap` keeps only each
+    * query's `queryCap` RAREST prefix postings (the lossless prefix can
+    * be ~(1−t)·n postings whose df grows with the corpus; the rarest few
+    * carry nearly all of the discrimination), and `dfCap` drops postings
+    * of shingles present in more than `dfCap` documents from BOTH sides
+    * (stop-shingle rule): their posting groups are the quadratic
+    * candidate mass and carry no dedup signal. Candidates are then ≤
+    * docs × queryCap × dfCap — LINEAR in the corpus. Recall < 1 and is
+    * measured (q_containment_eval_sampled). Caps require
+    * `positional = false`: the positional bound's first-shared-element
+    * lemma assumes the globally-first shared element was generated,
+    * which a cap can remove.
     */
-  def containmentPairs(docs: DataFrame, idCol: String, shingleCol: String,
-      num: Int, den: Int, preHashed: Boolean = false): DataFrame = {
-    require(num > 0 && den > 0 && num <= den, "threshold must be in (0,1]")
-    graft.plans.SortedIntersectCount.register(docs.sparkSession)
-    // ONE persisted (id, _sh, _n) cache serves the gate probes AND the
-    // chosen arm (r15): the former all-then-base persist pair cost an
-    // extra materialization job + a second array-heavy cache per call
-    // on the exact path for an identical frame
-    val all = lockedPersist(docs.select(col(idCol),
-      hashedSetCol(shingleCol, preHashed)
-      .as("_sh")).withColumn("_n", size(col("_sh"))))
-    // ARM GATE (round 15, r14 verdict item 2 — the r14 `weak` row): the
-    // exact posting join is lossless ground truth but its candidate mass
-    // on DENSE-df corpora is quadratic (true-pair shingle df ∝ corpus ⇒
-    // every posting group ∝ N; measured fresh e 1.56, 79.6 s at 40×),
-    // while the LSH-Ensemble arm reads e 0.74 at recall 1.0 on the same
-    // chain. Route by a measured corpus stat, the dup-rate-gate pattern:
-    // avg shingle document-frequency over the DISTINCT-SET corpus
-    // (exact-dup copies must not inflate df — they collapse before any
-    // posting work in both arms). Floored to the exact arm below
-    // [[ContainmentFloor]] distinct sets, so both oracle scales (2 k /
-    // 20 k docs) keep the lossless arm and all committed hashes. The
-    // density pass (explode + HLL) is only paid ABOVE the floor, where
-    // the query itself is tens of seconds. Ground-truth runs call
-    // [[containmentPairsExact]] / [[containmentPairsLsh]] directly.
-    val probe = containmentProbe(all)
-    val n = probe.getLong(0); val d = probe.getLong(1)
-    val p = probe.getLong(2)
-    val useLsh =
-      if (d < ContainmentFloor) {
-        System.err.println(s"[graft] containment arm gate: docs=$n " +
-          s"distinct=$d < floor $ContainmentFloor -> exact")
-        false
-      } else {
-        // distinct-set postings ≈ p·d/n (exact when n = d; dup copies
-        // carry the same set sizes on average), one HLL pass for the
-        // distinct-shingle count
-        val distinctSh = lockedHead(all
-          .select(explode(col("_sh")).as("_h"))
-          .agg(approx_count_distinct(col("_h")))).getLong(0)
-        val avgDf =
-          if (distinctSh == 0L) 0.0
-          else (p.toDouble * d / math.max(1L, n)) / distinctSh
-        val lsh = avgDf > ContainmentDfGate
-        System.err.println(f"[graft] containment arm gate: docs=$n " +
-          f"distinct=$d postings=$p shingles=$distinctSh " +
-          f"avgDf=$avgDf%.1f gate=$ContainmentDfGate%.1f -> " +
-          (if (lsh) "lsh" else "exact"))
-        lsh
-      }
-    if (useLsh) collapsedContainmentPairs(all, idCol, num, den,
-      lshBands = Some((0, 0)))
-    else exactContainmentPairs(all, idCol, num, den, Some(probe))
+  private[graft] def containmentCandidates(base: DataFrame, idCol: String,
+      num: Int, den: Int, positional: Boolean = true,
+      rankedPosts: Option[DataFrame] = None,
+      queryCap: Option[Int] = None,
+      dfCap: Option[Long] = None): DataFrame = {
+    require((queryCap.isEmpty && dfCap.isEmpty) || !positional,
+      "positional filter is unsound under banded caps (first-shared-element lemma)")
+    // exact integer ceil(t*n), immune to 0.8*35 = 28.000000000000004
+    val ceilTn = ((col("_n") * num + (den - 1)) / den).cast("int")
+    val prefixLen = col("_n") - ceilTn + 1
+    // one rank window over all postings, read by both sides of the
+    // self-join (callers pass a persisted frame so it runs once)
+    val ranked = rankedPosts.getOrElse(dfOrderedPosts(base, idCol, Seq.empty))
+    val dfOk = dfCap.map(col("_df") <= _).getOrElse(lit(true))
+    val queryPosts = ranked.filter(col("_pos") <= prefixLen)
+      .filter(queryCap.map(col("_pos") <= _).getOrElse(lit(true)))
+      .filter(dfOk)
+      .select(col(idCol).as("_a"), col("_h"),
+        col("_pos").as("_pos_a"), col("_n").as("_n_a"))
+    val indexPosts = ranked.filter(dfOk)
+      .select(col(idCol).as("_b"), col("_h"),
+        col("_pos").as("_pos_b"), col("_n").as("_n_b"))
+    val ubound = lit(1) +
+      least(col("_n_a") - col("_pos_a"), col("_n_b") - col("_pos_b"))
+    queryPosts.join(indexPosts, "_h")
+      .filter(col("_a") =!= col("_b"))
+      .filter(if (positional) ubound * den >= col("_n_a") * num
+        else lit(true))
+      .select(col("_a"), col("_b"))
+      .distinct()
   }
 
-  /** [[containmentPairs]]' arm gate: below this many distinct sets the
-    * exact arm always runs; above it, the LSH arm runs when the average
-    * shingle document frequency exceeds [[ContainmentDfGate]].
-    */
-  private val ContainmentFloor = 100000L
-  private val ContainmentDfGate = 64.0
-
-  /** The lossless exact arm of [[containmentPairs]], bypassing the arm
-    * gate — ground truth for the recall evals and probes (which run it
-    * on sampled/large corpora where the gate would route to LSH).
-    */
-  def containmentPairsExact(docs: DataFrame, idCol: String,
-      shingleCol: String, num: Int, den: Int,
-      preHashed: Boolean = false): DataFrame = {
-    require(num > 0 && den > 0 && num <= den, "threshold must be in (0,1]")
-    graft.plans.SortedIntersectCount.register(docs.sparkSession)
-    val all = lockedPersist(docs.select(col(idCol),
-      hashedSetCol(shingleCol, preHashed)
-      .as("_sh")).withColumn("_n", size(col("_sh"))))
-    exactContainmentPairs(all, idCol, num, den, None)
-  }
-
-  // array_compact on the pre-hashed branch: drops null slots AND marks
-  // the element type non-null — the SortedIntersectCount verify kernel
-  // rejects containsNull=true (a null slot would read undefined), and a
-  // caller-supplied hash column (e.g. portableHash64, whose conv() chain
-  // is nullable-typed) legitimately carries the nullable marker with no
-  // actual nulls. The xxhash64 branch is containsNull=false already.
-  private def hashedSetCol(shingleCol: String, preHashed: Boolean): Column =
-    if (preHashed) array_sort(array_compact(col(shingleCol)))
-    else array_sort(array_distinct(transform(col(shingleCol), s => xxhash64(s))))
-
-  // ONE aggregate job for the gate stats — the scan doubles as the
-  // persist materialization (the r12 separate count()+countDistinct pair
-  // measured as fixed per-call overhead across the gated catalog
-  // queries): docs, distinct sets (hash of the set so nothing array-keyed
-  // shuffles; a collision only under-counts), total postings
-  private def containmentProbe(all: DataFrame): org.apache.spark.sql.Row =
-    lockedHead(all.agg(count(lit(1)).as("n"),
-      countDistinct(xxhash64(col("_sh"))).as("d"),
-      coalesce(sum(col("_n")), lit(0L)).as("p")))
-
-  /** GLOBAL PLAN LOCK (r16, VERDICT r15 item 1). The r15 arm-overlap race
-    * (exact containment verify intermittently emitting ~10× duplicated
-    * rows at sf0.01, pinned by `ArmOverlapSpec`) is attributed to catalyst COMPILES
-    * — specifically the `withCachedData` cached-plan substitution —
-    * racing the other arm's cache-registry mutations
-    * (persist/unpersist). The fix is structural, not a sleep: every
-    * compile and every registry mutation in the pair family goes through
-    * this lock, and only RDD/stage-level EXECUTION overlaps. Forcing
+  /** GLOBAL PLAN LOCK. Overlapped eval arms once made the exact
+    * containment verify emit ~10× duplicated rows at sf0.01 (pinned by
+    * `ArmOverlapSpec`): catalyst COMPILES — the `withCachedData`
+    * cached-plan substitution — raced the other arm's cache-registry
+    * mutations (persist/unpersist). So every compile and every registry
+    * mutation in the pair family goes through this lock, and only
+    * RDD/stage-level EXECUTION overlaps. Forcing
     * `queryExecution.executedPlan` under the lock pins the whole
     * analyze → withCachedData → optimize → physical-plan chain (with AQE
     * this does NOT run stages — AdaptiveSparkPlanExec construction is
     * lazy; stage materialization happens at execute, outside the lock);
     * the subsequent action on the SAME Dataset reuses that
     * QueryExecution, so nothing recompiles outside the lock. Overlapped
-    * arms additionally share no identically-shaped private cache (the
-    * one shared frame, `all`, is persisted by the caller and released
-    * only after both arms), so no arm can unpersist a cache the other's
-    * running plan substituted. Sequential callers pay one uncontended
-    * monitor acquisition.
+    * arms share no identically-shaped private cache (the one shared
+    * frame is persisted by the caller's scope and released only after
+    * both arms), so no arm can unpersist a cache the other's running plan
+    * substituted. Sequential callers pay one uncontended monitor
+    * acquisition.
     */
   private[graft] val planLock = new Object
 
@@ -558,13 +751,10 @@ object Dedup {
     * reuses this Dataset's own QueryExecution, so the forced
     * executedPlan is exactly what runs.
     */
-  private[graft] def lockedRows(df: DataFrame): Array[org.apache.spark.sql.Row] = {
+  private[graft] def lockedHead(df: DataFrame): org.apache.spark.sql.Row = {
     planLock.synchronized { df.queryExecution.executedPlan }
-    df.collect()
+    df.collect().head
   }
-
-  private[graft] def lockedHead(df: DataFrame): org.apache.spark.sql.Row =
-    lockedRows(df).head
 
   /** count() compiles a separate aggregate plan — route it through the
     * same compile-under-lock discipline.
@@ -580,524 +770,68 @@ object Dedup {
     df.localCheckpoint(true)
   }
 
-  /** persist registers the plan in the shared CacheManager and compiles
-    * the cached representation — a registry mutation AND a compile; both
-    * belong under the lock. Same for unpersist (registry removal).
+  /** What one [[scoped]] body persisted and checkpointed. Persists
+    * register under [[planLock]] (a registry mutation and a compile);
+    * checkpoints compile under it ([[lockedCheckpoint]]).
     */
-  private[graft] def lockedPersist(df: DataFrame,
-      level: org.apache.spark.storage.StorageLevel = pairStorage): DataFrame =
-    planLock.synchronized { df.persist(level) }
+  private[graft] final class Scope {
+    private val made =
+      scala.collection.mutable.ArrayBuffer.empty[(DataFrame, () => Unit)]
 
-  private[graft] def lockedUnpersist(df: DataFrame): Unit =
-    planLock.synchronized { df.unpersist(): Unit }
-
-  /** Both arms of a sampled containment recall eval over ONE shared
-    * (id, _sh, _n) cache and ONE gate aggregate, constructed
-    * CONCURRENTLY (r16, VERDICT r15 item 1 — the safe re-introduction of
-    * the r15 reverted overlap; see [[planLock]] for why this is now
-    * sound). The r15 sequential form persisted the identical
-    * shingle-array frame twice (once per arm) and probed it twice; here
-    * the exact arm and the banded/LSH arm read one cache that outlives
-    * both, and the only cross-arm-visible registry entry is exactly that
-    * deliberately shared frame. Returns (exactPairs, otherPairs), both
-    * eagerly checkpointed.
-    */
-  private[graft] def containmentEvalArms(docs: DataFrame, idCol: String,
-      shingleCol: String, num: Int, den: Int, preHashed: Boolean,
-      bandedQueryCap: Option[Int]): (DataFrame, DataFrame) = {
-    require(num > 0 && den > 0 && num <= den, "threshold must be in (0,1]")
-    graft.plans.SortedIntersectCount.register(docs.sparkSession)
-    val all = lockedPersist(docs.select(col(idCol),
-      hashedSetCol(shingleCol, preHashed).as("_sh"))
-      .withColumn("_n", size(col("_sh"))))
-    try {
-      // one aggregate: gate stats for the exact arm's dup-rate gate +
-      // the verify byte estimate; its scan materializes the shared cache
-      // BEFORE the arms fork, so neither arm races the other populating it
-      val probe = containmentProbe(all)
-      Par.both(
-        exactContainmentPairs(all, idCol, num, den, Some(probe),
-          ownsAll = false),
-        bandedQueryCap match {
-          case Some(qc) => collapsedContainmentPairs(all, idCol, num, den,
-            caps = Some((qc, 0L)), ownsAll = false)
-          case None => collapsedContainmentPairs(all, idCol, num, den,
-            lshBands = Some((0, 0)), ownsAll = false)
-        })
-    } finally lockedUnpersist(all)
-  }
-
-  /** The exact arm's body: dup-rate collapse gate, then the lossless
-    * posting join (non-collapsed pipeline or
-    * [[collapsedContainmentPairs]]). `probed` reuses the arm gate's
-    * aggregate when [[containmentPairs]] already ran it.
-    */
-  /** `ownsAll = false` (r16): the caller owns the persisted `all` cache
-    * (shared-arm evals keep it alive for the other arm) — this function
-    * then never unpersists it.
-    */
-  private[graft] def exactContainmentPairs(all: DataFrame, idCol: String,
-      num: Int, den: Int,
-      probed: Option[org.apache.spark.sql.Row],
-      ownsAll: Boolean = true): DataFrame = {
-    // EXACT-DUPLICATE COLLAPSE (round-12: the stage decomposition in
-    // SURVEY.md §5n-2 put the sf4-replica wall 85% in the verify join over 181M candidates, and
-    // replica cliques are the candidate mass): containment is a function
-    // of the two shingle SETS alone, so identical sets are interchangeable
-    // — group them (exact array equality, no hash-collision exposure),
-    // run the posting/verify machinery once per DISTINCT set, and expand
-    // rep-level pairs back to member pairs at the end. Replica-style
-    // corpora (and real 100 TB crawls, where exact dups are 20-40% of
-    // documents) stop paying the near-dup join per copy; a collapse
-    // group of g docs turns g² candidate×verify work into 1. On an
-    // all-distinct corpus the collapse is two linear co-partitioned
-    // shuffles on _sh and the mapping join is a no-op expansion.
-    // DUP-RATE GATE (the autoBanding pattern — decide the shape from a
-    // cheap corpus stat): under 5% exact-duplicate sets the collapse's
-    // array-keyed groupBy + mapping join cannot repay themselves — probe
-    // with one linear int-aggregate over the persisted frame (hash of
-    // the set, so nothing array-keyed shuffles in the probe; a collision
-    // only under-counts and flips the gate toward collapsing, never
-    // toward wrong results) and run the single-corpus pipeline when the
-    // corpus is effectively all-distinct. The gate reuses the arm gate's
-    // aggregate when it already ran (containmentProbe — the scan doubles
-    // as the persist materialization).
-    val probe = probed.getOrElse(containmentProbe(all))
-    val skipCollapse = probe.getLong(1) * 20L >= probe.getLong(0) * 19L // <5% dup
-    System.err.println(s"[graft] containment dup-rate gate: " +
-      s"docs=${probe.getLong(0)} distinct=${probe.getLong(1)} -> " +
-      s"${if (skipCollapse) "skip collapse" else "collapse"}")
-    if (skipCollapse) {
-      // single-cache discipline (r15 form): `all` now carries `_n` from
-      // construction, so it IS the base frame — one persisted
-      // array-heavy cache, already materialized by the gate/dup probes,
-      // serves the candidate and verify stages directly. (The r12
-      // finding stands: the persist boundary on this frame is what
-      // keeps the downstream join plans the measured shapes — the
-      // boundary is unchanged, only the redundant second copy and its
-      // materialization job are gone.)
-      val base = all
-      val ranked = lockedPersist(dfOrderedPosts(base, idCol, Seq.empty))
-      try {
-        val candidates = containmentCandidates(base, idCol, num, den,
-          rankedPosts = Some(ranked))
-        val aSide = base.select(col(idCol).as("_a"), col("_sh").as("_sh_a"),
-          col("_n").as("_n_a"))
-        val bSide = base.select(col(idCol).as("_b"), col("_sh").as("_sh_b"))
-        // strategy: see verifySide — broadcast when the arrays fit,
-        // SHUFFLE_HASH past the cap (never sort the candidate stream).
-        // base == all here, so the gate probe's (n, _, p) already IS the
-        // byte estimate — reuse it instead of a second aggregate job
-        val sideBytes = probe.getLong(0) * 24L + probe.getLong(2) * 8L
-        lockedCheckpoint(candidates.join(verifySide(aSide, sideBytes), "_a")
-          .join(verifySide(bSide, sideBytes), "_b")
-          .withColumn("_c",
-            graft.plans.SortedIntersectCount.count(col("_sh_a"), col("_sh_b")))
-          .filter(col("_c") * den >= col("_n_a") * num)
-          .select(col("_a").as("doc_sub"), col("_b").as("doc_sup"),
-            col("_c").cast("long").as("common"),
-            col("_n_a").cast("long").as("size_sub"),
-            (col("_c").cast("double") / col("_n_a")).as("containment")))
-      } finally {
-        lockedUnpersist(ranked)
-        // base == all on this path: one cache, released only by its owner
-        if (ownsAll) lockedUnpersist(all)
-      }
-    } else collapsedContainmentPairs(all, idCol, num, den, ownsAll = ownsAll)
-  }
-
-  /** BANDED containment near-dup pairs — the corpus-scale production arm
-    * of [[containmentPairs]] for high-entropy corpora (round 14; the
-    * exact arm's fresh-mode candidate mass is provably the post-filter
-    * floor, SURVEY §5n-2/§5o-7, and measured e≈1.8 at 40×).
-    *
-    * Same directed semantics (C(A,B) = |A∩B|/|A| ≥ num/den, pairs over
-    * the distinct-set corpus expanded to members), but the candidate
-    * join is BANDED instead of lossless: each query posts only its
-    * `queryCap` rarest prefix shingles, and shingles in more than
-    * `dfCap` documents are dropped from both sides (stop-shingle rule).
-    * Candidates ≤ docs × queryCap × dfCap — linear in the corpus — and
-    * every surviving pair is verified EXACTLY, so precision is 1 and
-    * only recall is approximate. Recall is measured, never assumed:
-    * `q_containment_eval_sampled` runs both arms inside the
-    * deterministic 25% id-sample and reports the recall estimate (the
-    * q_minhash_eval_sampled protocol).
-    *
-    * Always runs the exact-duplicate collapse (no gate): banded
-    * semantics are DEFINED over the distinct-set corpus, so document
-    * frequency — and with it the banding itself — cannot be inflated by
-    * exact duplicates (a boilerplate doc duplicated 10⁹ times at 100 TB
-    * must not push its own shingles over the stop-shingle cap), and
-    * within-group pairs (C = 1.0 by identity) are emitted exactly with
-    * zero recall loss. `dfCap = 0` resolves adaptively from the
-    * measured distinct-set count.
-    */
-  def containmentPairsBanded(docs: DataFrame, idCol: String,
-      shingleCol: String, num: Int, den: Int, preHashed: Boolean = false,
-      queryCap: Int = 8, dfCap: Long = 0L): DataFrame = {
-    require(num > 0 && den > 0 && num <= den, "threshold must be in (0,1]")
-    require(queryCap > 0, "queryCap must be positive")
-    graft.plans.SortedIntersectCount.register(docs.sparkSession)
-    val all = lockedPersist(docs.select(col(idCol),
-      hashedSetCol(shingleCol, preHashed).as("_sh")))
-    collapsedContainmentPairs(all, idCol, num, den,
-      caps = Some((queryCap, dfCap)))
-  }
-
-  /** LSH containment near-dup pairs — the corpus-scale production arm
-    * for DENSE-df corpora (round 14). The measured failure of both exact
-    * and df-capped postings on such corpora: the shingles that identify
-    * true pairs have df proportional to the corpus (df/N constant), so
-    * ANY posting join on raw shingles carries candidate groups ∝ N per
-    * posting — quadratic total — while a fixed df cap loses the true
-    * pairs entirely once their shingles outgrow it (measured cliff:
-    * recall 1.0 → 0.05 from sf2f to sf4f at dfCap 256, SURVEY §5p).
-    *
-    * The LSH-Ensemble reading (Zhu et al., VLDB'16) instead converts the
-    * directed containment threshold into a Jaccard floor within a
-    * declared size-ratio horizon: C(A,B) = |A∩B|/|A| ≥ t and
-    * |B| ≤ R·|A| imply J(A,B) ≥ t/(1+R−t) (worst case |A∩B| = t·|A|,
-    * |B| = R·|A|), so OPH MinHash band-bucket candidates — whose mass is
-    * bounded by band-bucket occupancy, linear on real corpora and
-    * already measured linear on this one (q_dedup_minhash e ≤ 1.11) —
-    * recover every horizon pair the banding's S-curve admits at its
-    * Jaccard. Survivors are verified EXACTLY in both directions
-    * (precision 1); recall is measured, never assumed
-    * (`q_containment_lsh_eval_sampled`). Pairs beyond the horizon are
-    * only found if a band still collides (J decays as 1/R); a 100 TB
-    * deployment chasing extreme-asymmetry pairs (tweet inside a book)
-    * should partition the index by size octave and re-band per
-    * partition — the full LSH-Ensemble construction this arm's horizon
-    * parameter is the single-partition form of.
-    *
-    * Banding: `numHashes = bands = 0` (the default) resolves via
-    * [[autoContainmentBanding]] from the measured distinct-set count once
-    * the collapse materializes — (64, 32×2) below 2²⁰ reps (the
-    * oracle-pinned shape; at the R = 2 horizon floor J = t/(3−t) = 0.36
-    * (t = 4/5), band recall 1−(1−J²)³² ≈ 0.99, and ≈ 1−10⁻¹⁴ at the
-    * J ≥ 0.8 the corpus's real pairs sit at), stepping rows 2→3→4 per
-    * ~7 size octaves to hold the coincidental band-collision mass down
-    * (same motivation as [[autoBanding]] for the hyperplane family).
-    * Explicit (numHashes, bands) pins the shape (oracle twins, probes).
-    * Always collapses exact-duplicate sets first (within-group pairs
-    * emitted exactly; df/banding invariant to dup inflation), same
-    * discipline as [[containmentPairsBanded]].
-    */
-  def containmentPairsLsh(docs: DataFrame, idCol: String,
-      shingleCol: String, num: Int, den: Int, preHashed: Boolean = false,
-      numHashes: Int = 0, bands: Int = 0): DataFrame = {
-    require(num > 0 && den > 0 && num <= den, "threshold must be in (0,1]")
-    require((numHashes == 0) == (bands == 0),
-      "numHashes and bands must be pinned together (0,0 = auto)")
-    require(numHashes == 0 || numHashes % bands == 0,
-      "bands must divide numHashes")
-    graft.plans.SortedIntersectCount.register(docs.sparkSession)
-    val all = lockedPersist(docs.select(col(idCol),
-      hashedSetCol(shingleCol, preHashed).as("_sh")))
-    collapsedContainmentPairs(all, idCol, num, den,
-      lshBands = Some((numHashes, bands)))
-  }
-
-  /** Size-octave banding for the containment-LSH arm: rows per band step
-    * 2 → 3 → 4 as the DISTINCT-SET corpus grows, band count fixed at 32.
-    * A fixed r = 2 banding admits coincidental (non-pair) band
-    * collisions with probability J², so their mass grows ~n²·E[J²] —
-    * the same fixed-shape risk [[autoBanding]] retired for the
-    * hyperplane family in r11. Raising rows sharpens the S-curve
-    * (per-band collision J^r) at the cost of horizon-floor recall
-    * (J = 0.36: r2 ≈ 0.99, r3 ≈ 0.78, r4 ≈ 0.42 per 32 bands) — still
-    * ≥ 1−10⁻¹⁰ at the J ≥ 0.8 the measured true pairs sit at, and
-    * recall is MEASURED per rung, never assumed (probe grid committed in
-    * probes/; `q_containment_lsh_eval_sampled` keeps it continuously
-    * measurable). Floors to the oracle-pinned (64, 32×2) below 2²⁰ reps
-    * so both correctness scales and the 10–40× chain keep their r14
-    * shapes byte-for-byte.
-    */
-  def autoContainmentBanding(nReps: Long): (Int, Int) =
-    if (nReps < (1L << 20)) (64, 32)        // r = 2 — oracle-pinned shape
-    else if (nReps < (1L << 27)) (96, 32)   // r = 3
-    else (128, 32)                          // r = 4
-
-  /** The collapse arm of [[containmentPairs]] — entered when the
-    * dup-rate gate measured ≥ 5% exact-duplicate sets, and ALWAYS by
-    * [[containmentPairsBanded]] (banded semantics are defined over the
-    * distinct-set corpus so document frequency — hence the banding
-    * itself — is invariant to exact-duplicate inflation).
-    *
-    * `caps` = Some((queryCap, dfCap)) threads the banded caps into the
-    * candidate join (positional filter off — see
-    * [[containmentCandidates]]); dfCap 0 resolves adaptively from the
-    * measured rep count once the rep table materializes.
-    */
-  private[graft] def collapsedContainmentPairs(all: DataFrame, idCol: String,
-      num: Int, den: Int, caps: Option[(Int, Long)] = None,
-      lshBands: Option[(Int, Int)] = None,
-      ownsAll: Boolean = true): DataFrame = {
-    // min-id representative per distinct set; mapping id -> rep is a
-    // co-partitioned join on _sh (never a collect_list of group members
-    // — a boilerplate doc duplicated 10⁹ times must not become one row)
-    val repTab = all.groupBy(col("_sh")).agg(min(col(idCol)).as("_rep"))
-    val base = lockedPersist(repTab
-      .select(col("_rep").as(idCol), col("_sh"))
-      .withColumn("_n", size(col("_sh"))))
-    val mapping = lockedPersist(all.join(repTab, "_sh")
-      .select(col(idCol).as("_m"), col("_rep")))
-    // materialize both derived caches NOW and release the corpus-scale
-    // source cache before the heavy candidate/verify stages — the r12
-    // shape held three near-identical array-heavy caches (all/base/
-    // mapping) until job end, tripling pair-family pressure on the
-    // 24g-sensitive heaps for no reuse (every later read is off base or
-    // mapping). r15: the two materialization jobs are independent — run
-    // them concurrently (guide §2.6) — and base's job is ONE aggregate
-    // that also returns Σ_n, which is exactly the verify-side byte
-    // estimate arraySideBytes used to pay a third job for.
-    val (baseStats, _) = Par.both(
-      lockedHead(base.agg(count(lit(1)), coalesce(sum(col("_n")), lit(0L)))),
-      lockedCount(mapping))
-    val nReps = baseStats.getLong(0)
-    val repSideBytes = nReps * 24L + baseStats.getLong(1) * 8L
-    if (ownsAll) lockedUnpersist(all)
-    // adaptive stop-shingle cap: a shingle present in more than ~1/64 of
-    // the distinct-set corpus (floor 256 so small corpora never band) is
-    // boilerplate whose posting group is quadratic candidate mass with
-    // no dedup signal — measured grid in SURVEY §5p picks the rule
-    val resolvedCaps = caps.map { case (qc, dc) =>
-      (qc, if (dc > 0) dc else math.max(256L, nReps / 64L))
+    def persist(df: DataFrame, level: StorageLevel = pairStorage): DataFrame = {
+      val p = planLock.synchronized { df.persist(level) }
+      made += p -> (() => planLock.synchronized { p.unpersist(): Unit })
+      p
     }
-    resolvedCaps.foreach { case (qc, dc) =>
-      System.err.println(s"[graft] containment banded caps: reps=$nReps " +
-        s"queryCap=$qc dfCap=$dc")
+
+    /** Releasing a checkpoint drops its blocks, so only a frame nothing
+      * lazy still reads may be released.
+      */
+    def checkpoint(df: DataFrame): DataFrame = {
+      val c = lockedCheckpoint(df)
+      made += c -> (() => c.queryExecution.logical.foreach {
+        case r: LogicalRDD => r.rdd.unpersist(blocking = false): Unit
+        case _ => ()
+      })
+      c
     }
-    // the rank-annotated postings feed BOTH sides of the candidate join
-    // (query prefix + full index): persist them for the duration of the
-    // (eager) checkpointed computation or the df-join + rank window would
-    // run twice — one full-posting shuffle pair per side (measured: the
-    // recomputation alone put sf2 containment from 18 to 29 s).
-    // The LSH arm never builds postings — its candidates come from the
-    // OPH band-bucket self-join — so the persist is posting-path-only.
-    val ranked =
-      if (lshBands.isDefined) None
-      else Some(lockedPersist(dfOrderedPosts(base, idCol, Seq.empty)))
-    try {
-      val candidates = lshBands match {
-        case Some((numHashes0, bands0)) =>
-          // MinHash band-bucket candidates (the LSH-Ensemble reading of
-          // containment: C ≥ t within size ratio R implies
-          // J ≥ t/(1+R−t), so Jaccard banding bounds candidate mass
-          // linearly where the posting join's df-driven mass is
-          // quadratic). Buckets are undirected; containment is directed,
-          // so each colliding pair enters the verify in both directions.
-          // (0, 0) = resolve the shape from the measured distinct-set
-          // count (autoContainmentBanding) now that nReps is known.
-          val (numHashes, bands) =
-            if (numHashes0 > 0) (numHashes0, bands0)
-            else {
-              val shape = autoContainmentBanding(nReps)
-              System.err.println(s"[graft] containment lsh auto-banding: " +
-                s"reps=$nReps -> hashes=${shape._1} bands=${shape._2} " +
-                s"rows=${shape._1 / shape._2}")
-              shape
-            }
-          // materialize the OPH signature pass ONCE (r16): unchecked, the
-          // signature aggregate re-ran on BOTH sides of the band
-          // self-join AND again under the unionAll's second `und`
-          // reference — the profile showed FOUR ~7 s signature stages
-          // (28 s of the query's 34 s task time) computing identical
-          // sigs. One checkpointed (id, _sig) frame (64 longs/doc) feeds
-          // the cheap band-key explode on every reference; the banding
-          // function is literally the same composition
-          // (minhashBandKeys = bandKeysFromSig ∘ minhashSigs), so bucket
-          // keys — and with them the candidate set and the verified
-          // output — are byte-identical.
-          val sigs = lockedCheckpoint(minhashSigs(
-            base.select(col(idCol), col("_sh")), idCol, numHashes))
-          val banded = bandKeysFromSig(sigs, idCol, numHashes, bands)
-          val other = banded.select(col(idCol).as("_b2"),
-            col("band"), col("bk"))
-          // und is output-sized (candidate pairs) — checkpoint so the
-          // both-directions union reads it instead of re-running the
-          // band self-join twice
-          val und = lockedCheckpoint(banded.join(other, Seq("band", "bk"))
-            .filter(col(idCol) < col("_b2"))
-            .select(col(idCol).as("_a"), col("_b2").as("_b"))
-            .distinct())
-          und.unionAll(und.select(col("_b").as("_a"), col("_a").as("_b")))
-        case None => containmentCandidates(base, idCol, num, den,
-          positional = resolvedCaps.isEmpty,
-          rankedPosts = ranked,
-          queryCap = resolvedCaps.map(_._1),
-          dfCap = resolvedCaps.map(_._2))
-      }
-      val aSide = base.select(col(idCol).as("_a"), col("_sh").as("_sh_a"),
-        col("_n").as("_n_a"))
-      val bSide = base.select(col(idCol).as("_b"), col("_sh").as("_sh_b"))
-      // rep-level qualifying pairs (directed, between DISTINCT sets);
-      // _sh is sorted-distinct by construction, so the two-pointer count
-      // IS size(array_intersect) without the per-pair hash set + the
-      // materialized intersection array the old verify allocated 181M×
-      // strategy: see verifySide — broadcast when the arrays fit,
-      // SHUFFLE_HASH past the cap (never sort the candidate stream);
-      // byte estimate reused from the materialization aggregate above
-      val sideBytes = repSideBytes
-      val repPairs = candidates.join(verifySide(aSide, sideBytes), "_a")
-        .join(verifySide(bSide, sideBytes), "_b")
-        .withColumn("_c",
-          graft.plans.SortedIntersectCount.count(col("_sh_a"), col("_sh_b")))
-        .filter(col("_c") * den >= col("_n_a") * num)
-        .select(col("_a"), col("_b"), col("_c"), col("_n_a"))
-      // expand rep pairs to member pairs: every (a ∈ group(_a), b ∈
-      // group(_b)) inherits the rep pair's exact counts (same sets).
-      // Output-sized joins.
-      val subMap = mapping.select(col("_m").as("doc_sub"), col("_rep").as("_a"))
-      val supMap = mapping.select(col("_m").as("doc_sup"), col("_rep").as("_b"))
-      val cross = repPairs.join(subMap, "_a").join(supMap, "_b")
-        .select(col("doc_sub"), col("doc_sup"),
-          col("_c").cast("long").as("common"),
-          col("_n_a").cast("long").as("size_sub"),
-          (col("_c").cast("double") / col("_n_a")).as("containment"))
-      // within-group pairs: identical sets contain each other exactly
-      // (C = 1 ≥ any threshold) — every ordered member pair, both
-      // directions. Output-sized (these ARE result rows).
-      val m2 = mapping.toDF("_m2", "_rep")
-      // _n = 0 groups (empty shingle sets) never share a posting, so the
-      // pre-collapse pipeline never paired them — keep them out here too
-      val sizes = base.select(col(idCol).as("_rep"), col("_n"))
-        .filter(col("_n") > 0)
-      val within = mapping.join(m2, "_rep")
-        .filter(col("_m") =!= col("_m2"))
-        .join(sizes, "_rep")
-        .select(col("_m").as("doc_sub"), col("_m2").as("doc_sup"),
-          col("_n").cast("long").as("common"),
-          col("_n").cast("long").as("size_sub"),
-          lit(1.0).as("containment"))
-      lockedCheckpoint(cross.unionAll(within))
-    } finally {
-      ranked.foreach(lockedUnpersist); lockedUnpersist(base)
-      lockedUnpersist(mapping)
-      if (ownsAll) lockedUnpersist(all)
+
+    /** Release `df` now if this scope made it; otherwise a no-op (its
+      * owner releases it).
+      */
+    def release(df: DataFrame): Unit = {
+      val i = made.indexWhere(_._1 eq df)
+      if (i >= 0) made.remove(i)._2()
+    }
+
+    private[Dedup] def close(keep: Any): Unit = {
+      made.foreach { case (df, free) => if (!(df eq keep.asInstanceOf[AnyRef])) free() }
+      made.clear()
     }
   }
 
-  /** Candidate (query, index) pairs for the containment posting join —
-    * package-private for the scale probes' positional-filter A/B;
-    * [[containmentPairs]] always runs with `positional` on.
-    *
-    * The query side posts its `n - ceil(t·n) + 1` smallest hashes (any
-    * pair with C ≥ t must share one of them — else A∩B fits inside A's
-    * top `ceil(t·n) - 1` elements, a contradiction), the index side
-    * posts everything, and BOTH sides carry their rarest-first rank so
-    * the positional filter can bound the overlap pairwise: a match at
-    * ranks (i, j) of the pair's first shared element bounds
-    * |A∩B| ≤ 1 + min(n_a−i, n_b−j), and C ≥ t needs |A∩B|·den ≥ n_a·num
-    * — all-integer, so float rounding can never break losslessness. (The
-    * query-side-only bound `1 + n_a − i ≥ ceil(t·n_a)` is a tautology at
-    * every prefix position — the prefix length is chosen as exactly the
-    * positions that satisfy it — which is why the index side's rank is
-    * what makes the filter bite.)
+  /** Run `body` with a fresh [[Scope]] and release everything it made when
+    * the body returns or throws, except the frame it returns. A frame is
+    * released by the scope that made it: an arm reading a frame its
+    * caller persisted leaves it to the caller.
     */
-  private[graft] def containmentCandidates(base: DataFrame, idCol: String,
-      num: Int, den: Int, positional: Boolean = true,
-      rankedPosts: Option[DataFrame] = None,
-      bucketedIndex: Boolean = false,
-      queryCap: Option[Int] = None,
-      dfCap: Option[Long] = None): DataFrame = {
-    // exact integer ceil(t*n), immune to 0.8*35 = 28.000000000000004
-    val ceilTn = ((col("_n") * num + (den - 1)) / den).cast("int")
-    val prefixLen = col("_n") - ceilTn + 1
-    // rarest-first keeps frequent shingles out of the candidate join's
-    // query side AND gives both sides the shared global rank the
-    // positional filter needs — one window over all postings, reused by
-    // both branches of the self-join (callers pass a persisted frame via
-    // rankedPosts so the window genuinely runs once)
-    val ranked = rankedPosts.getOrElse(dfOrderedPosts(base, idCol, Seq.empty))
-    // LENGTH-BUCKETED INDEX PREFIX (round 13, the fresh-mode candidate
-    // floor probe). Bucket query docs by size octave k = ⌊log₂ n_a⌋; for
-    // every query in bucket k the overlap must reach o ≥ ⌈t·2ᵏ⌉, and the
-    // pair's FIRST shared element at index rank j satisfies
-    // o ≤ n_b − j + 1 (all shared elements sit at rank ≥ j on the index
-    // side once j is the first), so j ≤ n_b − ⌈t·2ᵏ⌉ + 1: the index posts
-    // only that rank prefix per query bucket. Lossless by the same
-    // first-shared-element lemma as the query prefix.
-    //
-    // SCOPE — be precise about what this can and cannot cut: the emitted
-    // candidate SET is IDENTICAL to the positional filter's (the bucket
-    // bound is the positional bound weakened from n_a to 2^⌊log₂ n_a⌋, so
-    // every match the bucket drops, the positional filter below drops
-    // too — PrefixFilterPropertySpec pins the equality). What moves is
-    // WHERE the pruning happens: the dropped matches are never GENERATED
-    // by the join (index postings above the per-octave cutoff never enter
-    // it), instead of being produced and then filtered — i.e. this trades
-    // per-octave replication of the index posting shuffle for the
-    // posting join's raw match-generation volume. It cannot shrink the
-    // post-filter distinct (the sf4-fresh 450M-row stage); that mass
-    // survives the positional bound itself. ⌊log₂ n⌋ is integer-exact
-    // (length(bin(n))−1) — no float log whose rounding could flip a
-    // bucket (an under-assigned bucket would still be lossless, but the
-    // rule should not depend on that).
-    //
-    // MEASURED NEGATIVE RESULT (round 13) — default OFF. On the r13 scale
-    // corpora the trade LOSES catastrophically: document sizes span
-    // several live octaves, and every SMALL octave's cutoff
-    // (n_b − ⌈t·2ᵏ⌉ + 1 with 2ᵏ ≪ n_b) keeps ~all index postings, so
-    // each such octave adds a near-full copy of the posting table to the
-    // (_h, _qb) join's sort — sf4-replica containment went 25.5 s →
-    // 669 s FAILED (SPILL_OUT_OF_MEMORY: the expanded sort spilled past
-    // the box's free disk). The win case is a size-HOMOGENEOUS corpus
-    // (1-2 live octaves, where the single live cutoff prunes ~70% of
-    // index postings); callers with that shape can opt in explicitly.
-    // The honest general fix for the fresh-mode candidate floor remains
-    // open: the floor is the post-positional distinct mass itself.
-    // BANDED CAPS (round 14, the fresh-mode production arm — see
-    // [[containmentPairsBanded]]): queryCap keeps only each query's
-    // `queryCap` RAREST prefix postings (the lossless prefix can be
-    // ~(1−t)·n postings whose df grows with the corpus; the rarest few
-    // carry nearly all of the discrimination), and dfCap drops postings
-    // of shingles present in more than `dfCap` documents from BOTH sides
-    // (stop-shingle rule, same discipline as qWinnowPairs' df ≤ 100):
-    // their posting groups are the quadratic candidate mass and they
-    // carry no dedup signal. Candidates are then ≤ docs × queryCap ×
-    // dfCap — LINEAR in the corpus. Recall < 1 (a pair found only
-    // through a dropped posting is lost) and is MEASURED, never assumed
-    // (q_containment_eval_sampled). Callers passing caps must run with
-    // positional = false: the positional bound's first-shared-element
-    // lemma assumes the globally-first shared element was generated,
-    // which a cap can remove — the bound would then over-prune pairs the
-    // capped join legitimately found through a later element.
-    require((queryCap.isEmpty && dfCap.isEmpty) || !positional,
-      "positional filter is unsound under banded caps (first-shared-element lemma)")
-    val dfOk = dfCap.map(col("_df") <= _)
-    val queryPosts0 = ranked.filter(col("_pos") <= prefixLen)
-      .filter(queryCap.map(col("_pos") <= _).getOrElse(lit(true)))
-      .filter(dfOk.getOrElse(lit(true)))
-      .select(col(idCol).as("_a"), col("_h"),
-        col("_pos").as("_pos_a"), col("_n").as("_n_a"))
-    val indexPosts0 = ranked.filter(dfOk.getOrElse(lit(true)))
-      .select(col(idCol).as("_b"), col("_h"),
-        col("_pos").as("_pos_b"), col("_n").as("_n_b"))
-    val (queryPosts, indexPosts, joinKeys) =
-      if (!bucketedIndex) (queryPosts0, indexPosts0, Seq("_h"))
-      else {
-        val qb = (length(bin(col("_n_a"))) - 1).cast("int")
-        val q = queryPosts0.withColumn("_qb", qb)
-        // live octaves: tiny (≤ 64 rows) — broadcast to expand each index
-        // posting into exactly the octaves whose prefix keeps it
-        val octaves = q.select(col("_qb")).distinct()
-        // ⌈t·2ᵏ⌉ integer-exact; SQL shiftleft (the Scala helper only takes
-        // a literal shift). Exact-integer double division, same pattern as
-        // ceilTn above.
-        val minOverlap = ((expr("shiftleft(CAST(1 AS BIGINT), _qb)") * num +
-          (den - 1)) / den).cast("long")
-        val ix = indexPosts0.join(broadcast(octaves),
-          col("_pos_b") <= col("_n_b") - minOverlap + 1)
-        (q, ix, Seq("_h", "_qb"))
-      }
-    val ubound = lit(1) +
-      least(col("_n_a") - col("_pos_a"), col("_n_b") - col("_pos_b"))
-    queryPosts.join(indexPosts, joinKeys)
-      .filter(col("_a") =!= col("_b"))
-      .filter(if (positional) ubound * den >= col("_n_a") * num
-        else lit(true))
-      .select(col("_a"), col("_b"))
+  private[graft] def scoped[A](body: Scope => A): A = {
+    val sc = new Scope
+    var out: Any = null
+    try { val a = body(sc); out = a; a }
+    finally sc.close(out)
+  }
+
+  /** Candidate pairs (a < b) of a band-key frame (idCol, band, bk): ids
+    * that share a band bucket, once each. Only ids and band slices travel
+    * through the band shuffle.
+    */
+  private[graft] def bandPairs(banded: DataFrame, idCol: String,
+      a: String = "_a", b: String = "_b"): DataFrame = {
+    val other = banded.select(col(idCol).as(s"${idCol}_b"), col("band"), col("bk"))
+    banded.join(other, Seq("band", "bk"))
+      .filter(col(idCol) < col(s"${idCol}_b"))
+      .select(col(idCol).as(a), col(s"${idCol}_b").as(b))
       .distinct()
   }
 
@@ -1203,11 +937,7 @@ object Dedup {
       hashed.select(col(idCol),
         graft.plans.MinHashSigOf.minhashSigOf(col("_sh")).as("_sig")),
       idCol, numHashes, bands)
-    val other = banded.select(col(idCol).as(s"${idCol}_b"), col("band"), col("bk"))
-    val pairs = banded.join(other, Seq("band", "bk"))
-      .filter(col(idCol) < col(s"${idCol}_b"))
-      .select(col(idCol).as("doc_a"), col(s"${idCol}_b").as("doc_b"))
-      .distinct()
+    val pairs = bandPairs(banded, idCol, "doc_a", "doc_b")
     val jac = size(array_intersect(col("_sh"), col("_sh_b"))).cast("double") /
       size(array_union(col("_sh"), col("_sh_b")))
     pairs
@@ -1527,7 +1257,7 @@ object Dedup {
     graft.plans.SignProjKeys.register(emb.sparkSession,
       hyperplanes.take(bands * rows), rows)
     val base = emb.select((idCol +: vecCol +: extraKeys).map(col): _*)
-      .persist(Dedup.pairStorage)
+      .persist(pairStorage)
     try {
       // all band keys in one native pass (graft.plans.SignProjKeys) —
       // bands×rows interpreted dot-folds would dominate the query

@@ -3,6 +3,8 @@ package graft.operators
 import scala.concurrent.{Await, Future}
 import scala.concurrent.duration.Duration
 import scala.concurrent.ExecutionContext.Implicits.global
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.SparkSession
 
 /** Driver-side concurrency: the one place the engine runs its own work on
   * the global pool. Both helpers await everything they started before
@@ -15,11 +17,14 @@ private[graft] object Par {
     * arms and for materialisation jobs with no mutual dependency, so the
     * second job chain is not serialized behind the first's stage tails.
     * Spark work in either must route every compile, persist, unpersist
-    * and checkpoint through [[Dedup.planLock]]'s helpers. If `fa` fails,
-    * `fb` is still awaited, and `fa`'s failure is the one rethrown.
+    * and checkpoint through [[Dedup.planLock]]'s helpers. `fb`'s jobs
+    * carry the caller's job group and description, so cancelling the
+    * group stops both arms. If `fa` fails, `fb` is still awaited, and
+    * `fa`'s failure is the one rethrown.
     */
   def both[A, B](fa: => A, fb: => B): (A, B) = {
-    val f = Future(fb)
+    val job = jobProps()
+    val f = Future(withJobProps(job)(fb))
     val a =
       try fa
       catch { case t: Throwable =>
@@ -27,6 +32,31 @@ private[graft] object Par {
         throw t
       }
     (a, Await.result(f, Duration.Inf))
+  }
+
+  /** Spark keeps a job's group, description and interrupt-on-cancel flag
+    * in thread-local properties, which a pool thread does not inherit
+    * (or inherits stale, from whichever thread created it).
+    */
+  private val JobKeys = Seq("spark.jobGroup.id", "spark.job.description",
+    "spark.job.interruptOnCancel")
+
+  private def jobProps(): Option[(SparkContext, Seq[(String, String)])] =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext)
+      .map(sc => sc -> JobKeys.map(k => k -> sc.getLocalProperty(k)))
+
+  /** Run `body` with the caller's job properties on this thread, then
+    * restore the thread's own.
+    */
+  private def withJobProps[B](job: Option[(SparkContext, Seq[(String, String)])])(
+      body: => B): B = job match {
+    case None => body
+    case Some((sc, props)) =>
+      val own = props.map { case (k, _) => k -> sc.getLocalProperty(k) }
+      props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      try body
+      finally own.foreach { case (k, v) => sc.setLocalProperty(k, v) }
   }
 
   /** Split [0, n) into chunks and run `f(start, end)` for each on the

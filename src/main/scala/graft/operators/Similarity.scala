@@ -60,12 +60,6 @@ object Similarity {
     emb.withColumn("bucket", best.getField("cid"))
   }
 
-  /** 100 TB layout: persist the IVF assignment partitioned by bucket so a
-    * probe prunes at the source (only `nprobe` of K directories are read).
-    */
-  def writeBucketed(assigned: DataFrame, path: String): Unit =
-    assigned.write.mode("overwrite").partitionBy("bucket").parquet(path)
-
   /** Distributed Lloyd k-means trainer for the IVF index (cosine
     * assignment, mean update). Per iteration: one zero-shuffle argmax
     * projection over the corpus (centroids are literals, K ≪ n) plus one

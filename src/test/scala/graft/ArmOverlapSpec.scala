@@ -78,6 +78,47 @@ class ArmOverlapSpec extends AnyFunSuite {
     assert(bDone, "second arm must be awaited before propagation")
   }
 
+  test("Par.both runs both arms' jobs under the caller's job group") {
+    val sc = spark.sparkContext
+    // (group, description, interrupt-on-cancel) of every job started
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]
+    val endSeen = new java.util.concurrent.CountDownLatch(1)
+    val keys = Seq("spark.jobGroup.id", "spark.job.description",
+      "spark.job.interruptOnCancel")
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val props = keys.map(k => Option(e.properties).map(_.getProperty(k)).orNull)
+        if (props.head == "arms-end") endSeen.countDown() else seen.add(props)
+      }
+    }
+    def arm(n: Int): Long = spark.range(n).filter(col("id") % 3 === 0).count()
+    sc.addSparkListener(listener)
+    try {
+      // one job group per round: a pool thread that kept the group of the
+      // thread that created it, or none, fails the later rounds
+      for (i <- 1 to 3) {
+        sc.setJobGroup(s"arms-$i", s"arms round $i", interruptOnCancel = true)
+        try {
+          assert(Par.both(arm(100), arm(200)) == ((34L, 67L)))
+          assert(sc.getLocalProperty("spark.jobGroup.id") == s"arms-$i")
+        } finally sc.clearJobGroup()
+      }
+      sc.setJobGroup("arms-end", "marker")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      assert(endSeen.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    val jobs = seen.toArray.toSeq.map(_.asInstanceOf[Seq[String]])
+    for (i <- 1 to 3) {
+      val round = jobs.filter(_.head == s"arms-$i")
+      assert(round.nonEmpty && round.forall(_ == Seq(s"arms-$i",
+        s"arms round $i", "true")), s"round $i: $round")
+    }
+    // each round's arms ran the same jobs; none ran outside a round's group
+    assert(jobs.forall(_.head != null), s"jobs without a group: $jobs")
+    assert(jobs.groupBy(_.head).values.map(_.size).toSet.size == 1, jobs)
+  }
+
   test("Par.chunks propagates the first chunk's failure after draining " +
       "every other chunk (no sibling still writing the caller's arrays)") {
     val n = 1000

@@ -9,8 +9,7 @@ import graft.sources.Sources
 
 /** Scale-behavior specs for the dedup/similarity family: CC convergence on
   * deep chains (pointer jumping, no silent truncation), portable-hash
-  * SimHash parity, zero-shuffle IVF assignment, and source-level partition
-  * pruning for the bucketed ANN layout.
+  * SimHash parity, zero-shuffle IVF assignment.
   */
 class DedupScaleSpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.configure(
@@ -95,28 +94,6 @@ class DedupScaleSpec extends AnyFunSuite {
       .filter($"_rn" === 1).select($"vec_id", $"cid".as("bucket_exp"))
     val joined = assigned.select($"vec_id", $"bucket").join(expected, "vec_id")
     assert(joined.filter($"bucket" =!= $"bucket_exp").count() == 0)
-  }
-
-  test("bucketed IVF layout: probe prunes partitions at the source") {
-    import spark.implicits._
-    val emb = Sources.embeddings(spark, sf)
-    val centroids = emb.filter($"vec_id" < 8)
-      .select($"vec_id".as("cid"), $"embedding".as("cvec"))
-    val assigned = Similarity.assignIvf(emb, "vec_id", "embedding",
-      centroids, "cid", "cvec")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
-    Similarity.writeBucketed(assigned, dir)
-    val back = spark.read.parquet(dir)
-    val probed = back.filter($"bucket".isin(0L, 1L, 2L))
-    val plan = probed.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("bucket"),
-      s"no partition pruning visible:\n$plan")
-    // pruned read returns exactly the probed buckets (partition-dir columns
-    // read back as int — compare as Number)
-    assert(probed.select($"bucket").distinct().collect()
-      .map(_.getAs[Number](0).longValue).toSet.subsetOf(Set(0L, 1L, 2L)))
-    assert(probed.count() ==
-      assigned.filter($"bucket".isin(0L, 1L, 2L)).count())
   }
 
   test("knnJoin/hardNegatives: chunked query side equals the one-shot path") {

@@ -9,8 +9,7 @@ import org.apache.spark.sql.SparkSession
 object JobCensus {
 
   /** The job description of every Spark job started while `body` runs,
-    * on any thread: a job `body` runs on a pool thread (a [[graft.operators.Par]]
-    * arm) need not carry the caller's job group. The listener counts the
+    * on any thread, whatever its job group. The listener counts the
     * jobs between a start marker run before `body` and an end marker run
     * after it; listener events arrive in order, so once the end marker is
     * seen, every job of `body` has been counted. Specs run one at a time,

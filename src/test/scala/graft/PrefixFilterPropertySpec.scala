@@ -142,55 +142,4 @@ class PrefixFilterPropertySpec extends AnyFunSuite {
           s"(${withPos.size} of ${without.size})")
     }
   }
-
-  test("length-bucketed index prefix is lossless and cuts containment " +
-      "candidates across size octaves") {
-    import spark.implicits._
-    for (seed <- Seq(5, 13, 29)) {
-      val rng = new scala.util.Random(seed)
-      val docs = corpus(seed)
-      // size-DIVERSE additions so several octaves are live: big docs
-      // (supersets, 4-8x the base sizes) and small strict subsets — the
-      // bucketing must stay exact when query and index sizes differ by
-      // octaves, not just on the homogeneous base corpus
-      val big = docs.take(8).map { case (id, s) =>
-        (id + 3) -> (s ++ (2000L + seed until 2000L + seed + 60L)
-          .filter(_ => rng.nextBoolean()))
-      }
-      val small = docs.slice(8, 16).map { case (id, s) =>
-        (id + 4) -> s.toVector.sortBy(identity).take(4).toSet
-      }
-      val all = docs ++ big ++ small
-      val base = baseFrame(all)
-      def cands(bucketed: Boolean, positional: Boolean): Set[(Long, Long)] =
-        Dedup.containmentCandidates(base, "doc_id", num = 4, den = 5,
-            positional = positional, bucketedIndex = bucketed)
-          .as[(Long, Long)].collect().toSet
-      val truePairs = (for {
-        (a, sa) <- all; (b, sb) <- all
-        if a != b && sa.nonEmpty && (sa & sb).size * 5 >= sa.size * 4
-      } yield (a, b)).toSet
-      assert(truePairs.nonEmpty, "degenerate corpus: no true containments")
-      // 1. SUBSUMPTION (the documented contract): with the positional
-      // filter on, bucketing must not change the candidate set at all —
-      // the bucket bound is the positional bound weakened to the octave
-      // floor, so it prunes match GENERATION, never a surviving candidate
-      assert(cands(bucketed = true, positional = true) ==
-          cands(bucketed = false, positional = true),
-        s"seed=$seed bucketed index changed the positional candidate set")
-      // 2. with the positional filter OFF the bucket bound is the only
-      // match-level pruning — it must be lossless and actually bite
-      // (this is the match-volume cut the bucketing exists for)
-      val unbucketed = cands(bucketed = false, positional = false)
-      val bucketed = cands(bucketed = true, positional = false)
-      assert(bucketed.subsetOf(unbucketed),
-        s"seed=$seed bucketed emitted non-candidates: " +
-          s"${(bucketed -- unbucketed).take(5)}")
-      assert(truePairs.subsetOf(bucketed),
-        s"seed=$seed dropped true pairs: ${(truePairs -- bucketed).take(5)}")
-      assert(bucketed.size < unbucketed.size,
-        s"seed=$seed bucketed index prefix pruned nothing " +
-          s"(${bucketed.size} of ${unbucketed.size})")
-    }
-  }
 }
