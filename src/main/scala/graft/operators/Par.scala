@@ -14,13 +14,21 @@ import org.apache.spark.sql.SparkSession
 private[graft] object Par {
 
   /** Run `fb` on the pool and `fa` on the caller's thread. Used for eval
-    * arms and for materialisation jobs with no mutual dependency, so the
-    * second job chain is not serialized behind the first's stage tails.
-    * Spark work in either must route every compile, persist, unpersist
-    * and checkpoint through [[Dedup.planLock]]'s helpers. `fb`'s jobs
-    * carry the caller's job group and description, so cancelling the
-    * group stops both arms. If `fa` fails, `fb` is still awaited, and
-    * `fa`'s failure is the one rethrown.
+    * arms, for materialisation jobs with no mutual dependency, and for the
+    * streaming stores' writes, so the second job chain is not serialized
+    * behind the first's stage tails.
+    *
+    * The arms' plans compile concurrently, which is safe only while no
+    * compile races a cache-registry mutation (see [[Dedup.planLock]]). So
+    * an arm that persists, unpersists or checkpoints must route those and
+    * every compile through [[Dedup.planLock]]'s helpers. Arms that mutate
+    * nothing may compile freely: the streaming stores' arms only write
+    * files and only read caches that were filled before the fork, and the
+    * caller releases those caches after this returns.
+    *
+    * `fb`'s jobs carry the caller's job group and description, so
+    * cancelling the group stops both arms. If `fa` fails, `fb` is still
+    * awaited, and `fa`'s failure is the one rethrown.
     */
   def both[A, B](fa: => A, fb: => B): (A, B) = {
     val job = jobProps()

@@ -90,7 +90,8 @@ private[graft] object StoreMaint {
     * partition is sorted by `bucketCol`. Two jobs (the shuffle and the
     * write), no sampling job. A value outside the domain goes to the first
     * or last partition, so the file ranges stay disjoint whatever the
-    * column holds.
+    * column holds. For P = 1 the rows are coalesced into one task instead
+    * of shuffled: the same one file sorted by bucket, in ONE job.
     *
     * P is the plan's estimated size over the advisory partition size
     * (`spark.sql.adaptive.advisoryPartitionSizeInBytes`), at least 1 and
@@ -108,10 +109,23 @@ private[graft] object StoreMaint {
       .min(conf.numShufflePartitions).toInt
     val b = least(greatest(col(bucketCol).cast("long"), lit(0L)),
       lit(nBuckets - 1L))
-    df.repartitionById(p, floor(b * p / nBuckets).cast("int"))
+    (if (p == 1) df.coalesce(1)
+     else df.repartitionById(p, floor(b * p / nBuckets).cast("int")))
       .sortWithinPartitions(bucketCol)
       .write.mode(SaveMode.Overwrite).parquet(path)
   }
+
+  /** The rows of a store read `df` that batch `batchId` may probe: those
+    * that ORIGINATE strictly earlier (`src_batch`, which survives
+    * compaction), so neither a replay's own prior write nor a later batch
+    * is seen. The partition filter `batch_id =!= batchId` prunes the
+    * batch's own directory when the scan is planned, so a flags plan that
+    * overlaps the batch's store write never opens the files that write
+    * deletes; every row there has `src_batch = batchId`, so the result is
+    * the same.
+    */
+  def earlierRows(df: DataFrame, batchId: Long): DataFrame =
+    df.filter(col("src_batch") < batchId).filter(col("batch_id") =!= batchId)
 
   /** Row count and bucket set of `df`'s `bucketCol` (values in
     * `[0, nBuckets)`), in ONE narrow job: each partition counts its rows

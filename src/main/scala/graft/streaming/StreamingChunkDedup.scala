@@ -81,9 +81,10 @@ object StreamingChunkDedup {
           // that skips hb ranges at the source
           // only chunks ORIGINATING strictly earlier (src_batch survives
           // compaction): a replayed batch must not see its own (failed)
-          // prior write, nor later batches' chunks
-          val st = spark.read.schema(StoreSchema).parquet(storeDir)
-            .filter(col("src_batch") < batchId)
+          // prior write, nor later batches' chunks; the own-batch prune
+          // lets the report overlap the store write
+          val st = StoreMaint.earlierRows(
+              spark.read.schema(StoreSchema).parquet(storeDir), batchId)
             .filter(col("hb").isin(touched: _*))
             .select(col("h")).distinct()
           val probe =
@@ -103,12 +104,16 @@ object StreamingChunkDedup {
           Seq("doc_id"), "left")
         .select(col("doc_id"), col("n_chunks"),
           coalesce(col("n_dup"), lit(0L)).as("n_dup_chunks"))
-      phase("report")(report.write.mode(SaveMode.Overwrite)
-        .parquet(s"$flagDir/batch_id=$batchId"))
-      phase("store")(StoreMaint.writeTree(ch.select(col("h")).distinct()
-        .select(col("h"), pmod(col("h"), lit(Buckets)).as("hb"))
-        .withColumn("src_batch", lit(batchId)),
-        "hb", Buckets, s"$storeDir/batch_id=$batchId"))
+      // the report and the store write overlap, as in StreamingDedup:
+      // both read only the cache the census filled, and neither persists
+      // or unpersists anything
+      graft.operators.Par.both(
+        phase("report")(report.write.mode(SaveMode.Overwrite)
+          .parquet(s"$flagDir/batch_id=$batchId")),
+        phase("store")(StoreMaint.writeTree(ch.select(col("h")).distinct()
+          .select(col("h"), pmod(col("h"), lit(Buckets)).as("hb"))
+          .withColumn("src_batch", lit(batchId)),
+          "hb", Buckets, s"$storeDir/batch_id=$batchId")))
     } finally ch.unpersist()
   }
 

@@ -149,12 +149,32 @@ object StreamingDedup {
     *    cache;
     *  - `probe` 3: the broadcast of the batch keys, the candidates' cache
     *    and their dbucket census;
-    *  - `flags` 6: three broadcasts, the best-match shuffle and the write;
-    *  - `docs` 2 and `keys` 2 (see [[StoreMaint.writeTree]]).
-    * That is 14 jobs for a batch that probes a store. A batch on an empty
-    * store skips `probe` and one broadcast of `flags`: 9 jobs. For a larger
+    *  - `flags` 5: three broadcasts (the batch keys of the within-batch
+    *    self-join, the store docs, and the batch payload, fetched once for
+    *    both pair kinds), the best-match shuffle and the write;
+    *  - `docs` 1 and `keys` 1 (a one-file tree, see
+    *    [[StoreMaint.writeTree]]).
+    * That is 11 jobs for a batch that probes a store. A batch on an empty
+    * store skips `probe` and one broadcast of `flags`: 7 jobs. For a larger
     * batch AQE may pick a shuffle join where these counts assume a
-    * broadcast.
+    * broadcast, and a tree of several files adds its shuffle job.
+    *
+    * Overlap. After the probe, the flags write and the store arm (docs,
+    * then keys) run at the same time ([[graft.operators.Par.both]]): each
+    * writes only its own `batch_id=N` directories, and the flags plan
+    * reads only store rows of earlier batches. Both arms read caches that
+    * the census and the probe filled before the fork, and neither persists
+    * nor unpersists anything; the caches are released after both arms
+    * have finished, and a failure of either is rethrown only then.
+    *
+    * Own-batch prune. The store reads carry the partition filter
+    * `batch_id =!= N`, which prunes that directory when the scan is
+    * planned. A replayed batch's store arm overwrites (first deletes)
+    * `batch_id=N` while its flags plan may still be scanning the store,
+    * and the store's file listing was taken before the fork: without the
+    * prune the scan would open the deleted files. Every row under
+    * `batch_id=N` has `src_batch = N`, which `src_batch < N` excludes
+    * anyway, so the prune changes no result.
     */
   def processBatch(batch: DataFrame, batchId: Long, storeDir: String,
       flagDir: String, numHashes: Int, bandCount: Int,
@@ -162,14 +182,13 @@ object StreamingDedup {
     val spark = batch.sparkSession
     def phase[T](name: String)(body: => T): T =
       StoreMaint.phase(spark, s"dedup batch $batchId: $name")(body)
+    def earlier(schema: StructType, dir: String) =
+      StoreMaint.earlierRows(spark.read.schema(schema).parquet(dir), batchId)
     // ONE cached frame per batch; the keys are a narrow explode of it
     val frame = batchFrame(batch, numHashes)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val keys = bandKeys(frame, numHashes, bandCount)
     val hashed = frame.select(col("doc_id"), col("sh"))
-    // the frame's shingles of the document in column `id`, as column `as`
-    def withPayload(df: DataFrame, id: String, as: String) =
-      df.join(hashed.select(col("doc_id").as(id), col("sh").as(as)), id)
     var candsCache: Option[DataFrame] = None
     try {
       // ONE narrow job answers all three pre-probe questions (empty?,
@@ -192,8 +211,7 @@ object StreamingDedup {
           // (src_batch survives compaction): a replayed batch must not
           // probe its own (failed) prior write, and a late replay issued
           // after later batches committed must not see them either
-          val storeKeys = spark.read.schema(KeysSchema).parquet(s"$storeDir/keys")
-            .filter(col("src_batch") < batchId)
+          val storeKeys = earlier(KeysSchema, s"$storeDir/keys")
             .filter(col("bucket").isin(touched: _*))
             .select(col("doc_id").as("dup_of"), col("band"), col("bk"))
           // broadcast the batch KEY PROJECTION (no shingle payload) so the
@@ -219,52 +237,63 @@ object StreamingDedup {
             cands.select(dbucketOf(col("dup_of")).as("db")), "db", StoreBuckets)
           if (nCands == 0) None
           else {
-            val storeDocs = spark.read.schema(DocsSchema).parquet(s"$storeDir/docs")
-              .filter(col("src_batch") < batchId)
+            val storeDocs = earlier(DocsSchema, s"$storeDir/docs")
               .filter(col("dbucket").isin(dbuckets: _*))
-              .select(col("doc_id").as("dup_of"), col("sh").as("sh_b"))
-            Some(withPayload(cands.join(storeDocs, "dup_of"), "doc_id", "sh"))
+              .select(col("doc_id").as("dup_of"), col("sh").as("sh_k"))
+            // the batch document's payload is fetched below
+            Some(cands.join(storeDocs, "dup_of")
+              .select(col("doc_id"), col("dup_of"), col("sh_k"),
+                col("doc_id").as("fid")))
           }
         } else None
       // within-batch: later id is the duplicate. A key self-join whose
       // streamed side is exploded from the frame with each document's
-      // shingles riding along, so only the dup_of side is joined back.
+      // shingles riding along, so only the dup_of side is fetched below.
       // No distinct, as for the store candidates
       val newKeys = keys.select(col("doc_id").as("dup_of"), col("band"),
         col("bk"))
-      val vsNew = withPayload(graft.operators.Dedup.bandKeysFromSig(
+      val vsNew = graft.operators.Dedup.bandKeysFromSig(
           frame.filter(col("sig").isNotNull)
             .select(struct(col("doc_id"), col("sh")).as("_doc"),
               col("sig").as("_sig")), "_doc", numHashes, bandCount)
         .join(newKeys, Seq("band", "bk"))
         .filter(col("_doc.doc_id") > col("dup_of"))
-        .select(col("_doc.doc_id").as("doc_id"), col("_doc.sh").as("sh"),
-          col("dup_of")), "dup_of", "sh_b")
-      val jac = size(array_intersect(col("sh"), col("sh_b"))).cast("double") /
-        size(array_union(col("sh"), col("sh_b")))
+        .select(col("_doc.doc_id").as("doc_id"), col("dup_of"),
+          col("_doc.sh").as("sh_k"), col("dup_of").as("fid"))
+      // both pair kinds carry one payload (`sh_k`) and miss that of a
+      // batch document (`fid`): ONE join with the batch frame fetches it,
+      // so the batch payload is broadcast once. Jaccard is symmetric, so
+      // which side is which does not matter
+      val jac = size(array_intersect(col("sh_k"), col("sh_f"))).cast("double") /
+        size(array_union(col("sh_k"), col("sh_f")))
       // best match per doc: max jaccard, ties to the smaller dup_of — kept
       // together as one struct so the reported pair is consistent
       val flagged = vsStore.fold(vsNew)(vsNew.unionByName(_))
+        .join(hashed.select(col("doc_id").as("fid"), col("sh").as("sh_f")), "fid")
         .withColumn("jaccard", jac)
         .filter(col("jaccard") >= threshold)
         .groupBy(col("doc_id"))
         .agg(max(struct(col("jaccard"), (-col("dup_of")).as("nd"))).as("_best"))
         .select(col("doc_id"), (-col("_best.nd")).as("dup_of"),
           col("_best.jaccard").as("jaccard"))
-      // whole-subdir overwrite per batch id: replay rewrites, never appends
-      // (and an empty flag batch still lands a schema'd file, so the flag
-      // dir is always readable)
-      phase("flags")(flagged.write.mode(SaveMode.Overwrite)
-        .parquet(s"$flagDir/batch_id=$batchId"))
-      // docs BEFORE keys: a posting is never visible without its payload,
-      // so a crash between the two writes leaves a store that replays
-      phase("docs")(StoreMaint.writeTree(hashed
-        .withColumn("dbucket", dbucketOf(col("doc_id")))
-        .withColumn("src_batch", lit(batchId)),
-        "dbucket", StoreBuckets, s"$storeDir/docs/batch_id=$batchId"))
-      phase("keys")(StoreMaint.writeTree(
-        keys.withColumn("src_batch", lit(batchId)),
-        "bucket", StoreBuckets, s"$storeDir/keys/batch_id=$batchId"))
+      // the flags write and the store arm overlap (see the scaladoc):
+      // whole-subdir overwrite per batch id, so a replay rewrites, never
+      // appends (and an empty flag batch still lands a schema'd file, so
+      // the flag dir is always readable)
+      graft.operators.Par.both(
+        phase("flags")(flagged.write.mode(SaveMode.Overwrite)
+          .parquet(s"$flagDir/batch_id=$batchId")), {
+        // docs BEFORE keys: a posting is never visible without its
+        // payload, so a crash between the two writes leaves a store that
+        // replays
+        phase("docs")(StoreMaint.writeTree(hashed
+          .withColumn("dbucket", dbucketOf(col("doc_id")))
+          .withColumn("src_batch", lit(batchId)),
+          "dbucket", StoreBuckets, s"$storeDir/docs/batch_id=$batchId"))
+        phase("keys")(StoreMaint.writeTree(
+          keys.withColumn("src_batch", lit(batchId)),
+          "bucket", StoreBuckets, s"$storeDir/keys/batch_id=$batchId"))
+      })
     } finally {
       candsCache.foreach(_.unpersist())
       frame.unpersist(): Unit
@@ -283,14 +312,16 @@ object StreamingDedup {
     * The rewrite is a write-to-side-dir + atomic swap; call it from a
     * maintenance point between batches (foreachBatch serializes batches,
     * so scheduling it there — see `autoCompactBatches` on [[start]] — is
-    * safe).
+    * safe). The two subtrees are compacted at the same time
+    * ([[graft.operators.Par.both]]), each with its own swap, which
+    * [[StoreMaint.exists]] finishes if a crash interrupts it.
     */
-  def compactStore(spark: SparkSession, storeDir: String): Unit = {
-    StoreMaint.phase(spark, "dedup compaction: keys")(
-      StoreMaint.compactTree(spark, s"$storeDir/keys", KeysSchema, "bucket",
-        StoreBuckets, Seq("doc_id", "band", "bk")))
-    StoreMaint.phase(spark, "dedup compaction: docs")(
-      StoreMaint.compactTree(spark, s"$storeDir/docs", DocsSchema, "dbucket",
-        StoreBuckets, Seq("doc_id", "sh")))
-  }
+  def compactStore(spark: SparkSession, storeDir: String): Unit =
+    graft.operators.Par.both(
+      StoreMaint.phase(spark, "dedup compaction: keys")(
+        StoreMaint.compactTree(spark, s"$storeDir/keys", KeysSchema, "bucket",
+          StoreBuckets, Seq("doc_id", "band", "bk"))),
+      StoreMaint.phase(spark, "dedup compaction: docs")(
+        StoreMaint.compactTree(spark, s"$storeDir/docs", DocsSchema, "dbucket",
+          StoreBuckets, Seq("doc_id", "sh")))): Unit
 }

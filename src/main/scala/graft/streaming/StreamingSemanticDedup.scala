@@ -89,10 +89,11 @@ object StreamingSemanticDedup {
       val store =
         if (StoreMaint.exists(spark, storeDir))
           // src_batch (not the batch_id dir) is the visibility key: it
-          // survives compaction, so late replays stay deterministic
-          Some(spark.read.schema(storeSchema(assigned.schema("emb").dataType))
-            .parquet(storeDir)
-            .filter(col("src_batch") < batchId)
+          // survives compaction, so late replays stay deterministic; the
+          // own-batch prune lets the flags overlap the store write
+          Some(StoreMaint.earlierRows(spark.read
+              .schema(storeSchema(assigned.schema("emb").dataType))
+              .parquet(storeDir), batchId)
             .drop("batch_id", "src_batch")
             .filter(col("bucket").isin(probedBuckets: _*)))
         else None
@@ -122,12 +123,14 @@ object StreamingSemanticDedup {
         .agg(max(struct(col("cos"), (-col("dup_of")).as("nd"))).as("_best"))
         .select(col("doc_id"), (-col("_best.nd")).as("dup_of"),
           col("_best.cos").as("cos"))
-      phase("flags")(flagged.write.mode(SaveMode.Overwrite)
-        .parquet(s"$flagDir/batch_id=$batchId"))
-      phase("store")(StoreMaint.writeTree(
-        assigned.select(col("doc_id"), col("bucket"), col("emb"), col("_n"))
-          .withColumn("src_batch", lit(batchId)),
-        "bucket", centroids.size, s"$storeDir/batch_id=$batchId"))
+      // the flags and the store write overlap, as in StreamingDedup
+      graft.operators.Par.both(
+        phase("flags")(flagged.write.mode(SaveMode.Overwrite)
+          .parquet(s"$flagDir/batch_id=$batchId")),
+        phase("store")(StoreMaint.writeTree(
+          assigned.select(col("doc_id"), col("bucket"), col("emb"), col("_n"))
+            .withColumn("src_batch", lit(batchId)),
+          "bucket", centroids.size, s"$storeDir/batch_id=$batchId")))
     } finally assigned.unpersist()
   }
 

@@ -1,20 +1,25 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.Assertions._
 
 /** Layout checks shared by the streaming-store specs: every `batch_id=`
   * tree is flat (no bucket directories), its files cover disjoint bucket
-  * ranges, and a probe's bucket `isin` reaches the Parquet reader as a
-  * pushed filter.
+  * ranges, a probe's bucket `isin` reaches the Parquet reader as a
+  * pushed filter, and a batch's own directory is pruned from its store
+  * scans.
   */
-object StoreLayout {
+object StoreLayout extends AdaptiveSparkPlanHelper {
 
   /** `tree` holds at least one but at most `spark.sql.shuffle.partitions`
     * parquet files, all at its top level (no bucket subdirectories).
@@ -89,5 +94,69 @@ object StoreLayout {
       want.groupBy(identity).view.mapValues(_.size).toMap,
       s"pruned read ${got.size} rows, filtered full read ${want.size} rows")
     got.size
+  }
+
+  /** The executed plans of the queries that `body` runs, on any thread.
+    * The listener keeps the plans between a start and an end marker
+    * query: a listener sees its events in the order they were posted, so
+    * a query that finished before the start marker (whose event may still
+    * be queued when the listener registers) is never kept, and once the
+    * end marker is seen, every plan of `body` is in.
+    */
+  def plansOf(spark: SparkSession)(body: => Unit): Seq[SparkPlan] = {
+    val token = s"plans_of_${System.nanoTime}"
+    val plans = new ConcurrentLinkedQueue[SparkPlan]
+    val endSeen = new CountDownLatch(1)
+    @volatile var keeping = false
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.analyzed.output.map(_.name) match {
+          case Seq(n) if n == s"${token}_start" => keeping = true
+          case Seq(n) if n == s"${token}_end" =>
+            keeping = false; endSeen.countDown()
+          case _ => if (keeping) plans.add(qe.executedPlan): Unit
+        }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def marker(tag: String): Unit =
+      spark.range(1).select(lit(1).as(s"${token}_$tag")).collect(): Unit
+    spark.listenerManager.register(listener)
+    try {
+      marker("start")
+      body
+      marker("end")
+      assert(endSeen.await(30, TimeUnit.SECONDS), "end marker query never seen")
+    } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
+  }
+
+  /** The file scans of `plan`: through adaptive stages, subqueries and
+    * the plans of the cached relations it reads.
+    */
+  private def fileScans(plan: SparkPlan): Seq[FileSourceScanExec] =
+    collectWithSubqueries(plan) {
+      case s: FileSourceScanExec => Seq(s)
+      case m: InMemoryTableScanExec => fileScans(m.relation.cachedPlan)
+    }.flatten
+
+  /** Every scan of the store tree `tree` in `plans` prunes the directory
+    * `batch_id=<batchId>` when it is planned: the scan's partition
+    * filters, applied to the file listing it was planned from, keep none
+    * of that directory's files, so none is opened. Returns the number of
+    * scans whose listing held such files (a replay's scans do).
+    */
+  def assertOwnBatchPruned(plans: Seq[SparkPlan], tree: String,
+      batchId: Long): Int = {
+    val own = s"/batch_id=$batchId/"
+    val scans = plans.flatMap(fileScans).filter(
+      _.relation.location.rootPaths.exists(_.toUri.getPath == tree))
+    def listed(s: FileSourceScanExec, pruned: Boolean) =
+      s.relation.location.listFiles(if (pruned) s.partitionFilters else Nil, Nil)
+        .flatMap(_.files).map(_.getPath.toString).filter(_.contains(own))
+    scans.foreach { s =>
+      assert(listed(s, pruned = true).isEmpty,
+        s"$tree scanned without the batch_id=$batchId prune: ${s.partitionFilters}")
+    }
+    scans.count(listed(_, pruned = false).nonEmpty)
   }
 }

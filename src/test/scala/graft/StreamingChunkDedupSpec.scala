@@ -102,6 +102,30 @@ class StreamingChunkDedupSpec extends AnyFunSuite {
     assert(rep(2L)._2 == 0L, s"replay must not self-flag: ${rep(2L)}")
   }
 
+  test("replays of an overlapped probing batch never read its own store directory") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("chunkdedup_overlap").toString
+    val (store, flags) = (s"$dir/store", s"$dir/flags")
+    val text = "a paragraph long enough to cut into several content " +
+      "defined chunks for the overlapped replay check " * 3
+    def probing() = StreamingChunkDedup.processBatch(
+      Seq((3L, text)).toDF("doc_id", "text"), 1L, store, flags)
+    def state() = (spark.read.parquet(flags).collect().toSet,
+      spark.read.parquet(store).collect().toSet)
+    StreamingChunkDedup.processBatch(Seq((1L, text)).toDF("doc_id", "text"),
+      0L, store, flags)
+    probing()
+    val once = state()
+    val rep = once._1.map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    assert(rep(3L)._2 == rep(3L)._1, s"doc 3 fully duplicated: ${rep(3L)}")
+    for (i <- 1 to 4) {
+      val plans = StoreLayout.plansOf(spark)(probing())
+      assert(StoreLayout.assertOwnBatchPruned(plans, store, 1L) > 0,
+        s"replay $i: no store scan listed batch_id=1")
+      assert(state() == once, s"replay $i changed the report or the store")
+    }
+  }
+
   test("compaction preserves src_batch visibility and the store prunes by hb") {
     import spark.implicits._
     val dir = Files.createTempDirectory("chunkdedup4").toString

@@ -276,7 +276,10 @@ class StreamingDedupSpec extends AnyFunSuite {
     val compaction = jobsOf(StreamingDedup.compactStore(spark, store))
     val counts = Seq(emptyStore, probing, compaction).map(_.size)
     info(s"jobs: empty store, probing, compaction: $counts")
-    assert(counts(0) <= 9 && counts(1) <= 14 && counts(2) <= 6,
+    for (jobs <- Seq(emptyStore, probing, compaction))
+      info(jobs.groupBy(identity).toSeq.sortBy(_._1)
+        .map { case (d, js) => s"$d ${js.size}" }.mkString(", "))
+    assert(counts(0) <= 7 && counts(1) <= 11 && counts(2) <= 4,
       s"jobs: empty store, probing, compaction: $counts")
     // every job is named by its phase
     assert(probing.toSet == Seq("census", "probe", "flags", "docs", "keys")
@@ -288,6 +291,79 @@ class StreamingDedupSpec extends AnyFunSuite {
     val got = spark.read.parquet(flags)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == Set((3L, 1L), (5L, 4L)), got.toString)
+  }
+
+  test("a one-file store tree is written in one job, a split tree in two") {
+    import org.apache.spark.sql.functions._
+    val base = Files.createTempDirectory("graft_tree_jobs").toString
+    val rows = spark.range(0, 500).select(col("id").as("doc_id"),
+      pmod(xxhash64(col("id")), lit(StreamingDedup.StoreBuckets.toLong)).as("bucket"))
+    def write(dir: String) = JobCensus.jobsOf(spark)(graft.streaming.StoreMaint.writeTree(
+      rows, "bucket", StreamingDedup.StoreBuckets, s"$base/$dir"))
+    val one = write("one")
+    val split = StoreLayout.withSmallFiles(spark)(write("split"))
+    assert(one.size == 1 && split.size == 2, s"jobs: one file $one, split $split")
+    assert(StoreLayout.assertDisjointRanges(spark, s"$base/one", "bucket").size == 1)
+    assert(StoreLayout.assertDisjointRanges(spark, s"$base/split", "bucket").size > 1)
+    for (dir <- Seq("one", "split"))
+      assert(spark.read.parquet(s"$base/$dir").count() == 500, dir)
+  }
+
+  test("replays of an overlapped probing batch never read its own store directory") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_overlap_replay").toString
+    val (store, flags) = (base + "/store", base + "/flags")
+    def batch(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+    def probing() =
+      StreamingDedup.processBatch(batch((3L, aDup)), 1L, store, flags, 64, 16, 0.5)
+    def state() = (spark.read.parquet(flags).collect().toSet,
+      spark.read.parquet(store + "/keys").collect().toSet,
+      spark.read.parquet(store + "/docs").collect().toSet)
+    StreamingDedup.processBatch(batch((1L, a)), 0L, store, flags, 64, 16, 0.5)
+    probing()
+    val once = state()
+    assert(once._1.map(r => (r.getLong(0), r.getLong(1))) == Set((3L, 1L)))
+    // each replay's flags plan scans the store while its store arm
+    // overwrites batch_id=1, whose files were listed before the fork
+    for (i <- 1 to 4) {
+      val plans = StoreLayout.plansOf(spark)(probing())
+      for (sub <- Seq("keys", "docs"))
+        assert(StoreLayout.assertOwnBatchPruned(plans, s"$store/$sub", 1L) > 0,
+          s"replay $i: no $sub scan listed batch_id=1")
+      assert(state() == once, s"replay $i changed the flags or the store")
+    }
+  }
+
+  test("a failed flags write is rethrown after the store arm, and a replay recovers") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_arm_failure").toString
+    def batch(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+    def run(dir: String, flags: String) = {
+      StreamingDedup.processBatch(batch((1L, a), (2L, b)), 0L, s"$dir/store",
+        s"$dir/flags", 64, 16, 0.5)
+      StreamingDedup.processBatch(batch((3L, aDup), (4L, c), (5L, c)), 1L,
+        s"$dir/store", flags, 64, 16, 0.5)
+    }
+    def state(dir: String) = Seq("flags", "store/keys", "store/docs")
+      .map(sub => spark.read.parquet(s"$dir/$sub").collect().toSet)
+    run(s"$base/clean", s"$base/clean/flags")
+    val sc = spark.sparkContext
+    val cached = sc.getPersistentRDDs.keySet
+    // a flag dir on a filesystem nobody registered: the flags arm fails
+    // at once, while the store arm still has both trees to write
+    val err = intercept[Exception](run(s"$base/failed", "nosuchfs://nowhere/flags"))
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("nosuchfs")), err.toString)
+    // rethrown only once the store arm finished: both trees committed,
+    // no job still running, and nothing left cached
+    for (sub <- Seq("docs", "keys"))
+      assert(new java.io.File(s"$base/failed/store/$sub/batch_id=1/_SUCCESS").exists, sub)
+    assert(sc.statusTracker.getActiveJobIds().isEmpty)
+    assert(sc.getPersistentRDDs.keySet.subsetOf(cached), sc.getPersistentRDDs)
+    // the at-least-once replay into a valid flag dir is a clean run
+    StreamingDedup.processBatch(batch((3L, aDup), (4L, c), (5L, c)), 1L,
+      s"$base/failed/store", s"$base/failed/flags", 64, 16, 0.5)
+    assert(state(s"$base/failed") == state(s"$base/clean"))
   }
 
   test("a batch that repeats a doc_id flags and stores as the unrepeated batch") {

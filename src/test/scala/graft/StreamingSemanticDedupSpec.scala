@@ -97,6 +97,28 @@ class StreamingSemanticDedupSpec extends AnyFunSuite {
     assert(flags2.contains((20L, 1L)), flags2.toString)
   }
 
+  test("replays of an overlapped probing batch never read its own store directory") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_semdedup_overlap").toString
+    val (store, flags) = (s"$base/store", s"$base/flags")
+    def batch(rows: (Long, Array[Float])*) = rows.toDF("doc_id", "emb")
+    def probing() = StreamingSemanticDedup.processBatch(batch((3L, aDup)), 1L,
+      cents, store, flags, 0.98, 2)
+    def state() = (spark.read.parquet(flags).collect().toSet,
+      spark.read.parquet(store).drop("emb").collect().toSet)
+    StreamingSemanticDedup.processBatch(batch((1L, a), (2L, b)), 0L, cents,
+      store, flags, 0.98, 2)
+    probing()
+    val once = state()
+    assert(once._1.map(r => (r.getLong(0), r.getLong(1))) == Set((3L, 1L)))
+    for (i <- 1 to 4) {
+      val plans = StoreLayout.plansOf(spark)(probing())
+      assert(StoreLayout.assertOwnBatchPruned(plans, store, 1L) > 0,
+        s"replay $i: no store scan listed batch_id=1")
+      assert(state() == once, s"replay $i changed the flags or the store")
+    }
+  }
+
   test("per-batch and compacted trees cover disjoint bucket ranges") {
     import spark.implicits._
     val base = Files.createTempDirectory("graft_semdedup_ranges").toString
